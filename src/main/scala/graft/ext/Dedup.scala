@@ -1,8 +1,10 @@
 package graft.ext
 
+import org.apache.spark.HashPartitioner
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
 
 /** Deduplication operators for LLM-pipeline curation.
   *
@@ -551,106 +553,88 @@ object Dedup {
     * Iterative min-label propagation WITH POINTER JUMPING: each round
     * every vertex (1) hooks — takes the min of its own label and its
     * neighbors' labels — then (2) jumps — replaces its label with its
-    * label's own label (path compression). Both steps are one
-    * distributed join each; the driver loop carries CONTROL only (a
-    * convergence scalar), never rows. Jumping halves label-tree depth
-    * every round, so even an adversarial CHAIN graph converges in
+    * label's own label (path compression). Jumping halves label-tree
+    * depth every round, so even an adversarial CHAIN graph converges in
     * O(log diameter) rounds (the same round-complexity class as
-    * large-star/small-star) while shallow near-dup clusters still
-    * finish in 2-3. Correctness is unchanged by jumping: a label is
-    * always the id of a node in the same component, labels decrease
-    * monotonically, and a fixpoint of the hook step forces equal labels
-    * across every edge — so the decimal-summed label total is a
-    * correct, join-free convergence test (sum unchanged means no label
-    * moved in either step that round).
-    * Each round is materialized through [[Materialize]],
-    * which cuts the growing lineage with a RELIABLE checkpoint when the
-    * session has a checkpoint dir configured (the cluster contract —
-    * survives executor loss mid-iteration) and an executor-local
-    * checkpoint otherwise (local runs).
+    * large-star/small-star) while shallow near-dup clusters finish in
+    * 1-2. Labels start at min(self, neighbors) — the first hook, free on
+    * the adjacency. Correctness is unchanged by jumping: a label is
+    * always the id of a node in the same component and never exceeds
+    * its vertex, labels only decrease, and a round that moves no label
+    * is a fixpoint of the hook step, which forces equal labels across
+    * every edge — so "no label changed" is the convergence test.
+    *
+    * Execution: ONE Spark action per round. The symmetric adjacency
+    * (v, nbrs) and the labels (v, label) live as RDDs co-partitioned
+    * under one HashPartitioner, so the hook is a narrow join, a
+    * map-side-combined reduceByKey(min) and nothing else; the jump is
+    * one join keyed on the label; the count of changed labels is a
+    * narrow join of the new labels against the old, and that count is
+    * the action that materializes the round. A DataFrame formulation
+    * pays a Catalyst re-plan plus one job per AQE stage every round.
+    * The reducer count is sized from the materialized input edge count
+    * (~1M edges per reducer, at most the session's shuffle partitions)
+    * without touching the session conf, which a concurrent query on the
+    * shared session would otherwise inherit. Every round's labels (and
+    * the adjacency) are fenced through [[Materialize.rdd]]: a RELIABLE
+    * checkpoint when the session has a checkpoint dir configured (the
+    * cluster contract — survives executor loss mid-iteration) and an
+    * executor-local checkpoint otherwise (local runs).
+    *
+    * Ids must be integral; `doc_id` and `cluster_id` keep the input id
+    * type (the wider of the two columns). Pairs with a null endpoint
+    * are dropped — a null is no vertex.
     *
     * Output: (doc_id, cluster_id) for every vertex in the pair graph.
     */
   def components(pairs: DataFrame, aCol: String = "a_id", bCol: String = "b_id",
       maxRounds: Int = 50): DataFrame = {
-    val edges = pairs.select(col(aCol).as("src"), col(bCol).as("dst"))
-      .union(pairs.select(col(bCol).as("src"), col(aCol).as("dst")))
-      .distinct()
-    // the loop-sizing edge count rides the fence's materializing action
-    val (matEdges, nMatEdges) = Materialize.withCount(edges)
-    // The iteration frames are edge-bounded and usually MINUSCULE next
-    // to the corpus that produced the pairs (candidate pairs, not
-    // documents). Size the loop's reducer count from the materialized
-    // edge count instead of inheriting the corpus-scale session setting:
-    // at ~1M edges per reducer the big-graph case keeps full
-    // parallelism, while the common small-graph case stops paying
-    // dozens of near-empty shuffle tasks per round (each round runs
-    // several jobs, so fixed task overhead multiplies).
     val sess = pairs.sparkSession
+    import sess.implicits._
+    val idType = pairs.select(col(aCol)).union(pairs.select(col(bCol))).schema.head.dataType
+    require(Seq(ByteType, ShortType, IntegerType, LongType).contains(idType),
+      s"components needs integral vertex ids, got $idType")
+    // the loop-sizing edge count rides the fence's materializing action
+    val edges = Materialize.rdd(pairs
+      .where(col(aCol).isNotNull && col(bCol).isNotNull)
+      .select(col(aCol).cast("long").as("a"), col(bCol).cast("long").as("b"))
+      .as[(Long, Long)].rdd)
+    val nEdges = edges.count()
     val sessionParts = sess.conf.get("spark.sql.shuffle.partitions").toInt
-    val loopParts = math.max(2, math.min(sessionParts,
-      (nMatEdges / 1000000L).toInt + 2))
-    // The loop's parallelism is expressed PER FRAME (explicit
-    // repartition on each join/agg key at loopParts) rather than by
-    // flipping spark.sql.shuffle.partitions for the loop's duration:
-    // a session-conf mutation would silently leak the tiny reducer
-    // count into any query running CONCURRENTLY on the same shared
-    // SparkSession — exactly the multi-tenant service shape this
-    // engine targets. An explicit hashpartitioning(key, loopParts)
-    // also already satisfies the join/agg's required distribution, so
-    // Catalyst inserts no second exchange: same shuffle count as the
-    // conf approach, zero session-global state.
-    def byKey(df: DataFrame, c: String): DataFrame =
-      df.repartition(loopParts, col(c))
-    // the edge frame is STATIC across rounds but was re-exchanged to
-    // loopParts by dst inside every round — hoist that one exchange out
-    // of the loop (a 100 TB run pays it once instead of once per round)
-    val edgesByDst = Materialize(byKey(matEdges, "dst"))
-    // every labels fence is LAZY: the convergence probe (labelTotal's
-    // collect) is the action that materializes it, so each round pays
-    // one label-frame job, not fence + probe (guide §5 — the per-round
-    // driver round-trips were pure serial latency at high round counts)
-    var labels = Materialize.lazyFence(
-      byKey(matEdges.select(col("src").as("id")), "id")
-        .distinct()
-        .select(col("id"), col("id").as("label")))
-    def labelTotal(l: DataFrame): java.math.BigDecimal = {
-      val v = l.agg(sum(col("label").cast("decimal(38,0)"))).collect()(0).getDecimal(0)
-      if (v == null) java.math.BigDecimal.ZERO else v // null = empty graph
-    }
-    var prevTotal = labelTotal(labels)
+    val part = new HashPartitioner(math.max(2, math.min(sessionParts,
+      (2 * nEdges / 1000000L).toInt + 2)))
+    val adj = Materialize.rdd(edges
+      .flatMap { case (a, b) => Iterator((a, b), (b, a)) }
+      .groupByKey(part)
+      .mapValues(_.toArray.distinct))
+    var labels = adj.mapPartitions(_.map { case (v, nbrs) => (v, math.min(v, nbrs.min)) },
+      preservesPartitioning = true)
+    var changed = nEdges // an empty graph has converged before any round
     var round = 0
-    var converged = prevTotal.signum == 0 && labels.isEmpty // empty graph: done
-    while (!converged && round < maxRounds) {
-      val nbrMin = edgesByDst.join(byKey(labels, "id"),
-          col("dst") === col("id"))
-        .select(col("src"), col("label"))
-        .repartition(loopParts, col("src"))
-        .groupBy(col("src").as("nid")).agg(min(col("label")).as("nbr_min"))
-      val hooked = Materialize(
-        byKey(labels, "id").join(nbrMin, labels("id") === col("nid"), "left")
-          .select(col("id"),
-            least(col("label"), coalesce(col("nbr_min"), col("label"))).as("label")))
-      // pointer jumping: follow the label one hop (label := label's
-      // label). Every label is a vertex id present in `hooked`, so the
-      // left join only misses when the label is already a root.
-      labels = Materialize.lazyFence(
-        hooked.repartition(loopParts, col("label")).as("x").join(
-            byKey(hooked.select(col("id").as("jid"), col("label").as("jlabel")), "jid").as("j"),
-            col("x.label") === col("j.jid"), "left")
-          .select(col("x.id").as("id"),
-            coalesce(col("j.jlabel"), col("x.label")).as("label")))
-      val total = labelTotal(labels)
-      converged = total.compareTo(prevTotal) == 0
-      prevTotal = total
+    while (changed > 0 && round < maxRounds) {
+      val hooked = adj.join(labels, part)
+        .flatMap { case (v, (nbrs, l)) => Iterator.single((v, l)) ++ nbrs.iterator.map((_, l)) }
+        .reduceByKey(part, math.min(_, _))
+      // pointer jumping: label := label's label. Every label is a vertex
+      // id, so the left join only misses if that invariant breaks.
+      val jumped = hooked.map(_.swap).leftOuterJoin(hooked, part)
+        .map { case (l, (v, ll)) => (v, ll.getOrElse(l)) }
+      val next = Materialize.rdd(jumped.partitionBy(part))
+      changed = next.join(labels, part).filter { case (_, (n, o)) => n != o }.count()
+      labels.unpersist(blocking = false)
+      labels = next
       round += 1
     }
+    // once a round ran, the labels are materialized and cut from both
+    // fences (an empty graph's output is still computed from them)
+    if (round > 0) { edges.unpersist(blocking = false); adj.unpersist(blocking = false) }
     // partially-propagated labels are silently WRONG cluster ids — a
     // component with diameter > maxRounds must fail loud, not mislabel
-    if (!converged) throw new IllegalStateException(
+    if (changed > 0) throw new IllegalStateException(
       s"components did not converge in $maxRounds rounds — raise maxRounds " +
         "(component diameter exceeds it) or switch to large-star/small-star")
-    labels.select(col("id").as("doc_id"), col("label").as("cluster_id"))
+    labels.toDF("doc_id", "cluster_id")
+      .select(col("doc_id").cast(idType), col("cluster_id").cast(idType))
   }
 
   /** Duplicate-SPAN detection (ExactSubstr-style): for every document

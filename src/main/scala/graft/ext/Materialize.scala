@@ -1,6 +1,8 @@
 package graft.ext
 
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.storage.StorageLevel
 
 /** Fault-tolerance-aware materialization fence for iterative operators
   * (connected components, fuzzy-join candidate staging).
@@ -22,7 +24,8 @@ import org.apache.spark.sql.DataFrame
   * checkpoint directory configured (`SparkContext.setCheckpointDir`,
   * the cluster deployment contract) and falls back to localCheckpoint
   * otherwise, so the same operator code is durable on a cluster and
-  * fast in local tests.
+  * fast in local tests. [[rdd]] applies the same choice to RDD-level
+  * loops.
   */
 object Materialize {
   def apply(df: DataFrame): DataFrame =
@@ -46,7 +49,7 @@ object Materialize {
     * instead of running an eager job of its own. Contract: the caller
     * must run an action on the returned frame IMMEDIATELY (before
     * building further lineage on it) — the iterative-loop probe shape
-    * (components' label-sum convergence test), where the probe action
+    * (a per-round convergence count), where the probe action
     * itself forces the checkpoint and the following round then consumes
     * materialized blocks exactly as with [[apply]]. Durability matches
     * [[apply]] (reliable under a configured dir, local otherwise). */
@@ -54,4 +57,17 @@ object Materialize {
     if (df.sparkSession.sparkContext.getCheckpointDir.isDefined)
       df.checkpoint(eager = false)
     else df.localCheckpoint(eager = false)
+
+  /** [[lazyFence]] for an RDD: marks `r` for a reliable checkpoint when
+    * a checkpoint dir is configured, a local one otherwise, and returns
+    * it. Same contract: the caller's next action materializes it. The
+    * reliable branch also persists, so the checkpoint write after that
+    * action reads the cached blocks instead of recomputing the lineage. */
+  def rdd[T](r: RDD[T]): RDD[T] = {
+    if (r.sparkContext.getCheckpointDir.isDefined) {
+      r.persist(StorageLevel.MEMORY_AND_DISK)
+      r.checkpoint()
+    } else r.localCheckpoint()
+    r
+  }
 }

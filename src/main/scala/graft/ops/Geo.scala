@@ -226,9 +226,10 @@ object Geo {
     * dense-cell graph is aggregate-sized, its edges come from the same
     * 3×3 Expand + equi-join as [[gridRadiusJoin]], and components run
     * pointer-jumping in O(log diameter) rounds
-    * ([[graft.ext.Dedup.components]] — per-frame reducer sizing,
-    * reliable checkpoints). Output: (cell_lat, cell_lon, n, cluster_id),
-    * isolated dense cells as their own singleton cluster. */
+    * ([[graft.ext.Dedup.components]] — one action per round,
+    * edge-count-sized reducers, reliable checkpoints). Output:
+    * (cell_lat, cell_lon, n, cluster_id), isolated dense cells as their
+    * own singleton cluster. */
   def dbscanCells(points: DataFrame, latCol: String, lonCol: String,
       cellMicro: Long, minPts: Long): DataFrame =
     dbscanFromCells(cellCounts(points, latCol, lonCol, cellMicro), minPts)

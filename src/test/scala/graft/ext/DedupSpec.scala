@@ -224,6 +224,62 @@ class DedupSpec extends SparkTestBase {
       s"session $key changed mid-loop: saw $observed")
   }
 
+  test("components: integer ids keep their type in doc_id and cluster_id") {
+    import spark.implicits._
+    val pairs = Seq((2, 1), (2, 3), (10, 11), (12, 11)).toDF("a_id", "b_id")
+    val out = Dedup.components(pairs)
+    assert(out.schema.simpleString === "struct<doc_id:int,cluster_id:int>")
+    assert(out.as[(Int, Int)].collect().toMap ===
+      Map(1 -> 1, 2 -> 1, 3 -> 1, 10 -> 10, 11 -> 10, 12 -> 10))
+  }
+
+  test("components: pairs with a null endpoint are dropped") {
+    import spark.implicits._
+    val pairs = Seq[(Option[Long], Option[Long])](
+      (Some(1L), Some(2L)), (None, Some(3L)), (Some(3L), Some(4L))).toDF("a_id", "b_id")
+    val got = Dedup.components(pairs).collect()
+    assert(got.forall(r => !r.isNullAt(0) && !r.isNullAt(1)), got.mkString(","))
+    assert(got.map(r => r.getLong(0) -> r.getLong(1)).toMap ===
+      Map(1L -> 1L, 2L -> 1L, 3L -> 3L, 4L -> 3L))
+  }
+
+  test("components: one Spark job per round (job-count guard)") {
+    import spark.implicits._
+    val pairs = Seq((2L, 1L), (2L, 3L), (10L, 11L), (12L, 11L)).toDF("a_id", "b_id")
+    val sc = spark.sparkContext
+    val tag = "graft.test.componentsJobs"
+    val jobs = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val marker = new java.util.concurrent.CountDownLatch(1)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty(tag))).foreach {
+          case "components" => jobs.add(e.jobId)
+          case "marker" => marker.countDown()
+          case _ =>
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setLocalProperty(tag, "components")
+      // maxRounds bounds the rounds; the graph needs 2 (one hook, one
+      // confirming round)
+      val maxRounds = 3
+      val got = Dedup.components(pairs, maxRounds = maxRounds).as[(Long, Long)].collect()
+      assert(got.length === 6)
+      // the listener bus is asynchronous but ordered: once a later
+      // job's start is seen, every components job has been counted
+      sc.setLocalProperty(tag, "marker")
+      sc.parallelize(Seq(1), 1).count()
+      assert(marker.await(60, java.util.concurrent.TimeUnit.SECONDS))
+      // edge count + one action per round + the caller's collect; a
+      // DataFrame round costs ~10 jobs (one per AQE stage) instead
+      assert(jobs.size <= maxRounds + 3, s"${jobs.size} jobs")
+    } finally {
+      sc.setLocalProperty(tag, null)
+      sc.removeSparkListener(listener)
+    }
+  }
+
   test("determinism: same input, same signatures across runs") {
     val r1 = Dedup.minhash(docs, threshold = 0.5).collect().toSet
     val r2 = Dedup.minhash(docs, threshold = 0.5).collect().toSet
