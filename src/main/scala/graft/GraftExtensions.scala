@@ -385,9 +385,9 @@ object GraftExtensions {
       out.queryExecution.logical
     }),
     //   graft_ks_drift(ref_view, cur_view, value_col)
-    // Exact two-sample KS drift — same range-partitioned CDF plan as
-    // DataQuality.ksDrift (per-partition offset totals collected at
-    // analysis time).
+    // Exact two-sample KS drift — the SQL face of DataQuality.ksDrift
+    // (the Relational.cumBeforeByKey cumulative; its control-plane
+    // totals are collected at analysis time).
     ("graft_ks_drift", 3, args => {
       val spark = org.apache.spark.sql.SparkSession.active
       val out = graft.ops.DataQuality.ksDrift(
@@ -414,8 +414,8 @@ object GraftExtensions {
     }),
     //   graft_w1_drift(ref_view, cur_view, value_col, scale)
     // Exact-integer Wasserstein-1 drift — the SQL face of
-    // DataQuality.w1Drift (same range-partitioned cumulative plan with
-    // control-plane offsets and gap boundaries).
+    // DataQuality.w1Drift (the Relational.cumBeforeByKey cumulative and
+    // its predecessor key; totals collected at analysis time).
     ("graft_w1_drift", 4, args => {
       val spark = org.apache.spark.sql.SparkSession.active
       val out = graft.ops.DataQuality.w1Drift(
@@ -427,8 +427,8 @@ object GraftExtensions {
     }),
     //   graft_roc_auc(scored_view, score_col, label_col)
     // Exact rank-based ROC-AUC — the SQL face of DataQuality.rocAuc
-    // (same range-partitioned cumulative plan with control-plane
-    // offsets; per-partition totals collected at analysis time).
+    // (the Relational.cumBeforeByKey cumulative; totals collected at
+    // analysis time).
     ("graft_roc_auc", 3, args => {
       val spark = org.apache.spark.sql.SparkSession.active
       val out = graft.ops.DataQuality.rocAuc(

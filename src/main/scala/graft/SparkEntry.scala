@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import graft.etl._
 import graft.ext.{Curation, Dedup, Embeddings, Events, Similarity, TextAnalysis}
 import graft.ops.Relational
+import graft.streaming.StreamingOps.concurrently
 
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
   *
@@ -1446,7 +1447,7 @@ object SparkEntry {
       // three INDEPENDENT state sinks (ranks/static read their fenced
       // frames, deg re-aggregates off the fenced edge list): concurrent
       // jobs, not three serial driver round-trips
-      parWrite(
+      concurrently(
         () => graft.etl.Sinks.parquetDir(ranks, stateDir + "/ranks"),
         () => graft.etl.Sinks.parquetDir(static0, stateDir + "/static"),
         () => graft.etl.Sinks.parquetDir(deg, stateDir + "/deg"))
@@ -5081,7 +5082,7 @@ object SparkEntry {
       val itemDir = scratchDir("graft_cooccur_items_").toString
       // hp and hi both re-execute the history distinct-baskets frame;
       // concurrent writes overlap the twin computations (wall = max)
-      parWrite(
+      concurrently(
         () => graft.etl.Sinks.parquetDir(hp, pairDir),
         () => graft.etl.Sinks.parquetDir(hi, itemDir))
       val (dp, di) = graft.ops.Relational.cooccurCounts(delta, "l_orderkey", "l_partkey")
@@ -5858,17 +5859,6 @@ object SparkEntry {
     body(iso)
   }
 
-  /** Run INDEPENDENT state writes as concurrent jobs on the shared
-    * scheduler (guide §5 — independent actions overlap; wall time is
-    * the max, not the sum). Only for writes with no dataflow between
-    * them; failures propagate like the serial form. */
-  private def parWrite(writes: (() => Unit)*): Unit = {
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    import scala.concurrent.ExecutionContext.Implicits.global
-    writes.map(w => Future(w())).foreach(Await.result(_, Duration.Inf))
-  }
-
   /** Concurrent mod-filtered tile staging: each index writes ONE
     * independent single-file tile (own scratch dir, distinct dest
     * name), and every gate these tiles feed folds a commutative monoid
@@ -5877,7 +5867,7 @@ object SparkEntry {
     * the tiles stage concurrently and the wall cost of the N source
     * re-scans is the max, not the sum. */
   private def parForeach(r: Range)(body: Int => Unit): Unit =
-    parWrite(r.map(g => () => body(g)): _*)
+    concurrently(r.map(g => () => body(g)): _*)
 
   /** NTILE(`parts`) OVER (ORDER BY sortCols) with no single-partition
     * window: the global-window ntile the replay stagers used funneled
@@ -5962,7 +5952,7 @@ object SparkEntry {
     // explicit function of `pos` — not of when the write lands — so the
     // replay sequence the mtimes pin is identical under concurrent
     // writes; wall cost is the max tile, not the sum (guide §2.6)
-    parWrite(replayOrder.zipWithIndex.map { case (tile, pos) => () => {
+    concurrently(replayOrder.zipWithIndex.map { case (tile, pos) => () => {
       val stage = scratchDir("graft_stage_")
       tiled.filter(col("__tile") === tile).drop("__tile")
         .coalesce(1).write.mode("overwrite").parquet(stage.toString)

@@ -13,20 +13,18 @@ import org.apache.spark.sql.functions._
 object Features {
 
   /** Range-partitioned cumulative over a (value, __cnt) histogram —
-    * the ksFromCounts/conformalFromHistogram discipline shared by the
-    * quantile family: range-repartition the cells on the value, collect
-    * ONLY the numPartitions per-partition subtotals (control plane),
-    * and stitch partition-LOCAL cumulative windows to the broadcast
-    * offsets. No empty-partitionSpec WindowExec anywhere, so a
-    * continuous column whose distinct values grow toward row count
-    * never funnels the histogram through one reducer.
+    * [[graft.ops.Relational.cumBeforeByKey]] under the quantile
+    * family's column names. No empty-partitionSpec WindowExec
+    * anywhere, so a continuous column whose distinct values grow
+    * toward row count never funnels the histogram through one
+    * reducer.
     *
     * Output: histogram columns + `__cum` (rows with a STRICTLY smaller
     * value) + `__n` (total non-null mass, a literal). Runs one
     * control-plane action at build time (the conformal precedent). */
   private def cumBeforeByValue(hist: DataFrame, valueCol: String,
       cntCol: String): DataFrame =
-    graft.ops.Relational.cumBeforeByKey(hist, valueCol, Seq(cntCol))
+    graft.ops.Relational.cumBeforeByKey(hist, valueCol, Seq(cntCol))._1
       .withColumnRenamed(s"__cumb_$cntCol", "__cum")
       .withColumnRenamed(s"__tot_$cntCol", "__n")
 

@@ -614,13 +614,13 @@ object DataQuality {
     * decimal→long cast, never a silent wrap).
     *
     * Scale shape: the naive cumulative (`SUM OVER (ORDER BY v)`) is a
-    * single-reducer window — the classic cliff. This uses the
-    * globalRowNumber pattern: per-value counts range-partition on the
-    * value, each partition computes partition-local cumulative sums in
-    * parallel, and only the per-partition totals (2·numPartitions
-    * longs) travel to the driver to become broadcast offsets. */
-  def ksDrift(ref: DataFrame, cur: DataFrame, valueCol: String,
-      numPartitions: Int = 0): DataFrame = {
+    * single-reducer window — the classic cliff. The per-value counts
+    * ride [[Relational.cumBeforeByKey]] instead: range-partitioned on
+    * the value, partition-local cumulative windows in parallel, and
+    * only per-partition subtotals travel to the driver as broadcast
+    * offsets; the gap at v uses the cumulative including v,
+    * cumb + c. */
+  def ksDrift(ref: DataFrame, cur: DataFrame, valueCol: String): DataFrame = {
     val v = col(valueCol).cast("double")
     val both = ref.filter(col(valueCol).isNotNull)
       .select(v.as("v"), lit(1L).as("one_ref"), lit(0L).as("one_cur"))
@@ -628,7 +628,7 @@ object DataQuality {
         .select(v.as("v"), lit(0L).as("one_ref"), lit(1L).as("one_cur")))
     val counts = both.groupBy("v")
       .agg(sum("one_ref").as("c_ref"), sum("one_cur").as("c_cur"))
-    ksFromCounts(counts, numPartitions)
+    ksFromCounts(counts)
   }
 
   /** Exact mergeable KS state: per-value counts (v, c) — counts are
@@ -649,51 +649,26 @@ object DataQuality {
     * rows again. Same exact integer statistic and range-partitioned
     * cumulative plan as [[ksDrift]] (states merge by summed counts;
     * the result is bit-identical to the full recompute). */
-  def ksFromState(refState: DataFrame, curState: DataFrame,
-      numPartitions: Int = 0): DataFrame = {
+  def ksFromState(refState: DataFrame, curState: DataFrame): DataFrame = {
     val counts = refState
       .select(col("v"), col("c").as("one_ref"), lit(0L).as("one_cur"))
       .unionByName(curState
         .select(col("v"), lit(0L).as("one_ref"), col("c").as("one_cur")))
       .groupBy("v")
       .agg(sum("one_ref").as("c_ref"), sum("one_cur").as("c_cur"))
-    ksFromCounts(counts, numPartitions)
+    ksFromCounts(counts)
   }
 
   /** Shared KS core over a (v, c_ref, c_cur) counts frame. */
-  private def ksFromCounts(counts: DataFrame, numPartitions: Int): DataFrame = {
-    val spark = counts.sparkSession
-    import spark.implicits._
-    val parts = if (numPartitions > 0) numPartitions
-      else spark.conf.get("spark.sql.shuffle.partitions").toInt
-    val ranged = counts.repartitionByRange(parts, col("v"))
-      .withColumn("__pid", spark_partition_id())
-    // LAZY fence: the control-plane collect right below materializes
-    // it (guide §5 — probe rides the fence)
-    val staged = graft.ext.Materialize.lazyFence(ranged)
-    // control plane: per-partition totals -> cumulative offsets
-    val ptot = staged.groupBy("__pid")
-      .agg(sum("c_ref").as("r"), sum("c_cur").as("c"))
-      .collect().map(r => (r.getInt(0), r.getLong(1), r.getLong(2))).sortBy(_._1)
-    val nRef = ptot.map(_._2).sum
-    val nCur = ptot.map(_._3).sum
+  private def ksFromCounts(counts: DataFrame): DataFrame = {
+    val (cum, Seq(nRef, nCur)) =
+      Relational.cumBeforeByKey(counts, "v", Seq("c_ref", "c_cur"))
     require(nRef > 0 && nCur > 0,
       s"KS needs non-empty snapshots (n_ref=$nRef, n_cur=$nCur)")
-    val offs = ptot.scanLeft((0, 0L, 0L)) { case ((_, ar, ac), (pid, r, c)) =>
-      (pid, ar + r, ac + c)
-    }
-    val offDf = ptot.map(_._1).zip(offs.init.map(o => (o._2, o._3)))
-      .map { case (pid, (or_, oc)) => (pid, or_, oc) }
-      .toSeq.toDF("__pid", "__off_ref", "__off_cur")
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("__pid")).orderBy(col("v"))
-      .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding,
-        org.apache.spark.sql.expressions.Window.currentRow)
     val dec = "decimal(38,0)"
     val prod = new java.math.BigDecimal(nRef).multiply(new java.math.BigDecimal(nCur))
-    staged.join(broadcast(offDf), Seq("__pid"))
-      .select(abs((sum(col("c_ref")).over(w) + col("__off_ref")).cast(dec) * lit(nCur) -
-        (sum(col("c_cur")).over(w) + col("__off_cur")).cast(dec) * lit(nRef)).as("gap"))
+    cum.select(abs((col("__cumb_c_ref") + col("c_ref")).cast(dec) * lit(nCur) -
+        (col("__cumb_c_cur") + col("c_cur")).cast(dec) * lit(nRef)).as("gap"))
       .agg(max(col("gap")).as("d_dec"))
       .select(lit(nRef).as("n_ref"), lit(nCur).as("n_cur"),
         // diagnostic: past Long.Max (n_ref·n_cur > ~9·10^18 — reachable
@@ -763,7 +738,10 @@ object DataQuality {
     * units (`scale` units per 1.0, e.g. 100 = cents):
     *
     *   W1·n_ref·n_cur·scale = Σ over consecutive distinct values
-    *     |cum_ref(v)·n_cur − cum_cur(v)·n_ref| · (next(v) − v)
+    *     |cumb_ref(v)·n_cur − cumb_cur(v)·n_ref| · (v − prev(v))
+    *
+    * (cumb = the mass strictly below v: each term is the CDF gap over
+    * [prev(v), v)).
     *
     * Output: one row (n_ref, n_cur, w1_num, w1_micro) where `w1_num`
     * is the exact integer sum above and `w1_micro` =
@@ -773,15 +751,12 @@ object DataQuality {
     * diagnostic w1_num lands back in a long (NULL on overflow under
     * the non-ANSI cast, never a silent wrap).
     *
-    * Scale shape: same range-partition discipline as [[ksDrift]] —
-    * per-value counts range-partition on the value, cumulative sums
-    * run per-partition in parallel, and the driver carries only
-    * per-partition totals PLUS each partition's minimum value (the
-    * consecutive-gap boundary: a partition's last row takes the next
-    * partition's minimum as its successor; the global maximum
-    * contributes no gap). Never a single-reducer window. */
+    * Scale shape: same [[Relational.cumBeforeByKey]] cumulative as
+    * [[ksDrift]]; its `__prev_v` supplies prev(v) across range
+    * partitions (the global minimum has none and contributes no gap).
+    * Never a single-reducer window. */
   def w1Drift(ref: DataFrame, cur: DataFrame, valueCol: String,
-      scale: Long = 100L, numPartitions: Int = 0): DataFrame = {
+      scale: Long = 100L): DataFrame = {
     require(scale > 0, s"scale must be positive, got $scale")
     val vq = round(col(valueCol).cast("double") * lit(scale)).cast("long")
     val both = ref.filter(col(valueCol).isNotNull)
@@ -790,7 +765,7 @@ object DataQuality {
         .select(vq.as("v"), lit(0L).as("one_ref"), lit(1L).as("one_cur")))
     val counts = both.groupBy("v")
       .agg(sum("one_ref").as("c_ref"), sum("one_cur").as("c_cur"))
-    w1FromCounts(counts, scale, numPartitions)
+    w1FromCounts(counts, scale)
   }
 
   /** Wasserstein-1 from PERSISTED [[valueCountState]] snapshots — the
@@ -801,7 +776,7 @@ object DataQuality {
     * re-sum — identical to quantizing the raw rows), and the result is
     * bit-identical to [[w1Drift]] over the original snapshots. */
   def w1FromState(refState: DataFrame, curState: DataFrame,
-      scale: Long = 100L, numPartitions: Int = 0): DataFrame = {
+      scale: Long = 100L): DataFrame = {
     require(scale > 0, s"scale must be positive, got $scale")
     val vq = round(col("v") * lit(scale)).cast("long")
     val counts = refState
@@ -810,58 +785,30 @@ object DataQuality {
         .select(vq.as("v"), lit(0L).as("one_ref"), col("c").as("one_cur")))
       .groupBy("v")
       .agg(sum("one_ref").as("c_ref"), sum("one_cur").as("c_cur"))
-    w1FromCounts(counts, scale, numPartitions)
+    w1FromCounts(counts, scale)
   }
 
-  /** Shared W1 core over a quantized (v, c_ref, c_cur) counts frame. */
-  private def w1FromCounts(counts: DataFrame, scale: Long,
-      numPartitions: Int): DataFrame = {
-    val spark = counts.sparkSession
-    import spark.implicits._
-    val parts = if (numPartitions > 0) numPartitions
-      else spark.conf.get("spark.sql.shuffle.partitions").toInt
-    val ranged = counts.repartitionByRange(parts, col("v"))
-      .withColumn("__pid", spark_partition_id())
-    // LAZY fence (probe rides the fence, guide §5)
-    val staged = graft.ext.Materialize.lazyFence(ranged)
-    // control plane: per-partition totals -> offsets; per-partition min
-    // value -> the gap boundary for each partition's last row
-    val ptot = staged.groupBy("__pid")
-      .agg(sum("c_ref").as("r"), sum("c_cur").as("c"), min("v").as("mn"))
-      .collect().map(r => (r.getInt(0), r.getLong(1), r.getLong(2), r.getLong(3)))
-      .sortBy(_._1)
-    val nRef = ptot.map(_._2).sum
-    val nCur = ptot.map(_._3).sum
+  /** Shared W1 core over a quantized (v, c_ref, c_cur) counts frame.
+    * Each term is non-negative, so the decimal(38,0) partial sums stay
+    * bounded by the result; telescoping into Σ(|D_before| − |D|)·v
+    * would mix signs and can overflow where this sum does not. */
+  private def w1FromCounts(counts: DataFrame, scale: Long): DataFrame = {
+    val (cum, Seq(nRef, nCur)) =
+      Relational.cumBeforeByKey(counts, "v", Seq("c_ref", "c_cur"))
     require(nRef > 0 && nCur > 0,
       s"W1 needs non-empty snapshots (n_ref=$nRef, n_cur=$nCur)")
-    val offs = ptot.scanLeft((0, 0L, 0L)) { case ((_, ar, ac), (pid, r, c, _)) =>
-      (pid, ar + r, ac + c)
-    }.init
-    val nextMin: Map[Int, Long] =
-      ptot.map(_._1).zip(ptot.drop(1).map(_._4)).toMap
-    val offDf = ptot.zip(offs).map { case ((pid, _, _, _), (_, or_, oc)) =>
-      (pid, or_, oc, nextMin.get(pid))
-    }.toSeq.toDF("__pid", "__off_ref", "__off_cur", "__next_min")
-    val byV = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("__pid")).orderBy(col("v"))
-    val w = byV.rowsBetween(
-      org.apache.spark.sql.expressions.Window.unboundedPreceding,
-      org.apache.spark.sql.expressions.Window.currentRow)
     val dec = "decimal(38,0)"
     val prodScale = new java.math.BigDecimal(nRef)
       .multiply(new java.math.BigDecimal(nCur))
       .multiply(new java.math.BigDecimal(scale))
-    staged.join(broadcast(offDf), Seq("__pid"))
+    cum.filter(col("__prev_v").isNotNull) // the global min: no predecessor
       .select(
-        abs((sum(col("c_ref")).over(w) + col("__off_ref")).cast(dec) * lit(nCur) -
-          (sum(col("c_cur")).over(w) + col("__off_cur")).cast(dec) * lit(nRef))
-          .as("diff"),
+        abs(col("__cumb_c_ref").cast(dec) * lit(nCur) -
+          col("__cumb_c_cur").cast(dec) * lit(nRef)).as("diff"),
         // the gap subtraction runs in decimal: two quantized values at
         // opposite long extremes gap past Long.Max, which must stay a
         // legitimate W1 contribution, not an int64 overflow
-        (coalesce(lead(col("v"), 1).over(byV), col("__next_min")).cast(dec) -
-          col("v").cast(dec)).as("gap"))
-      .filter(col("gap").isNotNull) // the global max value: no successor
+        (col("v").cast(dec) - col("__prev_v").cast(dec)).as("gap"))
       .agg(sum(col("diff") * col("gap")).as("w1_dec"))
       .select(lit(nRef).as("n_ref"), lit(nCur).as("n_cur"),
         // diagnostic NULLs past Long.Max (try_cast — the ksFromCounts
@@ -906,15 +853,11 @@ object DataQuality {
     * (NULL on overflow under the non-ANSI cast, never a silent wrap).
     *
     * Any non-zero, non-null label value is positive; rows with a NULL
-    * score or label are excluded. Scale shape: per-score counts
-    * range-partition on the score, per-partition cumulative negatives
-    * run in parallel, and only per-partition (pos, neg) totals travel
-    * to the driver as broadcast offsets — the [[ksDrift]] discipline,
-    * never a single-reducer window. */
-  def rocAuc(df: DataFrame, scoreCol: String, labelCol: String,
-      numPartitions: Int = 0): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
+    * score or label are excluded. Scale shape: neg_below(v) is the
+    * [[Relational.cumBeforeByKey]] cumulative over the per-score
+    * counts — the [[ksDrift]] discipline, never a single-reducer
+    * window. */
+  def rocAuc(df: DataFrame, scoreCol: String, labelCol: String): DataFrame = {
     val isPos = col(labelCol).cast("long") =!= 0L
     val scored = df.filter(col(scoreCol).isNotNull && col(labelCol).isNotNull)
       .select(col(scoreCol).cast("double").as("v"),
@@ -922,34 +865,16 @@ object DataQuality {
         when(isPos, 0L).otherwise(1L).as("one_neg"))
     val counts = scored.groupBy("v")
       .agg(sum("one_pos").as("c_pos"), sum("one_neg").as("c_neg"))
-    val parts = if (numPartitions > 0) numPartitions
-      else spark.conf.get("spark.sql.shuffle.partitions").toInt
-    val ranged = counts.repartitionByRange(parts, col("v"))
-      .withColumn("__pid", spark_partition_id())
-    // LAZY fence (probe rides the fence, guide §5)
-    val staged = graft.ext.Materialize.lazyFence(ranged)
-    // control plane: per-partition (pos, neg) totals -> neg offsets
-    val ptot = staged.groupBy("__pid")
-      .agg(sum("c_pos").as("p"), sum("c_neg").as("n"))
-      .collect().map(r => (r.getInt(0), r.getLong(1), r.getLong(2))).sortBy(_._1)
-    val nPos = ptot.map(_._2).sum
-    val nNeg = ptot.map(_._3).sum
+    val (cum, Seq(nPos, nNeg)) =
+      Relational.cumBeforeByKey(counts, "v", Seq("c_pos", "c_neg"))
     require(nPos > 0 && nNeg > 0,
       s"ROC-AUC needs both classes present (n_pos=$nPos, n_neg=$nNeg)")
-    val offs = ptot.scanLeft(0L) { case (acc, (_, _, n)) => acc + n }.init
-    val offDf = ptot.map(_._1).zip(offs).toSeq.toDF("__pid", "__off_neg")
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("__pid")).orderBy(col("v"))
-      .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding,
-        org.apache.spark.sql.expressions.Window.currentRow)
     val dec = "decimal(38,0)"
     val denom = new java.math.BigDecimal(2L)
       .multiply(new java.math.BigDecimal(nPos))
       .multiply(new java.math.BigDecimal(nNeg))
-    staged.join(broadcast(offDf), Seq("__pid"))
-      .select((col("c_pos").cast(dec) *
-        (lit(2L) * (sum(col("c_neg")).over(w) + col("__off_neg") - col("c_neg")) +
-          col("c_neg")).cast(dec)).as("contrib"))
+    cum.select((col("c_pos").cast(dec) *
+        (lit(2L) * col("__cumb_c_neg") + col("c_neg")).cast(dec)).as("contrib"))
       .agg(sum("contrib").as("u2_dec"))
       .select(lit(nPos).as("n_pos"), lit(nNeg).as("n_neg"),
         col("u2_dec").cast("long").as("u2_num"),

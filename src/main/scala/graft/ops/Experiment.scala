@@ -122,12 +122,11 @@ object Experiment {
     * Exactness: predictions/actuals micro-quantize first (floor(x·1e6
     * + 0.5), the quantizeInt8 discipline), residuals are exact int64,
     * k comes from exact integer ceil-division, and q̂ is an exact order
-    * statistic off a distinct-residual histogram via the ksDrift/
-    * globalRowNumber RANGE-PARTITIONED cumulative: range-repartition
-    * the cells on r, collect only the per-partition subtotals
-    * (numPartitions longs — control plane), and resolve the k-th
-    * residual inside the ONE range partition that straddles k with a
-    * partition-local window. No single-reducer window anywhere, so the
+    * statistic off a distinct-residual histogram via the
+    * [[Relational.cumBeforeByKey]] RANGE-PARTITIONED cumulative:
+    * per-partition subtotals are the only control plane, and the k-th
+    * residual is the smallest r whose cumulative reaches k, found by
+    * partition-local windows. No single-reducer window anywhere, so the
     * plan survives a continuous-target calibration whose distinct
     * residuals grow toward row count. q̂/n/k resolve to ONE
     * control-plane row collected at build (the bloom-TVF precedent)
@@ -168,16 +167,13 @@ object Experiment {
     * from-state intervals are one code path. Duplicate residual cells
     * from unioned state shards sum first.
     *
-    * Plan shape (the ksFromCounts discipline): the distinct-residual
-    * cells range-repartition on r; the driver collects ONLY the
-    * numPartitions per-partition subtotals, derives n and k exactly
-    * (BigInt — no overflow at any n), locates the one range partition
-    * whose cumulative span contains k, and runs a PARTITION-LOCAL
-    * cumulative window over just that partition's cells. Every other
-    * partition is pruned by a pushed __pid filter; no empty-
-    * partitionSpec window touches the histogram, so micro-quantized
-    * residuals of a continuous target (distinct cells → row count)
-    * never funnel through one reducer.
+    * Plan shape: the distinct-residual cells ride
+    * [[Relational.cumBeforeByKey]]; its control-plane totals give n
+    * and k exactly (BigInt — no overflow at any n), and q̂ is the
+    * smallest r with cumb + c ≥ k. No empty-partitionSpec window
+    * touches the histogram, so micro-quantized residuals of a
+    * continuous target (distinct cells → row count) never funnel
+    * through one reducer.
     *
     * NOTE: q̂/n/k are resolved by two control-plane Spark actions AT
     * BUILD TIME (the bloom-TVF build-action precedent) — constructing
@@ -198,32 +194,18 @@ object Experiment {
   }
 
   /** The conformal family's shared exact order statistic: the k-th
-    * smallest score of a (r, c) histogram, k = ⌈(n+1)(1−α)⌉, via the
-    * ksFromCounts range-partition discipline — per-partition subtotals
-    * collected as control plane (numPartitions longs), then ONE
-    * partition-local cumulative window inside the single range
-    * partition that straddles k (every other partition pruned by a
-    * pushed __pid filter; no empty-partitionSpec window anywhere).
-    * Duplicate score cells from unioned state shards sum first.
-    * Signed scores are fine — only the total order matters (CQR's
-    * calibration scores are negative when the actual sits inside the
-    * predicted band). */
+    * smallest score of a (r, c) histogram, k = ⌈(n+1)(1−α)⌉ — the
+    * smallest r with cumb + c ≥ k over the
+    * [[Relational.cumBeforeByKey]] cumulative (no empty-partitionSpec
+    * window anywhere). Duplicate score cells from unioned state shards
+    * sum first. Signed scores are fine — only the total order matters
+    * (CQR's calibration scores are negative when the actual sits
+    * inside the predicted band). */
   private def kthScoreFromHistogram(histIn: DataFrame,
       alphaMicro: Long): Long = {
     val M = 1000000L
-    val spark = histIn.sparkSession
-    val parts = spark.conf.get("spark.sql.shuffle.partitions").toInt
-    val hist = histIn.groupBy("r").agg(sum("c").as("c"))
-    val ranged = hist.repartitionByRange(parts, col("r"))
-      .withColumn("__pid", spark_partition_id())
-    // LAZY fence: the control-plane collect right below materializes
-    // it (guide §5 — probe rides the fence)
-    val staged = graft.ext.Materialize.lazyFence(ranged)
-    // control plane: per-range-partition cell subtotals (numPartitions
-    // longs) -> exact n, k, and the k-straddling partition's offset
-    val ptot = staged.groupBy("__pid").agg(sum("c").as("c"))
-      .collect().map(r => (r.getInt(0), r.getLong(1))).sortBy(_._1)
-    val n = ptot.iterator.map(_._2).sum
+    val (cum, Seq(n)) = Relational.cumBeforeByKey(
+      histIn.groupBy("r").agg(sum("c").as("c")), "r", Seq("c"))
     // k = ceil((n+1)(M-alpha)/M), exact in BigInt (long would overflow
     // past n ~ 9.2e12 at M = 1e6 — reachable row counts at 100 TB)
     val kBig = (BigInt(n) + 1) * BigInt(M - alphaMicro) + BigInt(M - 1L)
@@ -231,29 +213,12 @@ object Experiment {
     if (n <= 0L || k > n || k <= 0L) throw new IllegalStateException(
       "conformal calibration is empty or too small for alpha: " +
         s"need n >= ceil(1/alpha) - 1 residuals (alphaMicro=$alphaMicro)")
-    val offs = ptot.map(_._2).scanLeft(0L)(_ + _).init
-    val (pidT, offT) = ptot.zip(offs)
-      .collectFirst { case ((pid, c), off) if off < k && k <= off + c =>
-        (pid, off) }
-      .getOrElse(throw new IllegalStateException(
-        s"unreachable: k=$k <= n=$n but no range partition spans it"))
-    // the k-th score lives in exactly one range partition: local
-    // cumulative window there (partitionBy __pid — never one global
-    // reducer), every other partition pruned by the __pid filter
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("__pid").orderBy("r")
-      .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding,
-        org.apache.spark.sql.expressions.Window.currentRow)
-    val qRow = staged.filter(col("__pid") === pidT)
-      .withColumn("cum", sum("c").over(w) + lit(offT))
-      .filter(col("cum") >= k)
-      .agg(min("r").as("qhat"))
-      .collect() // ONE row: qhat — control-plane by design
-    qRow.headOption match {
-      case Some(row) if !row.isNullAt(0) => row.getLong(0)
-      case _ => throw new IllegalStateException(
-        s"unreachable: partition $pidT lost the k=$k-th score")
-    }
+    // ONE row: qhat — control-plane by design
+    val q = cum.filter(col("__cumb_c") + col("c") >= k)
+      .agg(min("r")).head()
+    if (q.isNullAt(0)) throw new IllegalStateException(
+      s"unreachable: k=$k <= n=$n but no cell reaches it")
+    q.getLong(0)
   }
 
   /** Conformalized quantile regression (Romano, Patterson & Candès
@@ -285,14 +250,8 @@ object Experiment {
       alphaMicro: Long = 100000L, idCol: String = "id"): DataFrame = {
     require(alphaMicro > 0L && alphaMicro < 1000000L,
       s"alphaMicro must be in (0, 1e6), got $alphaMicro")
-    val hist = cqrScoreHistogram(calib, loCol, hiCol, actualCol)
-    val qhat = kthScoreFromHistogram(hist, alphaMicro)
-    test.select(col(idCol),
-        microCol(col(loCol)).as("lo_pred_micro"),
-        microCol(col(hiCol)).as("hi_pred_micro"))
-      .withColumn("qhat_micro", lit(qhat))
-      .withColumn("lo_micro", col("lo_pred_micro") - qhat)
-      .withColumn("hi_micro", col("hi_pred_micro") + qhat)
+    cqrFromHistogram(cqrScoreHistogram(calib, loCol, hiCol, actualCol),
+      test, loCol, hiCol, alphaMicro, idCol)
   }
 
   /** CQR's mergeable state: (r, c) counts per distinct SIGNED
@@ -442,7 +401,7 @@ object Experiment {
     val dec = "decimal(38,0)"
     val hist = state.groupBy("vq")
       .agg(sum("ca").as("ca"), sum("t").as("t"))
-    val cum = Relational.cumBeforeByKey(hist, "vq", Seq("ca", "t"))
+    val (cum, _) = Relational.cumBeforeByKey(hist, "vq", Seq("ca", "t"))
     val agg = cum.agg(
       sum(col("ca").cast(dec) *
         (lit(2L) * col("__cumb_t") + col("t") + lit(1L)).cast(dec)).as("r2a"),
@@ -503,7 +462,7 @@ object Experiment {
     // fence: the rank join AND the tie-correction aggregate both read
     // the cumulative cells — the stitch must not recompute per consumer
     val cum = graft.ext.Materialize(
-      Relational.cumBeforeByKey(perVal, "vq", Seq("t")))
+      Relational.cumBeforeByKey(perVal, "vq", Seq("t"))._1)
     val perGroupVal = src.groupBy("g", "vq").agg(count(lit(1)).as("cg"))
     val grp = perGroupVal.join(cum, Seq("vq"))
       .groupBy("g")
@@ -564,7 +523,7 @@ object Experiment {
     val hist = d.groupBy(abs(col("d")).as("ad")).agg(
       sum(when(col("d") > 0L, 1L).otherwise(0L)).as("cpos"),
       count(lit(1)).as("t"))
-    val cum = Relational.cumBeforeByKey(hist, "ad", Seq("t"))
+    val (cum, _) = Relational.cumBeforeByKey(hist, "ad", Seq("t"))
     val agg = cum.agg(
       sum(col("cpos").cast(dec) *
         (lit(2L) * col("__cumb_t") + col("t") + lit(1L)).cast(dec)).as("w2p"),
@@ -634,7 +593,7 @@ object Experiment {
     // -> k = 0 -> no hit) surfaces NULLs, and a p where NEITHER arm
     // hits emits no row — both exactly the old full join's row set.
     // Single consumer now, so the cells need no fence.
-    val cum = Relational.cumBeforeByKey(hist, "vq", Seq("ta", "tb"))
+    val (cum, _) = Relational.cumBeforeByKey(hist, "vq", Seq("ta", "tb"))
     def kOf(c: String) = call_function("div",
       col("p_micro").cast(dec) * col(s"__tot_$c").cast(dec) + lit(999999L),
       lit(1000000L))
@@ -759,7 +718,7 @@ object Experiment {
     // fence: each arm reads the cumulative cells TWICE (cut resolution
     // + the winsorized sum) — four consumers of the stitched window
     val cum = graft.ext.Materialize(
-      Relational.cumBeforeByKey(hist, "vq", Seq("ta", "tb")))
+      Relational.cumBeforeByKey(hist, "vq", Seq("ta", "tb"))._1)
     val pSpine = broadcast(Seq(pLoMicro, pHiMicro).toDF("p_micro"))
     def arm(c: String, label: String): DataFrame = {
       val k = call_function("div",

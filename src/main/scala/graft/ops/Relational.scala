@@ -574,34 +574,38 @@ object Relational {
   }
 
   /** Range-partitioned strictly-before cumulative over a (key,
-    * counts...) histogram frame — the shared topology behind
-    * [[globalRowNumber]], ksDrift, conformal q̂, and the quantile
-    * family: range-repartition the cells on `keyCol`, collect ONLY the
-    * numPartitions per-count subtotals (control plane), and stitch
-    * partition-LOCAL cumulative windows to the broadcast offsets. No
-    * empty-partitionSpec WindowExec anywhere, so a histogram whose
-    * distinct keys grow toward row count never funnels through one
-    * reducer.
+    * counts...) histogram frame — the shared topology behind the
+    * rank, drift, ROC-AUC, conformal and quantile families:
+    * range-repartition the cells on `keyCol`, collect ONLY the
+    * per-range-partition subtotals and maximum key (control plane),
+    * and stitch partition-LOCAL cumulative windows to the resulting
+    * offsets. No empty-partitionSpec WindowExec anywhere, so a
+    * histogram whose distinct keys grow toward row count never
+    * funnels through one reducer.
     *
     * For each c in `cntCols` the output adds `__cumb_<c>` (the exact
     * sum of c over STRICTLY smaller keys) and `__tot_<c>` (the grand
-    * total, as a literal). Runs one control-plane action at build time
-    * (the conformal/bloom precedent); the input is materialized, so
-    * callers reuse the staged cells without recompute.
+    * total, as a literal); it also adds `__prev_<keyCol>`, the key of
+    * the preceding row (NULL on the smallest key) — a partition-local
+    * `lag` whose first row per range partition takes the previous
+    * non-empty partition's maximum key. Returns the frame with the
+    * grand totals in `cntCols` order: the driver holds them anyway, so
+    * callers' build-time checks and exact denominators cost no second
+    * action. Runs one control-plane action at build time (the
+    * conformal/bloom precedent); the input is materialized, so callers
+    * reuse the staged cells without recompute.
     *
-    * Duplicate keys are SAFE: the cumulative is a RANGE frame (all
-    * rows with key <= current) minus the peer-frame sum (all rows with
-    * key == current), both over the same ordered spec — so every
+    * Duplicate keys are SAFE for the cumulative: it is a RANGE frame
+    * (all rows with key <= current) minus the peer-frame sum (all rows
+    * with key == current), both over the same ordered spec — so every
     * duplicate row of a key gets the identical strictly-before sum
-    * regardless of intra-partition row order among equal keys. (All
-    * current callers pre-aggregate to distinct keys; this removes the
-    * order-dependence a raw ROWS frame would reintroduce if one ever
-    * didn't.) */
+    * regardless of intra-partition row order among equal keys.
+    * `__prev_<keyCol>` is row-based, so under duplicate keys it can be
+    * the row's own key; its callers pre-aggregate to distinct keys. */
   private[graft] def cumBeforeByKey(frame: DataFrame, keyCol: String,
-      cntCols: Seq[String]): DataFrame = {
+      cntCols: Seq[String]): (DataFrame, IndexedSeq[Long]) = {
     require(cntCols.nonEmpty, "cumBeforeByKey needs count columns")
     val spark = frame.sparkSession
-    import spark.implicits._
     val parts = spark.conf.get("spark.sql.shuffle.partitions").toInt
     // fence the histogram BEFORE the range exchange: the range
     // partitioner's bounds-sampling job executes its whole child, so an
@@ -617,25 +621,28 @@ object Relational {
     val ranged = cells.repartitionByRange(parts, col(keyCol))
       .withColumn("__pid", spark_partition_id())
     val staged = graft.ext.Materialize.lazyFence(ranged)
-    val aggs = cntCols.map(c => sum(col(c)).as(c))
+    val aggs = cntCols.map(c => sum(col(c)).as(c)) :+ max(col(keyCol))
+    // one row per NON-EMPTY range partition: (pid, subtotals, max key)
     val ptot = staged.groupBy("__pid").agg(aggs.head, aggs.tail: _*)
       .collect()
       .map(r => (r.getInt(0), cntCols.indices.map(i =>
-        if (r.isNullAt(i + 1)) 0L else r.getLong(i + 1)).toVector))
-      .sortBy(_._1)
+        if (r.isNullAt(i + 1)) 0L else r.getLong(i + 1)).toVector,
+        r.get(cntCols.size + 1)))
+      .sortBy(_._1).toIndexedSeq
     val totals = cntCols.indices.map(i => ptot.iterator.map(_._2(i)).sum)
     val offs = ptot.map(_._2).scanLeft(Vector.fill(cntCols.size)(0L)) {
       (acc, cs) => acc.lazyZip(cs).map(_ + _)
     }.init
-    val offDf = ptot.map(_._1).zip(offs)
-      .map { case (pid, o) => Row.fromSeq(pid +: o) }
-    val offSchema = org.apache.spark.sql.types.StructType(
-      org.apache.spark.sql.types.StructField("__pid",
-        org.apache.spark.sql.types.IntegerType, nullable = false) +:
-        cntCols.map(c => org.apache.spark.sql.types.StructField(
-          s"__off_$c", org.apache.spark.sql.types.LongType, nullable = false)))
-    val offFrame = spark.createDataFrame(
-      spark.sparkContext.parallelize(offDf.toSeq, 1), offSchema)
+    val prevMax = null +: ptot.map(_._3).dropRight(1)
+    // offsets and predecessor keys travel as literal arrays indexed by
+    // __pid — a broadcast offsets frame would cost a job of its own.
+    // Empty range partitions get placeholder slots no row ever reads.
+    val slot = ptot.map(_._1).zipWithIndex.toMap
+    def byPid[T](xs: IndexedSeq[T], none: T): IndexedSeq[T] =
+      (0 until ptot.lastOption.fold(0)(_._1 + 1))
+        .map(p => slot.get(p).fold(none)(xs))
+    val keyType = frame.schema(keyCol).dataType
+    val pmax = array(byPid(prevMax, null).map(lit(_).cast(keyType)): _*)
     // Two frames over ONE ordered spec (single WindowExec, no extra
     // exchange): RANGE up-to-current sums keys <= current INCLUDING
     // every duplicate row; RANGE current-row..current-row sums exactly
@@ -645,15 +652,16 @@ object Relational {
     val spec = Window.partitionBy("__pid").orderBy(col(keyCol))
     val wUpTo = spec.rangeBetween(Window.unboundedPreceding, Window.currentRow)
     val wPeers = spec.rangeBetween(Window.currentRow, Window.currentRow)
-    val joined = staged.join(broadcast(offFrame), Seq("__pid"))
-    val withCums = cntCols.zipWithIndex.foldLeft(joined) {
+    val withPrev = staged.withColumn(s"__prev_$keyCol",
+      coalesce(lag(col(keyCol), 1).over(spec), pmax.getItem(col("__pid"))))
+    val withCums = cntCols.zipWithIndex.foldLeft(withPrev) {
       case (df, (c, i)) => df
         .withColumn(s"__cumb_$c",
           sum(col(c)).over(wUpTo) - sum(col(c)).over(wPeers) +
-            col(s"__off_$c"))
+            typedLit(byPid(offs.map(_(i)), 0L)).getItem(col("__pid")))
         .withColumn(s"__tot_$c", lit(totals(i)))
     }
-    withCums.drop("__pid" +: cntCols.map(c => s"__off_$c"): _*)
+    (withCums.drop("__pid"), totals)
   }
 
   /** Top-k rows per key WITHOUT a window sort: the k-bounded

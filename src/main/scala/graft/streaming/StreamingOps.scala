@@ -23,8 +23,10 @@ object StreamingOps {
     * read-after-write between them); the versioned-state marker flip
     * still happens strictly AFTER every write lands, so the
     * exactly-once contract (commit = marker, replay overwrites with
-    * identical bytes) is unchanged. */
-  private def concurrently(writes: (() => Unit)*): Unit = {
+    * identical bytes) is unchanged. Also the one concurrent-write
+    * helper of the SparkEntry queries; failures propagate like the
+    * serial form. */
+  private[graft] def concurrently(writes: (() => Unit)*): Unit = {
     import scala.concurrent.{Await, Future}
     import scala.concurrent.duration.Duration
     import scala.concurrent.ExecutionContext.Implicits.global

@@ -25,6 +25,15 @@ class CumBeforeByKeySpec extends SparkTestBase {
     out.toMap
   }
 
+  // distinct key -> the next-smaller key (None on the smallest)
+  private def prevReference(keys: Seq[Long]): Map[Long, Option[Long]] = {
+    val sorted = keys.distinct.sorted
+    sorted.zip(None +: sorted.map(Some(_))).toMap
+  }
+
+  private def prevOf(r: org.apache.spark.sql.Row): Option[Long] =
+    Option(r.getAs[java.lang.Long]("__prev_k")).map(_.longValue)
+
   test("random histograms: cumb/tot match the in-JVM prefix sum for every cell") {
     val rnd = new scala.util.Random(42)
     (1 to 5).foreach { trial =>
@@ -38,30 +47,33 @@ class CumBeforeByKeySpec extends SparkTestBase {
         (k, g.map(_._2).sum, g.map(_._3).sum)
       }.toSeq
       val want = reference(rows)
+      val wantPrev = prevReference(rows.map(_._1))
       val wantTotA = rows.map(_._2).sum
       val wantTotB = rows.map(_._3).sum
-      val got = Relational.cumBeforeByKey(
+      val (cum, totals) = Relational.cumBeforeByKey(
         rows.toDF("k", "a", "b"), "k", Seq("a", "b"))
-        .collect().map(r => (r.getAs[Long]("k"),
+      assert(totals === Seq(wantTotA, wantTotB), s"trial $trial returned totals")
+      val got = cum.collect().map(r => (r.getAs[Long]("k"),
           r.getAs[Long]("__cumb_a"), r.getAs[Long]("__cumb_b"),
-          r.getAs[Long]("__tot_a"), r.getAs[Long]("__tot_b")))
+          r.getAs[Long]("__tot_a"), r.getAs[Long]("__tot_b"), prevOf(r)))
       assert(got.length === rows.length, s"trial $trial row count")
-      got.foreach { case (k, cba, cbb, ta, tb) =>
+      got.foreach { case (k, cba, cbb, ta, tb, prev) =>
         assert((cba, cbb) === want(k), s"trial $trial key $k")
         assert((ta, tb) === (wantTotA, wantTotB), s"trial $trial totals")
+        assert(prev === wantPrev(k), s"trial $trial key $k predecessor")
       }
     }
   }
 
   test("single cell, empty frame, and zero-count columns behave") {
     val one = Relational.cumBeforeByKey(
-      Seq((7L, 3L, 0L)).toDF("k", "a", "b"), "k", Seq("a", "b")).head()
+      Seq((7L, 3L, 0L)).toDF("k", "a", "b"), "k", Seq("a", "b"))._1.head()
     assert((one.getAs[Long]("__cumb_a"), one.getAs[Long]("__cumb_b"),
       one.getAs[Long]("__tot_a"), one.getAs[Long]("__tot_b")) ===
       (0L, 0L, 3L, 0L))
-    val empty = Relational.cumBeforeByKey(
+    val (empty, emptyTotals) = Relational.cumBeforeByKey(
       Seq.empty[(Long, Long)].toDF("k", "a"), "k", Seq("a"))
-    assert(empty.count() === 0L)
+    assert(empty.count() === 0L && emptyTotals === Seq(0L))
   }
 
   test("duplicate keys: every duplicate row gets the same strictly-before sum") {
@@ -77,7 +89,7 @@ class CumBeforeByKeySpec extends SparkTestBase {
       (k, g.map(_._2).sum, g.map(_._3).sum) }.toSeq
     val want = reference(byKey)
     val got = Relational.cumBeforeByKey(
-      rows.toDF("k", "a", "b"), "k", Seq("a", "b"))
+      rows.toDF("k", "a", "b"), "k", Seq("a", "b"))._1
       .collect().map(r => (r.getAs[Long]("k"),
         r.getAs[Long]("__cumb_a"), r.getAs[Long]("__cumb_b")))
     assert(got.length === rows.length)
@@ -89,15 +101,84 @@ class CumBeforeByKeySpec extends SparkTestBase {
   test("partition-count invariance: 1, 4, and 32 shuffle partitions agree") {
     val rows = (1L to 300L).map(i => (i * 7 % 101, 1L)).groupBy(_._1)
       .map { case (k, g) => (k, g.map(_._2).sum) }.toSeq
-    def run(parts: String): Map[Long, (Long, Long)] = {
+    def run(parts: String, data: Seq[(Long, Long)])
+        : (Map[Long, (Long, Long, Option[Long])], Seq[Long]) = {
       val prev = spark.conf.get("spark.sql.shuffle.partitions")
       spark.conf.set("spark.sql.shuffle.partitions", parts)
-      try Relational.cumBeforeByKey(rows.toDF("k", "a"), "k", Seq("a"))
-        .collect().map(r => r.getAs[Long]("k") ->
-          (r.getAs[Long]("__cumb_a"), r.getAs[Long]("__tot_a"))).toMap
-      finally spark.conf.set("spark.sql.shuffle.partitions", prev)
+      try {
+        val (cum, totals) =
+          Relational.cumBeforeByKey(data.toDF("k", "a"), "k", Seq("a"))
+        (cum.collect().map(r => r.getAs[Long]("k") ->
+          (r.getAs[Long]("__cumb_a"), r.getAs[Long]("__tot_a"), prevOf(r)))
+          .toMap, totals)
+      } finally spark.conf.set("spark.sql.shuffle.partitions", prev)
     }
-    val r1 = run("1")
-    assert(run("4") === r1 && run("32") === r1)
+    val want = reference(rows.map { case (k, a) => (k, a, 0L) })
+    val wantPrev = prevReference(rows.map(_._1))
+    val r1 = run("1", rows)
+    assert(r1._2 === Seq(300L))
+    r1._1.foreach { case (k, (cb, _, prev)) =>
+      assert(cb === want(k)._1 && prev === wantPrev(k), s"key $k")
+    }
+    assert(run("4", rows) === r1 && run("32", rows) === r1)
+    // 32 range partitions over 5 keys: most partitions are empty, so a
+    // partition's first row must take its predecessor from the last
+    // NON-EMPTY partition before it
+    val few = Seq((3L, 2L), (10L, 1L), (11L, 4L), (40L, 1L), (90L, 5L))
+    val (got, tot) = run("32", few)
+    assert(tot === Seq(13L))
+    assert(got === Map(3L -> (0L, 13L, None), 10L -> (2L, 13L, Some(3L)),
+      11L -> (3L, 13L, Some(10L)), 40L -> (7L, 13L, Some(11L)),
+      90L -> (8L, 13L, Some(40L))))
+  }
+
+  test("job counts: KS, W1, ROC-AUC and conformal build + collect") {
+    // every Spark job of building AND collecting each operator, counted
+    // by a listener (the DedupSpec guard); pinned so an extra
+    // control-plane action or an unfenced re-scan shows up
+    val rnd = new scala.util.Random(11)
+    val ref = Seq.fill(300)(rnd.nextInt(50).toDouble).toDF("v")
+    val cur = Seq.fill(200)((rnd.nextInt(50) + rnd.nextInt(10)).toDouble).toDF("v")
+    val scored = Seq.fill(300)((rnd.nextInt(40).toDouble, rnd.nextInt(2)))
+      .toDF("s", "y")
+    val calib = Seq.fill(400)((100.0 + rnd.nextInt(200), 100.0))
+      .toDF("pred", "actual")
+    val test0 = (1L to 5L).map(i => (i, i.toDouble)).toDF("id", "pred")
+    val sc = spark.sparkContext
+    val tag = "graft.test.cumBeforeJobs"
+    def jobs(body: => Any): Int = {
+      val seen = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+      val marker = new java.util.concurrent.CountDownLatch(1)
+      val listener = new org.apache.spark.scheduler.SparkListener {
+        override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+          Option(e.properties).flatMap(p => Option(p.getProperty(tag))).foreach {
+            case "op" => seen.add(e.jobId)
+            case "marker" => marker.countDown()
+            case _ =>
+          }
+      }
+      sc.addSparkListener(listener)
+      try {
+        sc.setLocalProperty(tag, "op")
+        body
+        // the listener bus is asynchronous but ordered: once a later
+        // job's start is seen, every operator job has been counted
+        sc.setLocalProperty(tag, "marker")
+        sc.parallelize(Seq(1), 1).count()
+        assert(marker.await(60, java.util.concurrent.TimeUnit.SECONDS))
+        seen.size
+      } finally {
+        sc.setLocalProperty(tag, null)
+        sc.removeSparkListener(listener)
+      }
+    }
+    val got = Seq(
+      "ksDrift" -> jobs(DataQuality.ksDrift(ref, cur, "v").collect()),
+      "w1Drift" -> jobs(DataQuality.w1Drift(ref, cur, "v").collect()),
+      "rocAuc" -> jobs(DataQuality.rocAuc(scored, "s", "y").collect()),
+      "conformalIntervals" -> jobs(Experiment.conformalIntervals(
+        calib, test0, "pred", "actual").collect()))
+    assert(got === Seq("ksDrift" -> 8, "w1Drift" -> 8, "rocAuc" -> 8,
+      "conformalIntervals" -> 8))
   }
 }
