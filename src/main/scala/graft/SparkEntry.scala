@@ -105,7 +105,8 @@ object SparkEntry {
     },
     "etl_pipeline_json" -> { (s, dir) =>
       // Full path: JSON spec (live schema, main.py:327-339) -> Rule ADT ->
-      // one compiled plan over orders with a broadcast customer lookup.
+      // one compiled plan over orders with a broadcast-dictionary
+      // customer lookup (built once, probed inside the projection).
       val spec =
         """[
           |{"name":"order_id","type":"Direct Map","source":"o_orderkey"},

@@ -3,7 +3,8 @@ package graft.etl
 /** The pipeline IR: an ordered list of rules, each producing exactly one
   * output column. Mirrors the reference engine's JSON rule dicts
   * (reference: main.py:349-401) as a small Scala ADT; the compiled form is
-  * a single Catalyst plan (one `select`, plus broadcast joins for lookups).
+  * a single Catalyst plan (one `select`; each lookup probes a broadcast
+  * dictionary built once per pipeline).
   */
 sealed trait Rule {
   /** Name of the output column this rule produces. */

@@ -17,6 +17,12 @@ object SmartLoad {
   final case class UnsupportedFormatException(filename: String)
       extends RuntimeException(s"Unsupported file type: $filename")
 
+  /** A delimited file with no header line (zero bytes or blank lines):
+    * pandas raises `EmptyDataError` here, where Spark would return a
+    * frame with no columns and no rows. */
+  final case class EmptyDataException(path: String)
+      extends RuntimeException(s"No columns to parse from file: $path")
+
   /** Load `path` into a DataFrame, dispatching on file extension or
     * `formatOverride` ("csv" | "pipe" | "excel" | "json" | "parquet"). */
   def load(spark: SparkSession, path: String, formatOverride: Option[String] = None): DataFrame = {
@@ -203,12 +209,16 @@ object SmartLoad {
     }
   }
 
-  private def csv(spark: SparkSession, path: String, sep: String): DataFrame =
-    spark.read
+  private def csv(spark: SparkSession, path: String, sep: String): DataFrame = {
+    val df = spark.read
       .option("header", true)
       .option("inferSchema", true)
       .option("sep", sep)
       .csv(path)
+    // the schema is already inferred: this check runs no job
+    if (df.schema.isEmpty) throw EmptyDataException(path)
+    df
+  }
 
   /** Unknown extension: detect the delimiter from a driver-side sample of
     * the first lines (the distributed-safe analogue of the reference's

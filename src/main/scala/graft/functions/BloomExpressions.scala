@@ -2,10 +2,12 @@ package graft.functions
 
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.Expression
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode, FalseLiteral}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, CodeGenerator, ExprCode,
+  FalseLiteral}
 import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.types.{BooleanType, DataType, LongType}
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Membership test against a Bloom bit array delivered as a BROADCAST
   * VARIABLE, not a plan literal.
@@ -78,4 +80,53 @@ case class BloomMightContain(
 
   override protected def withNewChildrenInternal(newChildren: IndexedSeq[Expression]): Expression =
     copy(hashes = newChildren)
+}
+
+/** Dictionary probe against a key -> value map delivered as a BROADCAST
+  * VARIABLE — the fused, join-free form of a dimension lookup. Same
+  * delivery as [[BloomMightContain]]: the map ships once per executor
+  * and the expression serializes as a handle, so no plan carries the
+  * dictionary and no action re-derives it.
+  *
+  * `child` is the probe key as a string; the map holds UTF8String keys
+  * and Catalyst internal values of `dataType` (null values allowed). A
+  * null probe and a missing key both yield null. The broadcast is
+  * dereferenced once per generated class instance, not per row. */
+case class BroadcastDictGet(
+    child: Expression,
+    dataType: DataType,
+    dict: Broadcast[java.util.Map[UTF8String, Any]])
+    extends UnaryExpression {
+
+  override def nullable: Boolean = true
+  override def prettyName: String = "broadcast_dict_get"
+
+  override def eval(input: InternalRow): Any = {
+    val key = child.eval(input)
+    if (key == null) null else dict.value.get(key)
+  }
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val bcRef = ctx.addReferenceObj("dict", dict, "org.apache.spark.broadcast.Broadcast")
+    val map = ctx.addMutableState("java.util.Map", "dictMap",
+      v => s"$v = (java.util.Map) $bcRef.value();")
+    val c = child.genCode(ctx)
+    val hit = ctx.freshName("hit")
+    ev.copy(code =
+      code"""
+         |${c.code}
+         |boolean ${ev.isNull} = true;
+         |${CodeGenerator.javaType(dataType)} ${ev.value} = ${CodeGenerator.defaultValue(dataType)};
+         |if (!${c.isNull}) {
+         |  Object $hit = $map.get(${c.value});
+         |  if ($hit != null) {
+         |    ${ev.isNull} = false;
+         |    ${ev.value} = (${CodeGenerator.boxedType(dataType)}) $hit;
+         |  }
+         |}
+       """.stripMargin)
+  }
+
+  override protected def withNewChildInternal(newChild: Expression): Expression =
+    copy(child = newChild)
 }

@@ -552,25 +552,32 @@ object Relational {
     val spark = df.sparkSession
     val parts = if (numPartitions > 0) numPartitions
       else spark.conf.get("spark.sql.shuffle.partitions").toInt
-    val spark0 = df.sparkSession
-    import spark0.implicits._
     val ranged = df.repartitionByRange(parts, sortCols.map(col): _*)
       .withColumn("__pid", spark_partition_id())
     // LAZY fence: the per-partition counts collect right below is the
     // action that materializes it (guide §5 — probe rides the fence)
     val staged = graft.ext.Materialize.lazyFence(ranged)
     // control-plane: rows per range partition -> cumulative offsets
-    // (numPartitions longs), broadcast back as a tiny join
+    // (numPartitions longs)
     val counts = staged.groupBy(col("__pid")).count()
-      .collect().map(r => (r.getInt(0), r.getLong(1))).sortBy(_._1)
+      .collect().map(r => (r.getInt(0), r.getLong(1))).sortBy(_._1).toSeq
     val offsets = counts.scanLeft(0L) { case (acc, (_, n)) => acc + n }.init
-    val offDf = counts.map(_._1).zip(offsets).toSeq.toDF("__pid", "__off")
     // local row number: window partitioned by __pid — every partition
     // ranks in parallel (balanced exchange on pid, never one reducer)
     val w = Window.partitionBy(col("__pid")).orderBy(sortCols.map(col): _*)
-    staged.join(broadcast(offDf), Seq("__pid"))
-      .withColumn("row_num", row_number().over(w).cast("long") + col("__off"))
-      .drop("__pid", "__off")
+    staged
+      .withColumn("row_num", row_number().over(w).cast("long") +
+        typedLit(byPid(counts.map(_._1).zip(offsets), 0L)).getItem(col("__pid")))
+      .drop("__pid")
+  }
+
+  /** Per-range-partition values as a literal array indexed by `__pid`,
+    * from the (pid, value) pairs of the NON-EMPTY partitions; empty
+    * partitions, which no row reads, take `none`. A broadcast frame
+    * joined on `__pid` would cost a Spark job of its own. */
+  private def byPid[T](vals: Seq[(Int, T)], none: T): IndexedSeq[T] = {
+    val slot = vals.toMap
+    (0 until vals.map(_._1 + 1).maxOption.getOrElse(0)).map(slot.getOrElse(_, none))
   }
 
   /** Range-partitioned strictly-before cumulative over a (key,
@@ -634,15 +641,10 @@ object Relational {
       (acc, cs) => acc.lazyZip(cs).map(_ + _)
     }.init
     val prevMax = null +: ptot.map(_._3).dropRight(1)
-    // offsets and predecessor keys travel as literal arrays indexed by
-    // __pid — a broadcast offsets frame would cost a job of its own.
-    // Empty range partitions get placeholder slots no row ever reads.
-    val slot = ptot.map(_._1).zipWithIndex.toMap
-    def byPid[T](xs: IndexedSeq[T], none: T): IndexedSeq[T] =
-      (0 until ptot.lastOption.fold(0)(_._1 + 1))
-        .map(p => slot.get(p).fold(none)(xs))
+    // offsets and predecessor keys travel as literal arrays indexed by __pid
+    val pids = ptot.map(_._1)
     val keyType = frame.schema(keyCol).dataType
-    val pmax = array(byPid(prevMax, null).map(lit(_).cast(keyType)): _*)
+    val pmax = array(byPid(pids.zip(prevMax), null).map(lit(_).cast(keyType)): _*)
     // Two frames over ONE ordered spec (single WindowExec, no extra
     // exchange): RANGE up-to-current sums keys <= current INCLUDING
     // every duplicate row; RANGE current-row..current-row sums exactly
@@ -658,7 +660,7 @@ object Relational {
       case (df, (c, i)) => df
         .withColumn(s"__cumb_$c",
           sum(col(c)).over(wUpTo) - sum(col(c)).over(wPeers) +
-            typedLit(byPid(offs.map(_(i)), 0L)).getItem(col("__pid")))
+            typedLit(byPid(pids.zip(offs.map(_(i))), 0L)).getItem(col("__pid")))
         .withColumn(s"__tot_$c", lit(totals(i)))
     }
     (withCums.drop("__pid"), totals)
@@ -714,8 +716,8 @@ object Relational {
     * discipline — per-x maxima range-partition on x descending,
     * per-partition prefix maxima run in parallel, and only each
     * partition's maximum travels to the driver to become the next
-    * partitions' broadcast floor. Never a single-reducer window, and
-    * never a pair join. A final equi-join back to the input counts the
+    * partitions' floor, a literal indexed by range partition. Never a
+    * single-reducer window, and never a pair join. A final equi-join back to the input counts the
     * rows sitting exactly on each frontier point.
     *
     * Output: frontier points — (x, y, n), x ascending ⇒ y strictly
@@ -723,7 +725,6 @@ object Relational {
   def skylineMax2D(df: DataFrame, xCol: String, yCol: String,
       numPartitions: Int = 0): DataFrame = {
     val spark = df.sparkSession
-    import spark.implicits._
     val pts = df.filter(col(xCol).isNotNull && col(yCol).isNotNull)
       .select(col(xCol).as("x"), col(yCol).cast("double").as("y"))
     val perX = pts.groupBy("x").agg(max("y").as("ymax"))
@@ -737,18 +738,19 @@ object Relational {
     // control plane: per-partition max -> prefix floor for later pids
     // (pid 0 holds the largest x under the descending range order)
     val pmax = staged.groupBy("__pid").agg(max("ymax").as("m"))
-      .collect().map(r => (r.getInt(0), r.getDouble(1))).sortBy(_._1)
+      .collect().map(r => (r.getInt(0), r.getDouble(1))).sortBy(_._1).toSeq
     val floors = pmax.scanLeft(Double.NegativeInfinity) {
       case (acc, (_, m)) => math.max(acc, m)
     }.init
-    val floorDf = pmax.map(_._1).zip(floors).toSeq.toDF("__pid", "__floor")
+    val floor = typedLit(byPid(pmax.map(_._1).zip(floors), Double.NegativeInfinity))
+      .getItem(col("__pid"))
     val wPrev = org.apache.spark.sql.expressions.Window
       .partitionBy(col("__pid")).orderBy(col("x").desc)
       .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, -1)
-    val frontier = staged.join(broadcast(floorDf), Seq("__pid"))
+    val frontier = staged
       .withColumn("__prev",
         greatest(coalesce(max(col("ymax")).over(wPrev),
-          lit(Double.NegativeInfinity)), col("__floor")))
+          lit(Double.NegativeInfinity)), floor))
       .filter(col("ymax") > col("__prev"))
       .select(col("x").as("__fx"), col("ymax").as("__fy"))
     pts.join(broadcast(frontier),

@@ -16,4 +16,39 @@ trait SparkTestBase extends AnyFunSuite {
     .getOrCreate()
 
   def sf(dir: String = "sf0.001"): String = s"/root/testdata/$dir"
+
+  /** Runs `body` and returns its result with the descriptions of the
+    * Spark jobs it started ("null" where unset), for job-count guards.
+    * Jobs are told apart by a thread-local property; the listener bus is
+    * asynchronous but ordered, so once a later marker job's start is
+    * seen, every job of `body` has been counted. */
+  def jobsOf[T](body: => T): (T, Seq[String]) = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val tag = "graft.test.jobsOf"
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val marker = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).foreach { p =>
+          Option(p.getProperty(tag)).foreach {
+            case "body" => jobs.add(String.valueOf(p.getProperty("spark.job.description")))
+            case "marker" => marker.countDown()
+            case _ =>
+          }
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setLocalProperty(tag, "body")
+      val out = body
+      sc.setLocalProperty(tag, "marker")
+      sc.parallelize(Seq(1), 1).count()
+      assert(marker.await(60, java.util.concurrent.TimeUnit.SECONDS))
+      (out, jobs.toArray(Array.empty[String]).toSeq)
+    } finally {
+      sc.setLocalProperty(tag, null)
+      sc.removeSparkListener(listener)
+    }
+  }
 }

@@ -10,6 +10,14 @@ class RuleCompilerSpec extends SparkTestBase {
       .toDF("id", "amount", "state", "code")
   }
 
+  /** `mainDf` as a range-backed table: Catalyst cannot fold projections
+    * over it on the driver, so its plans and generated code are the ones
+    * a file-backed table gets. */
+  private def rangedMainDf = spark.range(1, 4).selectExpr("id",
+    "CASE id WHEN 1 THEN 1200D WHEN 2 THEN 800D ELSE 50D END AS amount",
+    "CASE id WHEN 2 THEN 'closed' ELSE 'open' END AS state",
+    "CASE id WHEN 1 THEN 10 WHEN 2 THEN 20 ELSE 99 END AS code")
+
   private def mapDf = {
     import spark.implicits._
     // duplicate key 10: last occurrence ("ten-v2") must win (main.py:168)
@@ -111,9 +119,9 @@ class RuleCompilerSpec extends SparkTestBase {
   }
 
   test("probe side of the pipeline stays shuffle-free (broadcast lookups)") {
-    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
-    import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, SortMergeJoinExec}
-    val r = RuleCompiler.run(mainDf, Seq(
+    import org.apache.spark.sql.execution.exchange.Exchange
+    import org.apache.spark.sql.execution.joins.BaseJoinExec
+    val r = RuleCompiler.run(rangedMainDf, Seq(
       DirectMap("id", "id"),
       Conditional("t", "(`amount` > 100)", "y", "n"),
       Lookup("label", "m", "code", "k", "v")), Map("m" -> mapDf))
@@ -121,16 +129,91 @@ class RuleCompilerSpec extends SparkTestBase {
     val plan = outer.collectFirst {
       case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec => a.executedPlan
     }.getOrElse(outer)
-    val joins = plan.collect { case j: BroadcastHashJoinExec => j }
-    assert(joins.nonEmpty, s"expected broadcast join in:\n$plan")
-    assert(plan.collect { case j: SortMergeJoinExec => j }.isEmpty)
-    // The fact-table (streamed) side must carry no shuffle; the only
-    // exchanges allowed are on the dimension side feeding the broadcast
-    // (the last-wins dedup groupBy over the tiny mapping).
-    joins.foreach { j =>
-      val streamedShuffles = j.left.collect { case s: ShuffleExchangeExec => s }
-      assert(streamedShuffles.isEmpty, s"shuffle on probe side:\n$plan")
+    // the lookup is a dictionary probe inside the projection: nothing
+    // of the mapping is left in the plan to join or to exchange
+    assert(plan.collect { case j: BaseJoinExec => j }.isEmpty, s"join in:\n$plan")
+    assert(plan.collect { case e: Exchange => e }.isEmpty, s"exchange in:\n$plan")
+    assert(plan.toString.contains("broadcast_dict_get"), s"no dictionary probe in:\n$plan")
+  }
+
+  test("lookup values keep the mapping column's type, a null value included") {
+    import spark.implicits._
+    // key 10's last row carries nulls: last wins, so 10 maps to null
+    val m = Seq[(Int, java.lang.Integer, java.lang.Double, String)](
+      (10, 1, 1.5, "a"), (20, 2, 2.5, "b"), (10, null, null, null)).toDF("k", "i", "d", "s")
+    val rules = Seq(DirectMap("id", "id"), Lookup("i", "m", "code", "k", "i"),
+      Lookup("d", "m", "code", "k", "d"), Lookup("s", "m", "code", "k", "s"))
+    // a local main table runs the interpreted eval, a ranged one the
+    // generated code
+    Seq("local" -> mainDf, "range" -> rangedMainDf).foreach { case (shape, main) =>
+      val r = RuleCompiler.run(main, rules, Map("m" -> m))
+      assert(r.errors.isEmpty)
+      assert(r.output.schema.map(f => f.name -> f.dataType.typeName) ===
+        Seq("id" -> "long", "i" -> "integer", "d" -> "double", "s" -> "string"))
+      val got = r.output.collect().map(x => x.getLong(0) -> x.toSeq.tail).toMap
+      assert(got === Map(1L -> Seq(null, null, null), 2L -> Seq(2, 2.5, "b"),
+        3L -> Seq(null, null, null)), shape)
     }
+  }
+
+  private def csvFile(dir: java.nio.file.Path, name: String, lines: Seq[String]): String = {
+    val p = dir.resolve(name)
+    java.nio.file.Files.writeString(p, lines.mkString("", "\n", "\n"))
+    p.toString
+  }
+
+  test("file-backed lookups: one job per mapping at run, one for preview, one for sink") {
+    val dir = java.nio.file.Files.createTempDirectory("rulecompiler-jobs")
+    val main = SmartLoad.load(spark, csvFile(dir, "main.csv", "id,code,state" +:
+      (1 to 300).map(i => s"$i,${i % 25},${if (i % 2 == 0) "open" else "closed"}")))
+    val maps = Map(
+      "m" -> SmartLoad.load(spark, csvFile(dir, "m.csv",
+        ("k,v" +: (1 to 20).map(i => s"$i,v$i")) :+ "3,v3-last")),
+      "s" -> SmartLoad.load(spark, csvFile(dir, "s.csv", Seq("s,abbr", "open,O", "closed,C"))))
+    val rules = Seq(DirectMap("id", "id"),
+      Lookup("label", "m", "code", "k", "v"), Lookup("st", "s", "state", "s", "abbr"))
+    val sc = spark.sparkContext
+    sc.setLocalProperty("spark.job.description", "caller")
+    val (r, runJobs) = jobsOf(RuleCompiler.run(main, rules, maps))
+    val restored = sc.getLocalProperty("spark.job.description")
+    sc.setLocalProperty("spark.job.description", null)
+    assert(restored === "caller")
+    assert(r.errors.isEmpty)
+    assert(runJobs.sorted ===
+      Seq("etl.RuleCompiler.lookup:m", "etl.RuleCompiler.lookup:s"), runJobs)
+    val (preview, previewJobs) = jobsOf(r.output.limit(100).collect())
+    assert(previewJobs.size === 1, previewJobs)
+    val byId = preview.map(x => x.getInt(0) -> (Option(x.getString(1)), x.getString(2))).toMap
+    assert(byId(3) === (Some("v3-last"), "C"))
+    assert(byId(4) === (Some("v4"), "O"))
+    assert(byId(21) === (None, "C"))
+    val out = dir.resolve("out.csv").toString
+    val (_, sinkJobs) = jobsOf(Sinks.csvSingleFile(r.output, out))
+    assert(sinkJobs.size === 1, sinkJobs)
+    assert(java.nio.file.Files.readAllLines(java.nio.file.Paths.get(out)).size === 301)
+  }
+
+  test("two Lookups on one mapping and columns build one dictionary") {
+    val (r, jobs) = jobsOf(RuleCompiler.run(mainDf, Seq(
+      Lookup("a", "m", "code", "k", "v"), Lookup("b", "m", "id", "k", "v")),
+      Map("m" -> mapDf)))
+    assert(r.errors.isEmpty)
+    assert(jobs.size === 1, jobs)
+    val got = r.output.collect().map(x => (Option(x.getString(0)), Option(x.getString(1)))).toSet
+    assert(got === Set((Some("ten-v2"), None), (Some("twenty"), None), (None, None)))
+  }
+
+  test("a mapping that cannot be read fails its Lookup only; the other rules run") {
+    val dir = java.nio.file.Files.createTempDirectory("rulecompiler-gone")
+    val path = csvFile(dir, "m.csv", Seq("k,v", "10,ten"))
+    val gone = SmartLoad.load(spark, path)
+    java.nio.file.Files.delete(java.nio.file.Paths.get(path))
+    val r = RuleCompiler.run(mainDf, Seq(DirectMap("id", "id"),
+      Lookup("label", "m", "code", "k", "v"), DirectMap("st", "state")), Map("m" -> gone))
+    assert(r.errors.map(_.rule.name) === Seq("label"))
+    assert(r.errors.head.message.contains("'m' could not be read"), r.errors.head.message)
+    assert(r.output.columns.toSeq === Seq("id", "st"))
+    assert(r.output.count() === 3)
   }
 
   test("broadcastLookups=false drops the forced hint (scaling-mapping path)") {

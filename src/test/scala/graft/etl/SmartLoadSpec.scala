@@ -30,6 +30,20 @@ class SmartLoadSpec extends SparkTestBase {
     assert(df.count() === 2)
   }
 
+  test("zero-byte .csv and .txt fail loud, as pandas' EmptyDataError") {
+    Seq("empty.csv", "empty.txt").foreach { name =>
+      val p = write(name, "")
+      val e = intercept[SmartLoad.EmptyDataException](SmartLoad.load(spark, p))
+      assert(e.path === p)
+    }
+  }
+
+  test("header-only .csv loads as an empty frame with its columns") {
+    val df = SmartLoad.load(spark, write("header.csv", "id,name\n"))
+    assert(df.columns.toSeq === Seq("id", "name"))
+    assert(df.count() === 0)
+  }
+
   test("json single-document array (pandas orientation, multiLine)") {
     val p = write("t.json", """[{"a": 1, "b": "x"}, {"a": 2, "b": "y"}]""")
     val df = SmartLoad.load(spark, p)

@@ -246,38 +246,15 @@ class DedupSpec extends SparkTestBase {
   test("components: one Spark job per round (job-count guard)") {
     import spark.implicits._
     val pairs = Seq((2L, 1L), (2L, 3L), (10L, 11L), (12L, 11L)).toDF("a_id", "b_id")
-    val sc = spark.sparkContext
-    val tag = "graft.test.componentsJobs"
-    val jobs = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
-    val marker = new java.util.concurrent.CountDownLatch(1)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        Option(e.properties).flatMap(p => Option(p.getProperty(tag))).foreach {
-          case "components" => jobs.add(e.jobId)
-          case "marker" => marker.countDown()
-          case _ =>
-        }
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setLocalProperty(tag, "components")
-      // maxRounds bounds the rounds; the graph needs 2 (one hook, one
-      // confirming round)
-      val maxRounds = 3
-      val got = Dedup.components(pairs, maxRounds = maxRounds).as[(Long, Long)].collect()
-      assert(got.length === 6)
-      // the listener bus is asynchronous but ordered: once a later
-      // job's start is seen, every components job has been counted
-      sc.setLocalProperty(tag, "marker")
-      sc.parallelize(Seq(1), 1).count()
-      assert(marker.await(60, java.util.concurrent.TimeUnit.SECONDS))
-      // edge count + one action per round + the caller's collect; a
-      // DataFrame round costs ~10 jobs (one per AQE stage) instead
-      assert(jobs.size <= maxRounds + 3, s"${jobs.size} jobs")
-    } finally {
-      sc.setLocalProperty(tag, null)
-      sc.removeSparkListener(listener)
-    }
+    // maxRounds bounds the rounds; the graph needs 2 (one hook, one
+    // confirming round)
+    val maxRounds = 3
+    val (got, jobs) =
+      jobsOf(Dedup.components(pairs, maxRounds = maxRounds).as[(Long, Long)].collect())
+    assert(got.length === 6)
+    // edge count + one action per round + the caller's collect; a
+    // DataFrame round costs ~10 jobs (one per AQE stage) instead
+    assert(jobs.size <= maxRounds + 3, s"${jobs.size} jobs")
   }
 
   test("determinism: same input, same signatures across runs") {

@@ -144,34 +144,7 @@ class CumBeforeByKeySpec extends SparkTestBase {
     val calib = Seq.fill(400)((100.0 + rnd.nextInt(200), 100.0))
       .toDF("pred", "actual")
     val test0 = (1L to 5L).map(i => (i, i.toDouble)).toDF("id", "pred")
-    val sc = spark.sparkContext
-    val tag = "graft.test.cumBeforeJobs"
-    def jobs(body: => Any): Int = {
-      val seen = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
-      val marker = new java.util.concurrent.CountDownLatch(1)
-      val listener = new org.apache.spark.scheduler.SparkListener {
-        override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-          Option(e.properties).flatMap(p => Option(p.getProperty(tag))).foreach {
-            case "op" => seen.add(e.jobId)
-            case "marker" => marker.countDown()
-            case _ =>
-          }
-      }
-      sc.addSparkListener(listener)
-      try {
-        sc.setLocalProperty(tag, "op")
-        body
-        // the listener bus is asynchronous but ordered: once a later
-        // job's start is seen, every operator job has been counted
-        sc.setLocalProperty(tag, "marker")
-        sc.parallelize(Seq(1), 1).count()
-        assert(marker.await(60, java.util.concurrent.TimeUnit.SECONDS))
-        seen.size
-      } finally {
-        sc.setLocalProperty(tag, null)
-        sc.removeSparkListener(listener)
-      }
-    }
+    def jobs(body: => Any): Int = jobsOf(body)._2.size
     val got = Seq(
       "ksDrift" -> jobs(DataQuality.ksDrift(ref, cur, "v").collect()),
       "w1Drift" -> jobs(DataQuality.w1Drift(ref, cur, "v").collect()),
