@@ -513,8 +513,8 @@ object GraftExtensions {
     }),
     //   graft_rfm(orders_view, id_col, date_col, amount_col, tiles)
     // RFM quantile segmentation — same plan as Relational.rfmSegments
-    // (the global-row-number range offsets are collected at analysis
-    // time, like the KS/W1 TVFs' partition offsets).
+    // (the rank path's partition offsets and row count are collected at
+    // analysis time, like the KS/W1 TVFs' partition offsets).
     //   graft_coverage(events_view, key_col, len_sec)
     // Interval-union uptime per key — same islands-sweep plan as
     // Events.coverage.

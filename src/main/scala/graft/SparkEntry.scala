@@ -4333,14 +4333,8 @@ object SparkEntry {
           .select(col("o_orderkey"), col("o_totalprice"))
         val replayDir = scratchDir("graft_drift_replay_").toFile
         Seq(0L, 3L, 6L).zipWithIndex.foreach { case (g, i) =>
-          val stage = scratchDir("graft_drift_stage_")
-          cur.filter(pmod(col("o_orderkey"), lit(9L)) === g)
-            .coalesce(1).write.mode("overwrite").parquet(stage.toString)
-          val part = stage.toFile.listFiles()
-            .find(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet"))
-            .getOrElse(sys.error(s"no part file under $stage"))
-          java.nio.file.Files.move(part.toPath,
-            new java.io.File(replayDir, f"cur_$i%02d.parquet").toPath)
+          stageSingleFile(cur.filter(pmod(col("o_orderkey"), lit(9L)) === g),
+            new java.io.File(replayDir, f"cur_$i%02d.parquet"))
         }
         val stateDir = scratchDir("graft_drift_state_").toString
         val ckpt = scratchDir("graft_drift_ckpt_").toString
@@ -4366,14 +4360,8 @@ object SparkEntry {
           .select(expr("doc_id div 2").as("pair_id"), col("text"))
         val replayDir = scratchDir("graft_cer_replay_").toFile
         parForeach(0 until 3) { g =>
-          val stage = scratchDir("graft_cer_stage_")
-          cand.filter(pmod(col("pair_id"), lit(3L)) === g)
-            .coalesce(1).write.mode("overwrite").parquet(stage.toString)
-          val part = stage.toFile.listFiles()
-            .find(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet"))
-            .getOrElse(sys.error(s"no part file under $stage"))
-          java.nio.file.Files.move(part.toPath,
-            new java.io.File(replayDir, f"cand_$g%02d.parquet").toPath)
+          stageSingleFile(cand.filter(pmod(col("pair_id"), lit(3L)) === g),
+            new java.io.File(replayDir, f"cand_$g%02d.parquet"))
         }
         val stateDir = scratchDir("graft_cer_state_").toString
         val ckpt = scratchDir("graft_cer_ckpt_").toString
@@ -4400,14 +4388,8 @@ object SparkEntry {
           .select(expr("doc_id div 2").as("pair_id"), col("text"))
         val replayDir = scratchDir("graft_bleu_replay_").toFile
         parForeach(0 until 3) { g =>
-          val stage = scratchDir("graft_bleu_stage_")
-          cand.filter(pmod(col("pair_id"), lit(3L)) === g)
-            .coalesce(1).write.mode("overwrite").parquet(stage.toString)
-          val part = stage.toFile.listFiles()
-            .find(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet"))
-            .getOrElse(sys.error(s"no part file under $stage"))
-          java.nio.file.Files.move(part.toPath,
-            new java.io.File(replayDir, f"cand_$g%02d.parquet").toPath)
+          stageSingleFile(cand.filter(pmod(col("pair_id"), lit(3L)) === g),
+            new java.io.File(replayDir, f"cand_$g%02d.parquet"))
         }
         val stateDir = scratchDir("graft_bleu_state_").toString
         val ckpt = scratchDir("graft_bleu_ckpt_").toString
@@ -4430,14 +4412,8 @@ object SparkEntry {
           .select(col("o_orderkey"), col("o_orderpriority"), col("o_orderstatus"))
         val replayDir = scratchDir("graft_assoc_replay_").toFile
         parForeach(0 until 3) { g =>
-          val stage = scratchDir("graft_assoc_stage_")
-          orders.filter(pmod(col("o_orderkey"), lit(3L)) === g)
-            .coalesce(1).write.mode("overwrite").parquet(stage.toString)
-          val part = stage.toFile.listFiles()
-            .find(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet"))
-            .getOrElse(sys.error(s"no part file under $stage"))
-          java.nio.file.Files.move(part.toPath,
-            new java.io.File(replayDir, f"tile_$g%02d.parquet").toPath)
+          stageSingleFile(orders.filter(pmod(col("o_orderkey"), lit(3L)) === g),
+            new java.io.File(replayDir, f"tile_$g%02d.parquet"))
         }
         val stateDir = scratchDir("graft_assoc_state_").toString
         val ckpt = scratchDir("graft_assoc_ckpt_").toString
@@ -4466,14 +4442,8 @@ object SparkEntry {
           graft.ext.Similarity.ivfCentroidState(emb, nCells = 8), centroidDir)
         val replayDir = scratchDir("graft_ivfg_replay_").toFile
         parForeach(0 until 3) { g =>
-          val stage = scratchDir("graft_ivfg_stage_")
-          emb.filter(pmod(col("vec_id"), lit(3L)) === g)
-            .coalesce(1).write.mode("overwrite").parquet(stage.toString)
-          val part = stage.toFile.listFiles()
-            .find(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet"))
-            .getOrElse(sys.error(s"no part file under $stage"))
-          java.nio.file.Files.move(part.toPath,
-            new java.io.File(replayDir, f"tile_$g%02d.parquet").toPath)
+          stageSingleFile(emb.filter(pmod(col("vec_id"), lit(3L)) === g),
+            new java.io.File(replayDir, f"tile_$g%02d.parquet"))
         }
         val stateDir = scratchDir("graft_ivfg_state_").toString
         val ckpt = scratchDir("graft_ivfg_ckpt_").toString
@@ -4546,14 +4516,8 @@ object SparkEntry {
         val calib = sc.filter(pmod(col("o_orderkey"), lit(3L)) === 0)
         val replayDir = scratchDir("graft_cqr_replay_").toFile
         parForeach(0 until 3) { g =>
-          val stage = scratchDir("graft_cqr_stage_")
-          calib.filter(pmod(col("o_orderkey"), lit(9L)) === g * 3L)
-            .coalesce(1).write.mode("overwrite").parquet(stage.toString)
-          val part = stage.toFile.listFiles()
-            .find(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet"))
-            .getOrElse(sys.error(s"no part file under $stage"))
-          java.nio.file.Files.move(part.toPath,
-            new java.io.File(replayDir, f"tile_$g%02d.parquet").toPath)
+          stageSingleFile(calib.filter(pmod(col("o_orderkey"), lit(9L)) === g * 3L),
+            new java.io.File(replayDir, f"tile_$g%02d.parquet"))
         }
         val stateDir = scratchDir("graft_cqr_state_").toString
         val ckpt = scratchDir("graft_cqr_ckpt_").toString
@@ -4578,14 +4542,8 @@ object SparkEntry {
         val live = o.filter(pmod(col("o_orderkey"), lit(3L)) === 1)
         val replayDir = scratchDir("graft_mw_replay_").toFile
         parForeach(0 until 3) { g =>
-          val stage = scratchDir("graft_mw_stage_")
-          live.filter(pmod(col("o_orderkey"), lit(9L)) === 3L * g + 1L)
-            .coalesce(1).write.mode("overwrite").parquet(stage.toString)
-          val part = stage.toFile.listFiles()
-            .find(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet"))
-            .getOrElse(sys.error(s"no part file under $stage"))
-          java.nio.file.Files.move(part.toPath,
-            new java.io.File(replayDir, f"tile_$g%02d.parquet").toPath)
+          stageSingleFile(live.filter(pmod(col("o_orderkey"), lit(9L)) === 3L * g + 1L),
+            new java.io.File(replayDir, f"tile_$g%02d.parquet"))
         }
         val stateDir = scratchDir("graft_mw_state_").toString
         val ckpt = scratchDir("graft_mw_ckpt_").toString
@@ -4613,14 +4571,8 @@ object SparkEntry {
         val calib = scored.filter(pmod(col("o_orderkey"), lit(3L)) === 0)
         val replayDir = scratchDir("graft_conf_replay_").toFile
         parForeach(0 until 3) { g =>
-          val stage = scratchDir("graft_conf_stage_")
-          calib.filter(pmod(col("o_orderkey"), lit(9L)) === g * 3L)
-            .coalesce(1).write.mode("overwrite").parquet(stage.toString)
-          val part = stage.toFile.listFiles()
-            .find(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet"))
-            .getOrElse(sys.error(s"no part file under $stage"))
-          java.nio.file.Files.move(part.toPath,
-            new java.io.File(replayDir, f"tile_$g%02d.parquet").toPath)
+          stageSingleFile(calib.filter(pmod(col("o_orderkey"), lit(9L)) === g * 3L),
+            new java.io.File(replayDir, f"tile_$g%02d.parquet"))
         }
         val stateDir = scratchDir("graft_conf_state_").toString
         val ckpt = scratchDir("graft_conf_ckpt_").toString
@@ -4646,14 +4598,8 @@ object SparkEntry {
           expr("CAST(unix_timestamp(o_orderdate) AS BIGINT) div 604800").as("order_week"))
         val replayDir = scratchDir("graft_tclg_replay_").toFile
         parForeach(0 until 3) { g =>
-          val stage = scratchDir("graft_tclg_stage_")
-          orders.filter(pmod(col("o_orderkey"), lit(3L)) === g)
-            .coalesce(1).write.mode("overwrite").parquet(stage.toString)
-          val part = stage.toFile.listFiles()
-            .find(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet"))
-            .getOrElse(sys.error(s"no part file under $stage"))
-          java.nio.file.Files.move(part.toPath,
-            new java.io.File(replayDir, f"tile_$g%02d.parquet").toPath)
+          stageSingleFile(orders.filter(pmod(col("o_orderkey"), lit(3L)) === g),
+            new java.io.File(replayDir, f"tile_$g%02d.parquet"))
         }
         val stateDir = scratchDir("graft_tclg_state_").toString
         val ckpt = scratchDir("graft_tclg_ckpt_").toString
@@ -4685,13 +4631,8 @@ object SparkEntry {
         val tiles = Seq(sec < cut1, sec >= cut1 && sec < cut2, sec >= cut2)
         val replayDir = scratchDir("graft_twap_replay_").toFile
         tiles.zipWithIndex.foreach { case (p, i) =>
-          val stage = scratchDir("graft_twap_stage_")
-          ev.filter(p).coalesce(1).write.mode("overwrite").parquet(stage.toString)
-          val part = stage.toFile.listFiles()
-            .find(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet"))
-            .getOrElse(sys.error(s"no part file under $stage"))
-          java.nio.file.Files.move(part.toPath,
-            new java.io.File(replayDir, f"tile_$i%02d.parquet").toPath)
+          stageSingleFile(ev.filter(p),
+            new java.io.File(replayDir, f"tile_$i%02d.parquet"))
         }
         val stateDir = scratchDir("graft_twap_state_").toString
         val ckpt = scratchDir("graft_twap_ckpt_").toString
@@ -4719,13 +4660,8 @@ object SparkEntry {
         val tiles = Seq(sec < cut1, sec >= cut1 && sec < cut2, sec >= cut2)
         val replayDir = scratchDir("graft_cov_replay_").toFile
         tiles.zipWithIndex.foreach { case (p, i) =>
-          val stage = scratchDir("graft_cov_stage_")
-          ev.filter(p).coalesce(1).write.mode("overwrite").parquet(stage.toString)
-          val part = stage.toFile.listFiles()
-            .find(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet"))
-            .getOrElse(sys.error(s"no part file under $stage"))
-          java.nio.file.Files.move(part.toPath,
-            new java.io.File(replayDir, f"tile_$i%02d.parquet").toPath)
+          stageSingleFile(ev.filter(p),
+            new java.io.File(replayDir, f"tile_$i%02d.parquet"))
         }
         val stateDir = scratchDir("graft_cov_state_").toString
         val ckpt = scratchDir("graft_cov_ckpt_").toString
@@ -5874,55 +5810,39 @@ object SparkEntry {
     * window: the global-window ntile the replay stagers used funneled
     * the whole frame through ONE reducer (Verify logged `WindowExec: No
     * Partition Defined ... Moving all data to a single partition` five
-    * times) — at 100 TB that staging sort is wall-serial. Here the sort
-    * is a parallel range exchange; each row's global rank is its
-    * partition-local record index (the low 33 bits of
-    * monotonically_increasing_id, which counts rows in the partition's
-    * sorted order — the projection sits above the sort and is
-    * nondeterministic, so Catalyst cannot reorder it below) plus a
-    * control-plane per-partition offset (numPartitions longs collected
-    * once); the tile is NTile's own arithmetic on that rank. Tile
-    * membership is bit-identical to the window form: every call site
-    * orders by a UNIQUE key, so rank — and therefore tile — is
-    * plan-independent. Returns the MATERIALIZED sorted frame with
-    * `__tile` attached via a broadcast of the offsets: the `parts`
-    * filtered single-file writes that consume it re-run only that
-    * broadcast join over checkpointed blocks. */
+    * times) — at 100 TB that staging sort is wall-serial. Here the tile
+    * is [[graft.ops.Relational.ntile]] over
+    * [[graft.ops.Relational.rowNumberByKey]]'s range-partitioned row
+    * number and its row count. Tile membership is bit-identical to the
+    * window form: every call site orders by a UNIQUE key, so rank — and
+    * therefore tile — is plan-independent. The range partitions are
+    * fenced, so the `parts` filtered writes that consume the result
+    * re-read them and number them with no exchange. */
   private def globalNtile(frame: DataFrame, parts: Int,
-      sortCols: Seq[org.apache.spark.sql.Column]): DataFrame = {
-    val spark = frame.sparkSession
-    import spark.implicits._
-    // LAZY fence: the per-partition counts collect right below is the
-    // action that materializes it (guide §5 — probe rides the fence; an
-    // eager fence here cost one extra job per staging call)
-    val staged = graft.ext.Materialize.lazyFence(
-      frame.repartitionByRange(sortCols: _*)
-        .sortWithinPartitions(sortCols: _*)
-        .withColumn("__mid", monotonically_increasing_id()))
-    val counts = staged
-      .groupBy(shiftrightunsigned(col("__mid"), 33).as("__pid")).count()
-      .collect().map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1)
-    val total = counts.map(_._2).sum
-    val offsets = counts.scanLeft(0L) { case (acc, (_, n)) => acc + n }.init
-    val offDf = counts.map(_._1).zip(offsets).toSeq.toDF("__pid", "__off")
-    // NTile's distribution over ranks 1..total: the first (total % parts)
-    // tiles take ceil(total/parts) rows, the rest floor(total/parts).
-    // q = 0 (fewer rows than tiles) folds into the first branch: every
-    // rank <= r and tile = rank, exactly the window form; the dead
-    // otherwise-branch divisor is clamped to keep ANSI div total.
-    val q = total / parts
-    val r = total % parts
-    val rank = col("__off") +
-      col("__mid").bitwiseAND(lit((1L << 33) - 1)) + lit(1L)
-    val tile = when(rank <= lit((q + 1) * r),
-        call_function("div", rank - 1, lit(q + 1)) + lit(1L))
-      .otherwise(lit(r) +
-        call_function("div", rank - 1 - lit((q + 1) * r), lit(math.max(q, 1L))) + lit(1L))
-    staged
-      .withColumn("__pid", shiftrightunsigned(col("__mid"), 33))
-      .join(broadcast(offDf), Seq("__pid"))
-      .withColumn("__tile", tile.cast("int"))
-      .select(frame.columns.map(col).toIndexedSeq :+ col("__tile"): _*)
+      sortCols: Seq[String]): DataFrame = {
+    val (ranked, total) = graft.ops.Relational.rowNumberByKey(frame, None, sortCols)
+    ranked.withColumn("__tile", graft.ops.Relational.ntile(col("row_num"), total, parts))
+      .drop("row_num")
+  }
+
+  /** The one parquet part file a write left under `dir`. Fails loud on
+    * none or several (e.g. under a session `maxRecordsPerFile`), where
+    * moving only the first would silently truncate the staged data. */
+  private[graft] def onlyPartFile(dir: java.io.File): java.io.File = {
+    val parts = dir.listFiles().filter(f =>
+      f.getName.startsWith("part-") && f.getName.endsWith(".parquet"))
+    require(parts.length == 1,
+      s"expected exactly one part file under $dir, got ${parts.length}")
+    parts.head
+  }
+
+  /** Writes `frame` as the single parquet file `dest`: one `coalesce(1)`
+    * write into a fresh scratch stage, whose [[onlyPartFile]] moves to
+    * `dest`. Callers that pin replay order set `dest`'s mtime after. */
+  private[graft] def stageSingleFile(frame: DataFrame, dest: java.io.File): Unit = {
+    val stage = scratchDir("graft_stage_").toFile
+    frame.coalesce(1).write.mode("overwrite").parquet(stage.toString)
+    java.nio.file.Files.move(onlyPartFile(stage).toPath, dest.toPath)
   }
 
   /** Stage the events fixture as `parts` single-file parquet writes in a
@@ -5945,7 +5865,7 @@ object SparkEntry {
       col("user_id"), col("event_type"), col("value"))
     // parallel-sort ntile, fenced once for the `parts` filtered write
     // consumers (guide §2.4 multi-consumer / §2 no single-reducer sort)
-    val tiled = globalNtile(ev, parts, Seq(col("ts"), col("event_id")))
+    val tiled = globalNtile(ev, parts, Seq("ts", "event_id"))
     val replay = scratchDir("graft_replay_")
     val base = System.currentTimeMillis() - (parts + 1) * 60000L
     // the `parts` tile writes are INDEPENDENT jobs over the fenced tiled
@@ -5954,14 +5874,8 @@ object SparkEntry {
     // replay sequence the mtimes pin is identical under concurrent
     // writes; wall cost is the max tile, not the sum (guide §2.6)
     concurrently(replayOrder.zipWithIndex.map { case (tile, pos) => () => {
-      val stage = scratchDir("graft_stage_")
-      tiled.filter(col("__tile") === tile).drop("__tile")
-        .coalesce(1).write.mode("overwrite").parquet(stage.toString)
-      val part = stage.toFile.listFiles()
-        .find(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet"))
-        .getOrElse(sys.error(s"no part file written under $stage"))
       val dest = new java.io.File(replay.toFile, f"events_$pos%02d.parquet")
-      java.nio.file.Files.move(part.toPath, dest.toPath)
+      stageSingleFile(tiled.filter(col("__tile") === tile).drop("__tile"), dest)
       require(dest.setLastModified(base + (pos + 1) * 60000L), s"cannot set mtime on $dest")
     }}: _*)
     (replay.toString, ev.schema)
@@ -5983,13 +5897,8 @@ object SparkEntry {
         case _ => lit(-1L)
       }).cast(f.dataType).as(f.name)
     }.toIndexedSeq: _*)
-    val stage = scratchDir("graft_stage_hb_")
-    hb.coalesce(1).write.mode("overwrite").parquet(stage.toString)
-    val part = stage.toFile.listFiles()
-      .find(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet"))
-      .getOrElse(sys.error(s"no part file written under $stage"))
     val dest = new java.io.File(replayDir, f"events_$pos%02d.parquet")
-    java.nio.file.Files.move(part.toPath, dest.toPath)
+    stageSingleFile(hb, dest)
     // strictly after every tile's mtime (tiles end at now - 60s)
     require(dest.setLastModified(System.currentTimeMillis()),
       s"cannot set mtime on $dest")
@@ -6016,24 +5925,13 @@ object SparkEntry {
       .sortWithinPartitions(col("__y"), col("o_orderkey"))
       .write.mode("overwrite").partitionBy("__y").parquet(stage.toString)
     stage.toFile.listFiles().filter(_.getName.startsWith("__y=")).foreach { d =>
-      // fail LOUD if the writer ever emits more than one file per year
-      // (e.g. a session maxRecordsPerFile): silently moving only the
-      // first part file would truncate the staged per-year data
-      val parts = d.listFiles().filter(f =>
-        f.getName.startsWith("part-") && f.getName.endsWith(".parquet"))
-      require(parts.length == 1,
-        s"expected exactly one part file under $d, got ${parts.length} — " +
-          "the per-year single-file layout contract is broken")
       val y = d.getName.stripPrefix("__y=")
-      java.nio.file.Files.move(parts.head.toPath,
+      java.nio.file.Files.move(onlyPartFile(d).toPath,
         new java.io.File(base, s"orders_y$y.parquet").toPath)
     }
     base
   }
 
-  /** Stages documents as `parts` mtime-ordered replay files tiled by
-    * NTILE over doc_id — the document-corpus analog of
-    * [[timeOrderedEventReplay]] for ingest-order streaming gates. */
   /** Shared corpus for the dHash rows: one 9×8 grayscale BMP per doc,
     * every pixel a pure function of doc_id — group id (doc_id div 20)
     * drives the whole frame, one center pixel carries the within-group
@@ -6079,45 +5977,36 @@ object SparkEntry {
     val keyCol = frame.columns.head
     // parallel-sort ntile, fenced for the `parts` filtered writes (see
     // timeOrderedEventReplay)
-    val tiled = globalNtile(frame, parts, Seq(col(keyCol)))
+    val tiled = globalNtile(frame, parts, Seq(keyCol))
     val replay = scratchDir("graft_frame_replay_")
     val base = System.currentTimeMillis() - (parts + 1) * 60000L
     // concurrent independent tile writes; mtimes are functions of the
     // tile index, so the pinned replay order is unchanged (see
     // timeOrderedEventReplay)
     parForeach(1 to parts) { tile =>
-      val stage = scratchDir("graft_frame_stage_")
-      tiled.filter(col("__tile") === tile).drop("__tile")
-        .coalesce(1).write.mode("overwrite").parquet(stage.toString)
-      val part = stage.toFile.listFiles()
-        .find(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet"))
-        .getOrElse(sys.error(s"no part file written under $stage"))
       val dest = new java.io.File(replay.toFile, f"tile_$tile%02d.parquet")
-      java.nio.file.Files.move(part.toPath, dest.toPath)
+      stageSingleFile(tiled.filter(col("__tile") === tile).drop("__tile"), dest)
       require(dest.setLastModified(base + tile * 60000L), s"cannot set mtime on $dest")
     }
     (replay.toString, frame.schema)
   }
 
+  /** Stages documents as `parts` mtime-ordered replay files tiled by
+    * NTILE over doc_id — the document-corpus analog of
+    * [[timeOrderedEventReplay]] for ingest-order streaming gates. */
   private def docReplay(s: SparkSession, dir: String,
       parts: Int): (String, org.apache.spark.sql.types.StructType) = {
     val d = Tables(s, dir, "documents").select("doc_id", "lang", "text")
     // parallel-sort ntile of the text payload, fenced for the `parts`
     // filtered writes (see timeOrderedEventReplay)
-    val tiled = globalNtile(d, parts, Seq(col("doc_id")))
+    val tiled = globalNtile(d, parts, Seq("doc_id"))
     val replay = scratchDir("graft_doc_replay_")
     val base = System.currentTimeMillis() - (parts + 1) * 60000L
     // concurrent independent tile writes; mtimes are functions of the
     // tile index (see timeOrderedEventReplay)
     parForeach(1 to parts) { tile =>
-      val stage = scratchDir("graft_doc_stage_")
-      tiled.filter(col("__tile") === tile).drop("__tile")
-        .coalesce(1).write.mode("overwrite").parquet(stage.toString)
-      val part = stage.toFile.listFiles()
-        .find(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet"))
-        .getOrElse(sys.error(s"no part file written under $stage"))
       val dest = new java.io.File(replay.toFile, f"docs_$tile%02d.parquet")
-      java.nio.file.Files.move(part.toPath, dest.toPath)
+      stageSingleFile(tiled.filter(col("__tile") === tile).drop("__tile"), dest)
       require(dest.setLastModified(base + tile * 60000L), s"cannot set mtime on $dest")
     }
     (replay.toString, d.schema)

@@ -378,50 +378,21 @@ object Curation {
     * assignment is a pure function of (stratum, id): re-running on
     * any engine or partitioning reproduces it row-for-row.
     *
-    * Scale shape: the per-stratum rank uses the
-    * [[graft.ops.Relational.globalRowNumber]] discipline GROUPED —
-    * range-repartition on (stratum, id) so each partition holds a
-    * contiguous slice of at most a couple of strata, rank locally
-    * per (partition, stratum) in parallel, and carry only the
-    * per-(partition, stratum) counts to the driver as broadcast
-    * offsets (~numPartitions rows — each range partition overlaps
-    * O(1) strata). Never a per-stratum single-reducer window, which
-    * is the cliff when strata are few and huge (5 languages × 20 TB).
+    * Scale shape: the per-stratum rank is
+    * [[graft.ops.Relational.rowNumberByKey]] grouped by stratum —
+    * range-partitioned on (stratum, id), ranked per (partition,
+    * stratum) in parallel, with each partition's carry for the one
+    * stratum it continues as a literal. Never a per-stratum
+    * single-reducer window, which is the cliff when strata are few and
+    * huge (5 languages × 20 TB).
     *
     * Output: input columns + `fold` (0..k-1). */
   def stratifiedKFold(df: DataFrame, strataCol: String, idCol: String,
-      k: Int, numPartitions: Int = 0): DataFrame = {
+      k: Int): DataFrame = {
     require(k > 1, s"k must be > 1, got $k")
-    val spark = df.sparkSession
-    import spark.implicits._
-    val parts = if (numPartitions > 0) numPartitions
-      else spark.conf.get("spark.sql.shuffle.partitions").toInt
-    val ranged = df.repartitionByRange(parts, col(strataCol), col(idCol))
-      .withColumn("__pid", spark_partition_id())
-    // LAZY fence: the control-plane collect right below materializes
-    // it (guide §5 — probe rides the fence)
-    val staged = Materialize.lazyFence(ranged)
-    // control plane: rows per (partition, stratum) -> per-stratum
-    // cumulative offsets in partition order
-    val counts = staged.groupBy(col("__pid"), col(strataCol).as("__st")).count()
-      .collect().map(r => (r.getInt(0), Option(r.get(1)).map(_.toString), r.getLong(2)))
-      .sortBy(_._1)
-    val offsets = scala.collection.mutable.Map.empty[Option[String], Long]
-    val offRows = counts.map { case (pid, st, n) =>
-      val off = offsets.getOrElse(st, 0L)
-      offsets(st) = off + n
-      (pid, st.orNull, off)
-    }.toSeq
-    val offDf = offRows.toDF("__opid", "__st", "__off")
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("__pid"), col(strataCol)).orderBy(col(idCol))
-    staged
-      .join(broadcast(offDf),
-        col("__pid") === col("__opid") &&
-          col(strataCol).cast("string") <=> col("__st"))
-      .withColumn("fold",
-        pmod(col("__off") + row_number().over(w).cast("long") - 1L, lit(k.toLong)))
-      .drop("__pid", "__opid", "__st", "__off")
+    graft.ops.Relational.rowNumberByKey(df, Some(strataCol), Seq(idCol))._1
+      .withColumn("fold", pmod(col("row_num") - 1L, lit(k.toLong)))
+      .drop("row_num")
   }
 
   /** DSIR-style importance selection (Xie et al. 2023, "Data Selection

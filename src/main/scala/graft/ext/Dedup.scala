@@ -1316,8 +1316,8 @@ object Dedup {
     *
     * Scale shape: the global sort rank uses
     * [[graft.ops.Relational.globalRowNumber]] (range-partitioned,
-    * control-plane offsets — no single-reducer window); each record
-    * then emits `window` (rank+i) probes via a zero-shuffle Expand,
+    * literal per-partition offsets — no single-reducer window); each
+    * record then emits `window` (rank+i) probes via a zero-shuffle Expand,
     * and candidates materialize through ONE equi-join on the rank —
     * shuffle keys are 8-byte longs, document prefixes ride only to
     * the verify. Verification is exact Levenshtein over `prefixLen`-

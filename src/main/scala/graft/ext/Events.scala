@@ -350,13 +350,13 @@ object Events {
     * sweep is decomposed per UTC day: within-day running sums window in
     * parallel (partitioned by day); cross-midnight sessions are carried
     * by a prefix sum over PER-DAY NET TOTALS, a frame with one row per
-    * day — control-plane-sized at any data scale, the globalRowNumber
-    * offsets idea applied to interval counting. Coincident sweep points
-    * are pre-summed per timestamp, so the running count is evaluated
-    * only after all deltas at an instant apply — order within an
-    * instant can't affect the max. Days with no sweep activity are
-    * omitted; a day's max includes its carry-in (the midnight count),
-    * which bounds any dip-only day from below. */
+    * day — control-plane-sized at any data scale, the
+    * Relational.rowNumberByKey carry idea applied to interval counting.
+    * Coincident sweep points are pre-summed per timestamp, so the
+    * running count is evaluated only after all deltas at an instant
+    * apply — order within an instant can't affect the max. Days with
+    * no sweep activity are omitted; a day's max includes its carry-in
+    * (the midnight count), which bounds any dip-only day from below. */
   def maxConcurrency(intervals: DataFrame, startSecCol: String,
       endSecCol: String): DataFrame = {
     val deltas = intervals.select(col(startSecCol).as("ts"), lit(1L).as("d"))

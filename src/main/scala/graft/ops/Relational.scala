@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession, functions}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -326,7 +326,7 @@ object Relational {
     require(buckets >= 2, s"need at least 2 buckets, got $buckets")
     val w = Window.partitionBy(groupCol).orderBy(col(valueCol).asc, col(tiebreakCol).asc)
     df.select(col(groupCol), col(valueCol), col(tiebreakCol))
-      .withColumn("bucket", ntile(buckets).over(w))
+      .withColumn("bucket", functions.ntile(buckets).over(w))
       .groupBy(col(groupCol), col("bucket"))
       .agg(count(lit(1)).as("n"),
         min(col(valueCol)).as("lo"), max(col(valueCol)).as("hi"))
@@ -428,7 +428,7 @@ object Relational {
       .orderBy(col("o_totalprice").desc, col("o_orderkey").asc)
     Tables(spark, dir, "orders")
       .select(col("o_custkey"), col("o_orderkey"), col("o_totalprice"),
-        ntile(4).over(w).as("quartile"),
+        functions.ntile(4).over(w).as("quartile"),
         percent_rank().over(w).as("pct_rank"),
         cume_dist().over(w).as("cdist"),
         lag(col("o_totalprice"), 1).over(w).as("prev_price"),
@@ -535,40 +535,102 @@ object Relational {
 
   /** Global dense row numbering by a TOTAL order, without the
     * single-reducer window: `ROW_NUMBER() OVER (ORDER BY ...)` forces
-    * every row through ONE partition — the classic scale cliff. Here:
-    * range-repartition on the sort key (sampled split points, the same
-    * machinery as a global sort), sort within partitions, then add each
-    * partition's cumulative row-count offset to a PARTITION-LOCAL row
-    * number. The only global coordination is the per-partition count
-    * array (numPartitions longs — control plane), so the plan scales
-    * exactly like a distributed sort.
+    * every row through ONE partition — the classic scale cliff. Runs
+    * [[rowNumberByKey]] ungrouped: range partitions on the sort key,
+    * partition-local row numbers plus literal per-partition offsets, so
+    * the plan scales exactly like a distributed sort.
     *
     * `sortCols` must be a total order (add a tiebreaker id) or ranks
     * within ties are partition-placement-dependent. Output: input
     * columns + `row_num` (1-based). */
-  def globalRowNumber(df: DataFrame, sortCols: Seq[String],
-      numPartitions: Int = 0): DataFrame = {
-    require(sortCols.nonEmpty, "globalRowNumber needs a sort order")
-    val spark = df.sparkSession
-    val parts = if (numPartitions > 0) numPartitions
-      else spark.conf.get("spark.sql.shuffle.partitions").toInt
-    val ranged = df.repartitionByRange(parts, sortCols.map(col): _*)
-      .withColumn("__pid", spark_partition_id())
-    // LAZY fence: the per-partition counts collect right below is the
-    // action that materializes it (guide §5 — probe rides the fence)
-    val staged = graft.ext.Materialize.lazyFence(ranged)
-    // control-plane: rows per range partition -> cumulative offsets
-    // (numPartitions longs)
-    val counts = staged.groupBy(col("__pid")).count()
-      .collect().map(r => (r.getInt(0), r.getLong(1))).sortBy(_._1).toSeq
-    val offsets = counts.scanLeft(0L) { case (acc, (_, n)) => acc + n }.init
-    // local row number: window partitioned by __pid — every partition
-    // ranks in parallel (balanced exchange on pid, never one reducer)
-    val w = Window.partitionBy(col("__pid")).orderBy(sortCols.map(col): _*)
-    staged
-      .withColumn("row_num", row_number().over(w).cast("long") +
-        typedLit(byPid(counts.map(_._1).zip(offsets), 0L)).getItem(col("__pid")))
-      .drop("__pid")
+  def globalRowNumber(df: DataFrame, sortCols: Seq[String]): DataFrame =
+    rowNumberByKey(df, None, sortCols)._1
+
+  /** The range-partitioned rank path behind [[globalRowNumber]], the
+    * NTILE scorers and the stratified folds: `row_num` (1-based) by
+    * `sortCols` within `groupCol` (over the whole frame when None), as
+    * `ROW_NUMBER() OVER (PARTITION BY group ORDER BY sortCols)` would
+    * number it, but with no single-reducer window even when one group
+    * holds every row. The frame is range-partitioned on (group,
+    * sortCols) ([[rangeStage]]); each range partition numbers its rows
+    * locally in parallel — per group by a `row_number()` window over
+    * (partition, group), ungrouped by the row's position in its sorted
+    * partition, which needs no second exchange — and the driver collects
+    * the rows per (partition, group), the action that materializes the
+    * fence, and turns them into carries. Since range partitions are
+    * ordered on (group, sortCols), only a partition's FIRST group can
+    * have rows in earlier partitions, so one (group value, carry) pair
+    * per partition suffices; both travel as literal arrays indexed by
+    * `__pid`, the value compared with `<=>` so a null group carries
+    * too. Ungrouped, the carry is the partition's offset and applies to
+    * every row.
+    * Returns the frame with the row count, which the driver holds
+    * anyway — the NTILE split needs it as a literal. */
+  private[graft] def rowNumberByKey(df: DataFrame, groupCol: Option[String],
+      sortCols: Seq[String]): (DataFrame, Long) = {
+    require(sortCols.nonEmpty, "a row number needs a sort order")
+    val keys = groupCol.toSeq.map(col)
+    val staged = rangeStage(df, keys ++ sortCols.map(col))
+    // control plane: rows per (range partition, group), partition order
+    val counts = staged.groupBy(col("__pid") +: keys: _*).count()
+      .collect().map(r => (r.getInt(0),
+        if (keys.isEmpty) None else Option(r.get(1)), r.getLong(r.length - 1)))
+      .sortBy(_._1).toSeq
+    // pid -> (group, its rows in earlier partitions), for the one group
+    // per partition that has any
+    val seen = scala.collection.mutable.Map.empty[Option[Any], Long].withDefaultValue(0L)
+    val carried = counts.flatMap { case (pid, g, n) =>
+      val before = seen(g)
+      seen(g) = before + n
+      if (before > 0) Some(pid -> (g, before)) else None
+    }.toMap
+    val pids = counts.map(_._1).distinct
+    val carry = typedLit(byPid(pids.map(p => p -> carried.get(p).fold(0L)(_._2)), 0L))
+      .getItem(col("__pid"))
+    val numbered = groupCol match {
+      // a row's position in its sorted range partition is the low 33
+      // bits of monotonically_increasing_id (nondeterministic, so
+      // Catalyst keeps the projection above the sort): narrow, with no
+      // exchange on __pid
+      case None => staged.sortWithinPartitions(sortCols.map(col): _*)
+        .withColumn("row_num",
+          monotonically_increasing_id().bitwiseAND(lit((1L << 33) - 1)) + 1L + carry)
+      case Some(g) =>
+        val t = df.schema(g).dataType
+        val first = array(byPid(pids.map(p => p -> carried.get(p).flatMap(_._1).orNull),
+          null).map(lit(_).cast(t)): _*)
+        staged.withColumn("row_num", row_number().over(Window.partitionBy(col("__pid"), col(g))
+            .orderBy(sortCols.map(col): _*)).cast("long") +
+          when(col(g) <=> first.getItem(col("__pid")), carry).otherwise(0L))
+    }
+    (numbered.drop("__pid"), counts.map(_._3).sum)
+  }
+
+  /** SQL-standard NTILE(`tiles`) of a 1-based row number over `total`
+    * rows: with q = total div tiles and r = total mod tiles, the first r
+    * tiles take q+1 rows and the rest q. Both are literals, so the
+    * split costs no count join. q = 0 (fewer rows than tiles) folds
+    * into the first branch: every rowNum <= r and tile = rowNum, exactly
+    * the window form; the dead branch's divisor is clamped to keep ANSI
+    * div total. */
+  private[graft] def ntile(rowNum: Column, total: Long, tiles: Int): Column = {
+    val q = total / tiles
+    val r = total % tiles
+    when(rowNum <= lit((q + 1) * r),
+        call_function("div", rowNum - 1L, lit(q + 1)) + 1L)
+      .otherwise(lit(r) +
+        call_function("div", rowNum - 1L - lit((q + 1) * r), lit(math.max(q, 1L))) + 1L)
+  }
+
+  /** Range-partitions `frame` on `order` into `spark.sql.shuffle.partitions`
+    * partitions, tags each row with its range partition as `__pid`, and
+    * fences the result LAZILY: the caller's per-partition control-plane
+    * collect is the action that materializes it, so the fence costs no
+    * job of its own. */
+  private def rangeStage(frame: DataFrame, order: Seq[Column]): DataFrame = {
+    val parts = frame.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
+    graft.ext.Materialize.lazyFence(frame.repartitionByRange(parts, order: _*)
+      .withColumn("__pid", spark_partition_id()))
   }
 
   /** Per-range-partition values as a literal array indexed by `__pid`,
@@ -612,8 +674,6 @@ object Relational {
   private[graft] def cumBeforeByKey(frame: DataFrame, keyCol: String,
       cntCols: Seq[String]): (DataFrame, IndexedSeq[Long]) = {
     require(cntCols.nonEmpty, "cumBeforeByKey needs count columns")
-    val spark = frame.sparkSession
-    val parts = spark.conf.get("spark.sql.shuffle.partitions").toInt
     // fence the histogram BEFORE the range exchange: the range
     // partitioner's bounds-sampling job executes its whole child, so an
     // unfenced frame re-runs the caller's scan + aggregation once for
@@ -625,9 +685,7 @@ object Relational {
     // per-partition-subtotals collect right below is the action that
     // materializes it (guide §5 — probe rides the fence).
     val cells = graft.ext.Materialize.lazyFence(frame)
-    val ranged = cells.repartitionByRange(parts, col(keyCol))
-      .withColumn("__pid", spark_partition_id())
-    val staged = graft.ext.Materialize.lazyFence(ranged)
+    val staged = rangeStage(cells, Seq(col(keyCol)))
     val aggs = cntCols.map(c => sum(col(c)).as(c)) :+ max(col(keyCol))
     // one row per NON-EMPTY range partition: (pid, subtotals, max key)
     val ptot = staged.groupBy("__pid").agg(aggs.head, aggs.tail: _*)
@@ -683,27 +741,6 @@ object Relational {
         col("__t._2").as(idCol), col("__t._1").as(scoreCol))
   }
 
-  /** Per-group Gini concentration coefficient in EXACT integer
-    * arithmetic — the standard inequality/concentration measure
-    * (how concentrated is revenue across customers within a nation?).
-    * Values are quantized to integer units (`scale` per 1.0) and the
-    * sorted-rank identity used:
-    *
-    *   G = (2·Σᵢ i·xᵢ − (n+1)·Σx) / (n·Σx),  x sorted ascending
-    *
-    * `gini_micro` = ⌊G·10^6⌋ by integer division in decimal(38,0) —
-    * no float touches the statistic. Rank ties are harmless: equal
-    * values commute in Σ i·xᵢ, so the output is a pure function of
-    * the data even though ROW_NUMBER breaks ties arbitrarily.
-    * Negative quantized values are excluded (Gini is defined over
-    * non-negative amounts), as are groups with zero total.
-    *
-    * Output: one row per group — (group cols…, n, sum_q, gini_micro).
-    * Plan: one shuffle on the group key, per-group window ranking in
-    * parallel across groups, one grouped aggregation. Ranking cost is
-    * a per-group sort — fine while groups are plentiful relative to
-    * executors; for a handful of giant groups, range-partition the
-    * cumulative like [[globalRowNumber]] instead. */
   /** 2D skyline (Pareto-maxima frontier): the points no other point
     * dominates, where p dominates q iff p.x ≥ q.x ∧ p.y ≥ q.y with at
     * least one strict — the "biggest AND most expensive" frontier
@@ -712,29 +749,22 @@ object Relational {
     * then a point survives iff its y STRICTLY exceeds every y at
     * strictly greater x — a running max over x descending.
     *
-    * Scale shape: the running max uses the [[globalRowNumber]]
-    * discipline — per-x maxima range-partition on x descending,
+    * Scale shape: the running max shares [[rangeStage]] with
+    * [[rowNumberByKey]] — per-x maxima range-partition on x descending,
     * per-partition prefix maxima run in parallel, and only each
     * partition's maximum travels to the driver to become the next
     * partitions' floor, a literal indexed by range partition. Never a
-    * single-reducer window, and never a pair join. A final equi-join back to the input counts the
-    * rows sitting exactly on each frontier point.
+    * single-reducer window, and never a pair join. A final equi-join
+    * back to the input counts the rows sitting exactly on each
+    * frontier point.
     *
     * Output: frontier points — (x, y, n), x ascending ⇒ y strictly
     * descending. */
-  def skylineMax2D(df: DataFrame, xCol: String, yCol: String,
-      numPartitions: Int = 0): DataFrame = {
-    val spark = df.sparkSession
+  def skylineMax2D(df: DataFrame, xCol: String, yCol: String): DataFrame = {
     val pts = df.filter(col(xCol).isNotNull && col(yCol).isNotNull)
       .select(col(xCol).as("x"), col(yCol).cast("double").as("y"))
     val perX = pts.groupBy("x").agg(max("y").as("ymax"))
-    val parts = if (numPartitions > 0) numPartitions
-      else spark.conf.get("spark.sql.shuffle.partitions").toInt
-    val ranged = perX.repartitionByRange(parts, col("x").desc)
-      .withColumn("__pid", spark_partition_id())
-    // LAZY fence: the control-plane collect right below materializes
-    // it (guide §5 — probe rides the fence)
-    val staged = graft.ext.Materialize.lazyFence(ranged)
+    val staged = rangeStage(perX, Seq(col("x").desc))
     // control plane: per-partition max -> prefix floor for later pids
     // (pid 0 holds the largest x under the descending range order)
     val pmax = staged.groupBy("__pid").agg(max("ymax").as("m"))
@@ -760,6 +790,27 @@ object Relational {
       .select(col("__fx").as("x"), col("__fy").as("y"), col("n"))
   }
 
+  /** Per-group Gini concentration coefficient in EXACT integer
+    * arithmetic — the standard inequality/concentration measure
+    * (how concentrated is revenue across customers within a nation?).
+    * Values are quantized to integer units (`scale` per 1.0) and the
+    * sorted-rank identity used:
+    *
+    *   G = (2·Σᵢ i·xᵢ − (n+1)·Σx) / (n·Σx),  x sorted ascending
+    *
+    * `gini_micro` = ⌊G·10^6⌋ by integer division in decimal(38,0) —
+    * no float touches the statistic. Rank ties are harmless: equal
+    * values commute in Σ i·xᵢ, so the output is a pure function of
+    * the data even though ROW_NUMBER breaks ties arbitrarily.
+    * Negative quantized values are excluded (Gini is defined over
+    * non-negative amounts), as are groups with zero total.
+    *
+    * Output: one row per group — (group cols…, n, sum_q, gini_micro).
+    * Plan: one shuffle on the group key, per-group window ranking in
+    * parallel across groups, one grouped aggregation. Ranking cost is
+    * a per-group sort — fine while groups are plentiful relative to
+    * executors; for a handful of giant groups, range-partition the
+    * cumulative like [[globalRowNumber]] instead. */
   def giniPerGroup(df: DataFrame, groupCols: Seq[String], valueCol: String,
       scale: Long = 100L): DataFrame = {
     require(groupCols.nonEmpty, "giniPerGroup needs grouping columns")
@@ -831,10 +882,10 @@ object Relational {
     * dimension is `tiles`-quantile-scored over the TOTAL order
     * (metric, entity id), so ties are deterministic in any engine, and
     * recency is reversed (most recent scores highest). The quantile
-    * index is computed from [[globalRowNumber]] + the SQL-standard
-    * NTILE split (first n mod k tiles take the extra row) instead of a
-    * single-partition window — the entity frame range-partitions and
-    * ranks in parallel, so the op survives a billion-entity table.
+    * index is [[ntile]] over [[rowNumberByKey]]'s row number and its
+    * row count, a literal — instead of a single-partition window, the
+    * entity frame range-partitions and ranks in parallel, so the op
+    * survives a billion-entity table.
     * Output: (id, recency_days, n_orders, cents, r, f, m, rfm). */
   def rfmSegments(orders: DataFrame, idCol: String, dateCol: String,
       amountCol: String, tiles: Int = 5): DataFrame = {
@@ -848,21 +899,10 @@ object Relational {
       .withColumn("recency_days", datediff(col("__mx"), col("__last")).cast("long"))
       .drop("__mx", "__last")
       .withColumn("__neg_rec", -col("recency_days"))
-    val tot = broadcast(per.agg(count(lit(1)).cast("long").as("__n")))
-    // SQL-standard NTILE from a 0-based global row index: q = n div k,
-    // r = n mod k; the first r tiles carry q+1 rows
-    def tile(idx: org.apache.spark.sql.Column) = {
-      val q = call_function("div", col("__n"), lit(tiles.toLong))
-      val r = pmod(col("__n"), lit(tiles.toLong))
-      when(idx < r * (q + 1L), call_function("div", idx, q + 1L) + 1L)
-        .otherwise(r + call_function("div", idx - r * (q + 1L),
-          when(q > 0L, q).otherwise(lit(1L))) + 1L)
+    def addTile(df: DataFrame, sortCols: Seq[String], out: String): DataFrame = {
+      val (ranked, n) = rowNumberByKey(df, None, sortCols)
+      ranked.withColumn(out, ntile(col("row_num"), n, tiles)).drop("row_num")
     }
-    def addTile(df: DataFrame, sortCols: Seq[String], out: String): DataFrame =
-      globalRowNumber(df, sortCols)
-        .crossJoin(tot)
-        .withColumn(out, tile(col("row_num") - 1L))
-        .drop("row_num", "__n")
     val scored = addTile(addTile(addTile(per,
       Seq("__neg_rec", idCol), "r"),
       Seq("n_orders", idCol), "f"),

@@ -72,7 +72,7 @@ class PlanAuditSpec extends SparkTestBase {
     "events_survival_incremental", // same curve face over merged stored state
     "events_survival_sql",    // same plan through the TVF face
     "q_assoc_rules",          // one-row basket-count frame x scored rules
-    "q_rfm",                  // one-row max-date + entity-count frames x tiles
+    "q_rfm",                  // one-row max-date frame x entities
     "q_rfm_sql",              // same plan through the TVF face
     "dq_js_drift",            // one-row totals frame x bins-sized spine
     "dq_js_incremental",      // same JS face over merged stored state

@@ -17,6 +17,15 @@ trait SparkTestBase extends AnyFunSuite {
 
   def sf(dir: String = "sf0.001"): String = s"/root/testdata/$dir"
 
+  /** Runs `body` with `spark.sql.shuffle.partitions` set to `n` — the
+    * range-partition count of the rank and cumulative helpers — and
+    * restores the previous value afterwards, also when `body` throws. */
+  def withShufflePartitions[T](n: Int)(body: => T): T = {
+    val prev = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", n.toString)
+    try body finally spark.conf.set("spark.sql.shuffle.partitions", prev)
+  }
+
   /** Runs `body` and returns its result with the descriptions of the
     * Spark jobs it started ("null" where unset), for job-count guards.
     * Jobs are told apart by a thread-local property; the listener bus is

@@ -503,15 +503,26 @@ class CurationSpec extends SparkTestBase {
     // force many range partitions so a stratum spans several: the
     // control-plane offsets must keep ranks contiguous across them
     val rows = (1L to 500L).map(i => (if (i % 2 == 0) "a" else "b", i))
-    val out = Curation.stratifiedKFold(rows.toDF("lang", "id"), "lang", "id",
-        k = 4, numPartitions = 8)
-      .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
+    val out = withShufflePartitions(8)(Curation.stratifiedKFold(rows.toDF("lang", "id"),
+        "lang", "id", k = 4).collect())
+      .map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
     for ((lang, id, fold) <- out) {
       val rank = rows.filter(_._1 == lang).map(_._2).sorted.indexOf(id) + 1
       assert(fold === (rank - 1) % 4, s"($lang, $id)")
     }
     val sizes = out.groupBy(t => (t._1, t._3)).view.mapValues(_.size).values
     assert(sizes.max - sizes.min <= 1)
+  }
+
+  test("stratifiedKFold: job count of build + collect") {
+    import spark.implicits._
+    val rows = (1L to 200L).map(i => (if (i % 3 == 0) "a" else "b", i))
+    val (got, jobs) = jobsOf(
+      Curation.stratifiedKFold(rows.toDF("lang", "id"), "lang", "id", k = 4).collect())
+    assert(got.length === 200)
+    // globalRowNumber's 5 (GlobalRowNumberSpec) plus the exchange of
+    // the grouped row_number window
+    assert(jobs.size === 6, jobs.mkString(", "))
   }
 
   test("stratifiedKFold fails loud on k < 2") {

@@ -102,17 +102,14 @@ class CumBeforeByKeySpec extends SparkTestBase {
     val rows = (1L to 300L).map(i => (i * 7 % 101, 1L)).groupBy(_._1)
       .map { case (k, g) => (k, g.map(_._2).sum) }.toSeq
     def run(parts: String, data: Seq[(Long, Long)])
-        : (Map[Long, (Long, Long, Option[Long])], Seq[Long]) = {
-      val prev = spark.conf.get("spark.sql.shuffle.partitions")
-      spark.conf.set("spark.sql.shuffle.partitions", parts)
-      try {
+        : (Map[Long, (Long, Long, Option[Long])], Seq[Long]) =
+      withShufflePartitions(parts.toInt) {
         val (cum, totals) =
           Relational.cumBeforeByKey(data.toDF("k", "a"), "k", Seq("a"))
         (cum.collect().map(r => r.getAs[Long]("k") ->
           (r.getAs[Long]("__cumb_a"), r.getAs[Long]("__tot_a"), prevOf(r)))
           .toMap, totals)
-      } finally spark.conf.set("spark.sql.shuffle.partitions", prev)
-    }
+      }
     val want = reference(rows.map { case (k, a) => (k, a, 0L) })
     val wantPrev = prevReference(rows.map(_._1))
     val r1 = run("1", rows)

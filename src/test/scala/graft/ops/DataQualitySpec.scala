@@ -348,10 +348,8 @@ class DataQualitySpec extends SparkTestBase {
     val rnd = new scala.util.Random(31)
     val refV = Seq.fill(400)(rnd.nextInt(60).toDouble)
     val curV = Seq.fill(300)((rnd.nextInt(60) + rnd.nextInt(10)).toDouble)
-    val prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "7")
-    val got = try DataQuality.ksDrift(refV.toDF("v"), curV.toDF("v"), "v").head()
-      finally spark.conf.set("spark.sql.shuffle.partitions", prev)
+    val got = withShufflePartitions(7)(
+      DataQuality.ksDrift(refV.toDF("v"), curV.toDF("v"), "v").head())
     val values = (refV ++ curV).distinct.sorted
     val want = values.map { x =>
       val cr = refV.count(_ <= x).toLong

@@ -54,8 +54,8 @@ class OrderingPropertySpec extends SparkTestBase {
       // equal keys straddle range-partition boundaries by construction
       val rows = (0 until 500).map(i => (rnd.nextInt(8).toLong, i.toLong))
       val df = rows.toDF("k", "id").repartition(9)
-      val out = Relational.globalRowNumber(df, sortCols = Seq("k"), numPartitions = 5)
-        .collect().map(r => (r.getLong(0), r.getLong(2))) // (k, row_num)
+      val out = withShufflePartitions(5)(Relational.globalRowNumber(df, sortCols = Seq("k"))
+        .collect()).map(r => (r.getLong(0), r.getLong(2))) // (k, row_num)
       val nums = out.map(_._2).sorted
       assert(nums.toSeq === (1L to 500L), s"scenario $scenario: not a permutation")
       // order-respecting: ascending row numbers never descend in key
@@ -64,10 +64,10 @@ class OrderingPropertySpec extends SparkTestBase {
         s"scenario $scenario: row numbers violate the sort order")
       // fully deterministic variant: a unique tiebreak column makes the
       // assignment a pure function of the data
-      val a = Relational.globalRowNumber(df, Seq("k", "id"), numPartitions = 5)
-        .collect().map(r => (r.getLong(1), r.getLong(2))).toSet
-      val b = Relational.globalRowNumber(df.repartition(3), Seq("k", "id"), numPartitions = 7)
-        .collect().map(r => (r.getLong(1), r.getLong(2))).toSet
+      val a = withShufflePartitions(5)(Relational.globalRowNumber(df, Seq("k", "id"))
+        .collect()).map(r => (r.getLong(1), r.getLong(2))).toSet
+      val b = withShufflePartitions(7)(Relational.globalRowNumber(df.repartition(3), Seq("k", "id"))
+        .collect()).map(r => (r.getLong(1), r.getLong(2))).toSet
       assert(a === b, s"scenario $scenario: unique-key numbering not partitioning-independent")
     }
   }

@@ -74,6 +74,16 @@ class RfmCooccurSpec extends SparkTestBase {
     }
   }
 
+  test("rfmSegments: job count of build + collect") {
+    val orders = (1 to 60).map(i => ((i % 23).toLong, ts(1 + i % 28), i * 10.0))
+      .toDF("cust", "dt", "amt")
+    val (got, jobs) = jobsOf(
+      Relational.rfmSegments(orders, "cust", "dt", "amt", tiles = 5).collect())
+    assert(got.length === 23)
+    // three chained rank paths, their row counts read as literals
+    assert(jobs.size === 16, jobs.mkString(", "))
+  }
+
   test("conversionSurvival: hand-checkable KM curve with event + censor mix") {
     def at(day: Int): java.sql.Timestamp =
       new java.sql.Timestamp(

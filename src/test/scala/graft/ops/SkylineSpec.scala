@@ -12,9 +12,9 @@ class SkylineSpec extends SparkTestBase {
       .map { case (p, g) => (p._1, p._2, g.size.toLong) }.toSet
   }
 
-  private def run(pts: Seq[(Int, Double)], parts: Int = 0) =
-    Relational.skylineMax2D(pts.toDF("x", "y"), "x", "y", parts)
-      .collect().map(r => (r.getInt(0), r.getDouble(1), r.getLong(2))).toSet
+  private def run(pts: Seq[(Int, Double)], parts: Int = 4) =
+    withShufflePartitions(parts)(Relational.skylineMax2D(pts.toDF("x", "y"), "x", "y")
+      .collect()).map(r => (r.getInt(0), r.getDouble(1), r.getLong(2))).toSet
 
   test("hand case: dominated points drop, ties on the frontier both count") {
     val pts = Seq((1, 9.0), (2, 9.0), (3, 5.0), (3, 5.0), (2, 1.0), (1, 10.0))
