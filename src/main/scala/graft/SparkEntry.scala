@@ -1515,15 +1515,7 @@ object SparkEntry {
       // the fixpoint are the identity. maxRounds matches the oracle's
       // unroll bound so depth growth past it fails LOUD here instead of
       // silently diverging from the 8-round oracle.
-      val li = Tables(s, dir, "lineitem")
-        .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk"))
-      val edges = li.select(col("ok"), col("pk").as("u"))
-        .join(li.select(col("ok"), col("pk").as("v")), Seq("ok"))
-        .filter(col("u") < col("v"))
-        .groupBy(col("u"), col("v"))
-        .agg(count_distinct(col("ok")).as("w"))
-        .filter(col("w") >= 2).select(col("u"), col("v"))
-      graft.ops.Graph.kCore(edges, k = 2, maxRounds = 8)
+      graft.ops.Graph.kCore(repeatPartPairs(s, dir), k = 2, maxRounds = 8)
     },
     "graph_lpa" -> { (s, dir) =>
       // Deterministic synchronous label propagation (3 rounds, min-tie)
@@ -1531,15 +1523,7 @@ object SparkEntry {
       // communities of parts repeatedly bought together. The fixed
       // round count makes the result a pure function of the edges, so
       // the oracle unrolls the identical rounds as chained CTEs.
-      val li = Tables(s, dir, "lineitem")
-        .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk"))
-      val edges = li.select(col("ok"), col("pk").as("u"))
-        .join(li.select(col("ok"), col("pk").as("v")), Seq("ok"))
-        .filter(col("u") < col("v"))
-        .groupBy(col("u"), col("v"))
-        .agg(count_distinct(col("ok")).as("w"))
-        .filter(col("w") >= 2).select(col("u"), col("v"))
-      graft.ops.Graph.labelPropagation(edges, rounds = 3)
+      graft.ops.Graph.labelPropagation(repeatPartPairs(s, dir), rounds = 3)
     },
     "graph_sssp" -> { (s, dir) =>
       // 3-round weighted SSSP from part 0 over the co-occurrence graph
@@ -2226,13 +2210,7 @@ object SparkEntry {
       // hyperplanes make recall deterministic — pinned by this row at
       // both scale factors. Output is the id pairs only; cosines stay
       // engine-local.
-      val e = Tables(s, dir, "embeddings")
-      val planted = e.filter(pmod(col("vec_id"), lit(40L)) === 0)
-        .select((col("vec_id") + lit(100000L)).as("vec_id"),
-          concat(array((element_at(col("embedding"), 1) + lit(0.1)).cast("float")),
-            slice(col("embedding"), 2, 63)).as("embedding"))
-      val all = e.select("vec_id", "embedding").unionByName(planted)
-      Dedup.embeddingCosine(all, threshold = 0.9).select("a_id", "b_id")
+      Dedup.embeddingCosine(plantedTwins(s, dir), threshold = 0.9).select("a_id", "b_id")
     },
     "dedup_semdedup_exact" -> { (s, dir) =>
       // SemDeDup keep/discard decisions, exact face (nCells=1 — every
@@ -2240,13 +2218,7 @@ object SparkEntry {
       // dedup_semantic, so the 0.9-pair graph is exactly the isolated
       // base↔twin pairs and the oracle can replay clusters + the
       // lowest-id keep rule in plain SQL. One row per clustered doc.
-      val e = Tables(s, dir, "embeddings")
-      val planted = e.filter(pmod(col("vec_id"), lit(40L)) === 0)
-        .select((col("vec_id") + lit(100000L)).as("vec_id"),
-          concat(array((element_at(col("embedding"), 1) + lit(0.1)).cast("float")),
-            slice(col("embedding"), 2, 63)).as("embedding"))
-      val all = e.select("vec_id", "embedding").unionByName(planted)
-      Dedup.semdedup(all, threshold = 0.9, nCells = 1, keepLowestId = true)
+      Dedup.semdedup(plantedTwins(s, dir), threshold = 0.9, nCells = 1, keepLowestId = true)
     },
     "dedup_semdedup" -> { (s, dir) =>
       // The clustered scale path: √N K-Means cells bound the pairwise
@@ -2254,13 +2226,7 @@ object SparkEntry {
       // discard surface matches the exact face on this fixture; the
       // formal pin is SemDedupSpec's never-over-discard + recall
       // battery (rows-only here: cell assignment isn't SQL-replayable).
-      val e = Tables(s, dir, "embeddings")
-      val planted = e.filter(pmod(col("vec_id"), lit(40L)) === 0)
-        .select((col("vec_id") + lit(100000L)).as("vec_id"),
-          concat(array((element_at(col("embedding"), 1) + lit(0.1)).cast("float")),
-            slice(col("embedding"), 2, 63)).as("embedding"))
-      val all = e.select("vec_id", "embedding").unionByName(planted)
-      Dedup.semdedup(all, threshold = 0.9, keepLowestId = true)
+      Dedup.semdedup(plantedTwins(s, dir), threshold = 0.9, keepLowestId = true)
     },
     "dedup_incremental" -> { (s, dir) =>
       // Incremental LSH dedup against PERSISTED index state — the daily
@@ -6036,13 +6002,36 @@ object SparkEntry {
     Tables(s, dir, "documents").select(col("doc_id")).withColumn("url", url)
   }
 
-  private def partPairs(s: SparkSession, dir: String): DataFrame = {
+  /** (ok, u, v): every pair of distinct parts u < v on one order. */
+  private def partCooccurrence(s: SparkSession, dir: String): DataFrame = {
     val li = Tables(s, dir, "lineitem")
       .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk"))
     li.select(col("ok"), col("pk").as("u"))
       .join(li.select(col("ok"), col("pk").as("v")), Seq("ok"))
       .filter(col("u") < col("v"))
-      .select(col("u"), col("v")).distinct()
+  }
+
+  private def partPairs(s: SparkSession, dir: String): DataFrame =
+    partCooccurrence(s, dir).select(col("u"), col("v")).distinct()
+
+  /** The repeat co-occurrence graph: part pairs bought together in at
+    * least two distinct orders. */
+  private def repeatPartPairs(s: SparkSession, dir: String): DataFrame =
+    partCooccurrence(s, dir)
+      .groupBy(col("u"), col("v"))
+      .agg(count_distinct(col("ok")).as("w"))
+      .filter(col("w") >= 2).select(col("u"), col("v"))
+
+  /** The embeddings plus a planted near-duplicate twin of every 40th
+    * vector: id + 100000, coordinate 1 raised by 0.1 (cosine >= 0.995
+    * against its base). */
+  private def plantedTwins(s: SparkSession, dir: String): DataFrame = {
+    val e = Tables(s, dir, "embeddings")
+    val planted = e.filter(pmod(col("vec_id"), lit(40L)) === 0)
+      .select((col("vec_id") + lit(100000L)).as("vec_id"),
+        concat(array((element_at(col("embedding"), 1) + lit(0.1)).cast("float")),
+          slice(col("embedding"), 2, 63)).as("embedding"))
+    e.select("vec_id", "embedding").unionByName(planted)
   }
 
   private val FuzzCondExprN = 1000

@@ -1,7 +1,7 @@
 package graft.ext
 
 import org.apache.spark.HashPartitioner
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
@@ -48,6 +48,35 @@ object Dedup {
   private def planFence(df: DataFrame): DataFrame =
     df.sparkSession.createDataFrame(df.rdd, df.schema)
 
+  /** (id, shs): each document's distinct word-`n`-gram shingle hashes
+    * behind a [[barrier]]; documents with no shingle (fewer than `n`
+    * tokens) are dropped, since they cannot reach any threshold. */
+  private def shingleSets(docs: DataFrame, n: Int, idCol: String,
+      textCol: String): DataFrame =
+    barrier(docs.select(col(idCol), col(textCol)))
+      .select(col(idCol).as("id"),
+        graft.functions.texthash.shingle_hashes(col(textCol), n).as("shs"))
+      .filter(size(col("shs")) > 0)
+
+  /** Exact-Jaccard verification of candidate (a_id, b_id) pairs against
+    * the (id, shs) shingle sets in `sets`: |A∩B| / (|A| + |B| - |A∩B|)
+    * from one integer intersection, so the value is bit-identical across
+    * engines; only candidate ids fetch their sets. Any other column of
+    * `sets` (the cross-lingual `lang`) rides along as a_<c> and b_<c>.
+    * Output: (a_id, b_id, a_<c>..., b_<c>..., jaccard). */
+  private def verifyJaccard(cand: DataFrame, sets: DataFrame,
+      threshold: Double): DataFrame = {
+    def side(p: String) = sets.select(sets.columns.map(c => col(c).as(s"${p}_$c")): _*)
+    val extra = sets.columns.filterNot(Set("id", "shs"))
+    cand.join(side("a"), "a_id").join(side("b"), "b_id")
+      .withColumn("c", size(array_intersect(col("a_shs"), col("b_shs"))).cast("long"))
+      .withColumn("jaccard",
+        col("c").cast("double") / (size(col("a_shs")) + size(col("b_shs")) - col("c")))
+      .filter(col("jaccard") >= threshold)
+      .select((Seq("a_id", "b_id") ++ extra.map("a_" + _) ++ extra.map("b_" + _) :+
+        "jaccard").map(col): _*)
+  }
+
   /** Exact dedup: one surviving (min) doc id per distinct normalized text,
     * with the duplicate count. Groups by md5 fingerprint so the shuffle
     * key is 16 bytes; map-side partial aggregation applies. */
@@ -84,20 +113,8 @@ object Dedup {
     // (prefix candidates, a-side verify, b-side verify) and the measured
     // plan re-ran the shingle-hash map stage once per consumer (~10 s
     // CPU each at sf0.1) — exchange reuse does not fence it
-    val withSh = Materialize(
-      barrier(docs.select(col(idCol), col(textCol)))
-        .select(col(idCol).as("id"),
-          graft.functions.texthash.shingle_hashes(col(textCol), n).as("shs"))
-        .filter(size(col("shs")) > 0))
-    val cand = prefixCandidates(withSh, threshold)
-    cand
-      .join(withSh.select(col("id").as("a_id"), col("shs").as("a_shs")), "a_id")
-      .join(withSh.select(col("id").as("b_id"), col("shs").as("b_shs")), "b_id")
-      .withColumn("c", size(array_intersect(col("a_shs"), col("b_shs"))).cast("long"))
-      .withColumn("jaccard",
-        col("c").cast("double") / (size(col("a_shs")) + size(col("b_shs")) - col("c")))
-      .filter(col("jaccard") >= threshold)
-      .select("a_id", "b_id", "jaccard")
+    val withSh = Materialize(shingleSets(docs, n, idCol, textCol))
+    verifyJaccard(prefixCandidates(withSh, threshold), withSh, threshold)
   }
 
   /** EXACT directional containment pairs: |shingles(A) ∩ shingles(B)| /
@@ -123,11 +140,7 @@ object Dedup {
     require(threshold > 0 && threshold <= 1, s"threshold must be in (0,1], got $threshold")
     // Materialize: three consumers (index explode, a-side verify,
     // b-side verify) — see ngramJaccard's measured triple-recompute
-    val withSh = Materialize(
-      barrier(docs.select(col(idCol), col(textCol)))
-        .select(col(idCol).as("id"),
-          graft.functions.texthash.shingle_hashes(col(textCol), n).as("shs"))
-        .filter(size(col("shs")) > 0))
+    val withSh = Materialize(shingleSets(docs, n, idCol, textCol))
     val idx = withSh.select(col("id"), size(col("shs")).as("sz"),
       explode(col("shs")).as("sh"))
     val dfreq = idx.groupBy("sh").agg(count(lit(1)).as("df"))
@@ -198,66 +211,31 @@ object Dedup {
     * the band slice's hash; same-bucket pairs are candidates. Candidates
     * are deduplicated across bands, then verified by exact shingle-set
     * Jaccard (small joins: only candidate ids fetch their shingle sets).
+    *
+    * Runs [[minhashFromState]] over ONE fence of [[lshIndexState]], and
+    * returns the verified pairs behind a lazy fence: the caller's first
+    * action materializes them, and a later consumer ([[components]])
+    * reads those blocks instead of re-running the candidate join. Under
+    * AQE the lazy fence plans its query stages when it is built, so
+    * building this frame already runs the shuffle stages of the
+    * candidate join and verification; only the final stage waits for
+    * the caller's action.
     */
   def minhash(docs: DataFrame, threshold: Double = 0.8, n: Int = 3,
       bands: Int = 32, rows: Int = 4,
-      idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
-    val k = bands * rows
-    // barriers: materialize the shingle-hash array before the multi-use
-    // signature/verification consumers, and the signature before the
-    // per-band explode — otherwise projection collapse re-evaluates them
-    // once per use.
-    val withSh = Materialize(
-      barrier(docs.select(col(idCol), col(textCol)))
-        .select(col(idCol).as("id"),
-          graft.functions.texthash.shingle_hashes(col(textCol), n).as("shs"))
-        .filter(size(col("shs")) > 0))
-    val sigs = Materialize(withSh.select(col("id"), minhashSignature(col("shs"), k).as("sig")))
-    // one row per (band, bucket): bucket = hash of the band's r-slice
-    val buckets = sigs.select(col("id"),
-      posexplode(transform(sequence(lit(0), lit(bands - 1)),
-        b => xxhash64(slice(col("sig"), b * rows + 1, lit(rows)), b))))
-      .toDF("id", "band", "bucket")
-    val cand = buckets.as("x").join(buckets.as("y"),
-        col("x.band") === col("y.band") && col("x.bucket") === col("y.bucket") &&
-          col("x.id") < col("y.id"))
-      .select(col("x.id").as("a_id"), col("y.id").as("b_id"))
-      .distinct()
-    // exact verification on candidates only
-    val verified = cand
-      .join(withSh.withColumnRenamed("id", "a_id").withColumnRenamed("shs", "a_shs"), "a_id")
-      .join(withSh.withColumnRenamed("id", "b_id").withColumnRenamed("shs", "b_shs"), "b_id")
-      .withColumn("c", size(array_intersect(col("a_shs"), col("b_shs"))).cast("long"))
-      .withColumn("jaccard",
-        col("c").cast("double") / (size(col("a_shs")) + size(col("b_shs")) - col("c")))
-      .filter(col("jaccard") >= threshold)
-    verified.select("a_id", "b_id", "jaccard")
-  }
+      idCol: String = "doc_id", textCol: String = "text"): DataFrame =
+    Materialize.lazyFence(minhashFromState(
+      Materialize(lshIndexState(docs, n, bands, rows, idCol, textCol)),
+      threshold, bands, rows))
 
   /** [[minhash]] starting from persisted `lshIndexState` rows instead
     * of raw documents — within-state pairs only (bucket self-join +
-    * exact-Jaccard verify, identical to minhash's tail). Lets the
-    * streaming dedup gate's FIRST batch reuse the delta it just wrote,
-    * computing shingles and signatures exactly once. */
+    * exact-Jaccard verify, minhash's own tail). Lets the streaming
+    * dedup gate's FIRST batch reuse the delta it just wrote, computing
+    * shingles and signatures exactly once. */
   def minhashFromState(state: DataFrame, threshold: Double = 0.8,
-      bands: Int = 32, rows: Int = 4): DataFrame = {
-    val st = state.select(col("id"), col("shs"), col("sig"))
-    val buckets = lshBuckets(st, bands, rows)
-    val cand = buckets.as("x").join(buckets.as("y"),
-        col("x.band") === col("y.band") && col("x.bucket") === col("y.bucket") &&
-          col("x.id") < col("y.id"))
-      .select(col("x.id").as("a_id"), col("y.id").as("b_id"))
-      .distinct()
-    val withSh = st.select(col("id"), col("shs"))
-    cand
-      .join(withSh.withColumnRenamed("id", "a_id").withColumnRenamed("shs", "a_shs"), "a_id")
-      .join(withSh.withColumnRenamed("id", "b_id").withColumnRenamed("shs", "b_shs"), "b_id")
-      .withColumn("c", size(array_intersect(col("a_shs"), col("b_shs"))).cast("long"))
-      .withColumn("jaccard",
-        col("c").cast("double") / (size(col("a_shs")) + size(col("b_shs")) - col("c")))
-      .filter(col("jaccard") >= threshold)
-      .select("a_id", "b_id", "jaccard")
-  }
+      bands: Int = 32, rows: Int = 4): DataFrame =
+    lshPairs(state.select(col("id"), col("shs"), col("sig")), threshold, bands, rows)
 
   /** Cross-lingual near-duplicate pairs: documents in DIFFERENT
     * languages whose CONCEPT sets — surface tokens mapped through a
@@ -289,7 +267,6 @@ object Dedup {
       textCol: String = "text", surfaceCol: String = "surface",
       conceptCol: String = "concept"): DataFrame = {
     require(n >= 1, s"shingle width must be >= 1, got $n")
-    val k = bands * rows
     val tok = barrier(docs.select(col(idCol), col(langCol), col(textCol)))
       .select(col(idCol).as("id"), col(langCol).as("lang"),
         posexplode(filter(TextAnalysis.tokens(lower(col(textCol))),
@@ -304,32 +281,14 @@ object Dedup {
       .select(col("id"), col("lang"),
         transform(col("ps"), p => p("concept")).as("cs"))
       .filter(size(col("cs")) >= n)
-    val withSh = Materialize(seqs.select(col("id"), col("lang"),
+    val withSh = seqs.select(col("id"), col("lang"),
       array_distinct(transform(sequence(lit(0), size(col("cs")) - n),
         i => xxhash64(concat_ws(" ",
           (0 until n).map(j => element_at(col("cs"), i + j + 1)): _*))))
-        .as("shs")))
-    val sigs = Materialize(withSh.select(col("id"), col("lang"),
-      minhashSignature(col("shs"), k).as("sig")))
-    val buckets = sigs.select(col("id"), col("lang"),
-      posexplode(transform(sequence(lit(0), lit(bands - 1)),
-        b => xxhash64(slice(col("sig"), b * rows + 1, lit(rows)), b))))
-      .toDF("id", "lang", "band", "bucket")
-    val cand = buckets.as("x").join(buckets.as("y"),
-        col("x.band") === col("y.band") && col("x.bucket") === col("y.bucket") &&
-          col("x.id") < col("y.id") && col("x.lang") =!= col("y.lang"))
-      .select(col("x.id").as("a_id"), col("y.id").as("b_id"))
-      .distinct()
-    cand
-      .join(withSh.select(col("id").as("a_id"), col("lang").as("a_lang"),
-        col("shs").as("a_shs")), "a_id")
-      .join(withSh.select(col("id").as("b_id"), col("lang").as("b_lang"),
-        col("shs").as("b_shs")), "b_id")
-      .withColumn("c", size(array_intersect(col("a_shs"), col("b_shs"))).cast("long"))
-      .withColumn("jaccard",
-        col("c").cast("double") / (size(col("a_shs")) + size(col("b_shs")) - col("c")))
-      .filter(col("jaccard") >= threshold)
-      .select(col("a_id"), col("b_id"), col("a_lang"), col("b_lang"), col("jaccard"))
+        .as("shs"))
+    val state = Materialize(withSh.select(col("id"), col("lang"), col("shs"),
+      minhashSignature(col("shs"), bands * rows).as("sig")))
+    lshPairs(state, threshold, bands, rows, col("x.lang") =!= col("y.lang"))
   }
 
   /** 64-bit SimHash of the token stream: bit i of the result is 1 when
@@ -456,12 +415,7 @@ object Dedup {
       posexplode(transform(sequence(lit(0), lit(bands - 1)),
         b => call_function("shiftright", col("sig"), b * rowsPerBand).bitwiseAND(lit(mask)))))
       .toDF("id", "band", "bucket")
-    val cand = buckets.as("x").join(buckets.as("y"),
-        col("x.band") === col("y.band") && col("x.bucket") === col("y.bucket") &&
-          col("x.id") < col("y.id"))
-      .select(col("x.id").as("a_id"), col("y.id").as("b_id"))
-      .distinct()
-    cand
+    bucketPairs(buckets).distinct()
       .join(withSig.select(col("id").as("a_id"), col("v").as("a_v")), "a_id")
       .join(withSig.select(col("id").as("b_id"), col("v").as("b_v")), "b_id")
       .withColumn("cosine", graft.functions.sketches.cosine_similarity(col("a_v"), col("b_v")))
@@ -1073,23 +1027,38 @@ object Dedup {
     * Docs whose shingle set is empty (< n tokens) are excluded, same as
     * `minhash` — they cannot reach the threshold against anything. */
   def lshIndexState(docs: DataFrame, n: Int = 3, bands: Int = 32, rows: Int = 4,
-      idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
-    val k = bands * rows
-    val withSh = barrier(
-      barrier(docs.select(col(idCol), col(textCol)))
-        .select(col(idCol).as("id"),
-          graft.functions.texthash.shingle_hashes(col(textCol), n).as("shs"))
-        .filter(size(col("shs")) > 0))
-    withSh.select(col("id"), col("shs"), minhashSignature(col("shs"), k).as("sig"))
-  }
+      idCol: String = "doc_id", textCol: String = "text"): DataFrame =
+    // the shingle array has two consumers (shs and the signature), so
+    // CollapseProject keeps it in its own projection: it is built once
+    shingleSets(docs, n, idCol, textCol)
+      .select(col("id"), col("shs"), minhashSignature(col("shs"), bands * rows).as("sig"))
 
   /** (id, band, bucket) rows derived from stored signatures — 32 small
-    * rows per doc; the join key for candidate generation. */
+    * rows per doc; the join key for candidate generation. Columns of
+    * `state` other than `shs` and `sig` (the cross-lingual `lang`) ride
+    * along between id and band. */
   private def lshBuckets(state: DataFrame, bands: Int, rows: Int): DataFrame =
-    state.select(col("id"),
+    state.select(state.columns.filterNot(Set("shs", "sig")).map(col) :+
       posexplode(transform(sequence(lit(0), lit(bands - 1)),
-        b => xxhash64(slice(col("sig"), b * rows + 1, lit(rows)), b))))
-      .toDF("id", "band", "bucket")
+        b => xxhash64(slice(col("sig"), b * rows + 1, lit(rows)), b)))
+        .as(Seq("band", "bucket")): _*)
+
+  /** Candidate pairs from one bucket self-join: rows x, y sharing a
+    * (band, bucket) with x.id < y.id and `cond` (over the aliases x and
+    * y), as (a_id, b_id). One row per shared band — callers dedupe. */
+  private def bucketPairs(buckets: DataFrame, cond: Column = lit(true)): DataFrame =
+    buckets.as("x").join(buckets.as("y"),
+        col("x.band") === col("y.band") && col("x.bucket") === col("y.bucket") &&
+          col("x.id") < col("y.id") && cond)
+      .select(col("x.id").as("a_id"), col("y.id").as("b_id"))
+
+  /** The shared MinHash-LSH tail over (id, [riders,] shs, sig) state:
+    * bucket self-join candidates, deduplicated across bands, then
+    * exact-Jaccard verification. Never all-pairs. */
+  private def lshPairs(state: DataFrame, threshold: Double, bands: Int, rows: Int,
+      cond: Column = lit(true)): DataFrame =
+    verifyJaccard(bucketPairs(lshBuckets(state, bands, rows), cond).distinct(),
+      state.drop("sig"), threshold)
 
   /** Incremental MinHash-LSH dedup: near-dup pairs (exact-verified
     * Jaccard >= threshold) between a NEW batch and a PERSISTED index
@@ -1127,10 +1096,7 @@ object Dedup {
     // new-new pairs (a<b) plus new-old pairs (normalized to a<b):
     // disjointness of the id spaces makes the union duplicate-free
     // before the cross-band distinct.
-    val candNewNew = newBuckets.as("x").join(newBuckets.as("y"),
-        col("x.band") === col("y.band") && col("x.bucket") === col("y.bucket") &&
-          col("x.id") < col("y.id"))
-      .select(col("x.id").as("a_id"), col("y.id").as("b_id"))
+    val candNewNew = bucketPairs(newBuckets)
     val candNewOld = newBuckets.as("x").join(oldBuckets.as("y"),
         col("x.band") === col("y.band") && col("x.bucket") === col("y.bucket"))
       .select(least(col("x.id"), col("y.id")).as("a_id"),
@@ -1139,14 +1105,7 @@ object Dedup {
     val cand = candNewNew.unionByName(candNewOld).distinct()
     val allSh = newState.select(col("id"), col("shs"))
       .unionByName(oldState.select(col("id"), col("shs")))
-    val verified = cand
-      .join(allSh.withColumnRenamed("id", "a_id").withColumnRenamed("shs", "a_shs"), "a_id")
-      .join(allSh.withColumnRenamed("id", "b_id").withColumnRenamed("shs", "b_shs"), "b_id")
-      .withColumn("c", size(array_intersect(col("a_shs"), col("b_shs"))).cast("long"))
-      .withColumn("jaccard",
-        col("c").cast("double") / (size(col("a_shs")) + size(col("b_shs")) - col("c")))
-      .filter(col("jaccard") >= threshold)
-    verified.select("a_id", "b_id", "jaccard")
+    verifyJaccard(cand, allSh, threshold)
   }
 
   /** Field-level survivorship rules for [[survivorship]]. The two

@@ -105,19 +105,6 @@ object Similarity {
   def srpSignature(vec: Column, planes: Int): Column =
     graft.functions.sketches.srp_signature(vec, planes)
 
-  /** IVF (inverted-file) approximate top-k: K-Means centroids partition
-    * the corpus into cells; each query searches only its `nProbe` nearest
-    * cells, re-ranked by exact cosine. The classic ANN scale path when a
-    * trained coarse quantizer is acceptable: candidate count is
-    * corpus/k × nProbe regardless of corpus size. Deterministic via fixed
-    * seed. Uses spark.ml KMeans (bundled with Spark).
-    *
-    * 100 TB shape: the quantizer trains on a bounded sample (at most
-    * `maxFitVectors` rows — only the sample is ever cached, and it is
-    * unpersisted after fit); the full corpus is touched by exactly one
-    * assignment pass feeding the candidate join. `nCells <= 0` auto-sizes
-    * cells by the √N rule (clamped to [16, 4096]) so cell population
-    * stays ~√N as the corpus grows. */
   /** Shared coarse quantizer: fit K-Means on a bounded sample, assign
     * every vector to its nearest centroid via the codegen'd argmin over
     * a broadcast flat centroid matrix. Returns the assigned (id, v,
@@ -172,6 +159,19 @@ object Similarity {
     (assigned, ctrs.zipWithIndex.map { case (ctr, i) => (i, ctr.toArray) }.toSeq)
   }
 
+  /** IVF (inverted-file) approximate top-k: K-Means centroids partition
+    * the corpus into cells; each query searches only its `nProbe` nearest
+    * cells, re-ranked by exact cosine. The classic ANN scale path when a
+    * trained coarse quantizer is acceptable: candidate count is
+    * corpus/k × nProbe regardless of corpus size. Deterministic via fixed
+    * seed. Uses spark.ml KMeans (bundled with Spark).
+    *
+    * 100 TB shape: the quantizer trains on a bounded sample (at most
+    * `maxFitVectors` rows — only the sample is ever cached, and it is
+    * unpersisted after fit); the full corpus is touched by exactly one
+    * assignment pass feeding the candidate join. `nCells <= 0` auto-sizes
+    * cells by the √N rule (clamped to [16, 4096]) so cell population
+    * stays ~√N as the corpus grows. */
   def ivfTopK(corpus: DataFrame, queries: DataFrame, k: Int, nCells: Int = 0,
       nProbe: Int = 4, seed: Long = 42L,
       idCol: String = "vec_id", vecCol: String = "embedding",

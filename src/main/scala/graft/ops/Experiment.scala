@@ -125,8 +125,9 @@ object Experiment {
     * statistic off a distinct-residual histogram via the
     * [[Relational.cumBeforeByKey]] RANGE-PARTITIONED cumulative:
     * per-partition subtotals are the only control plane, and the k-th
-    * residual is the smallest r whose cumulative reaches k, found by
-    * partition-local windows. No single-reducer window anywhere, so the
+    * residual is the smallest r whose cumulative reaches k, found by a
+    * partition-local window over the one range partition that
+    * straddles k. No single-reducer window anywhere, so the
     * plan survives a continuous-target calibration whose distinct
     * residuals grow toward row count. q̂/n/k resolve to ONE
     * control-plane row collected at build (the bloom-TVF precedent)
@@ -196,16 +197,18 @@ object Experiment {
   /** The conformal family's shared exact order statistic: the k-th
     * smallest score of a (r, c) histogram, k = ⌈(n+1)(1−α)⌉ — the
     * smallest r with cumb + c ≥ k over the
-    * [[Relational.cumBeforeByKey]] cumulative (no empty-partitionSpec
-    * window anywhere). Duplicate score cells from unioned state shards
+    * [[Relational.cumBeforeByRange]] cumulative (no empty-partitionSpec
+    * window anywhere), read in the one range partition whose subtotals
+    * straddle k. Duplicate score cells from unioned state shards
     * sum first. Signed scores are fine — only the total order matters
     * (CQR's calibration scores are negative when the actual sits
     * inside the predicted band). */
   private def kthScoreFromHistogram(histIn: DataFrame,
       alphaMicro: Long): Long = {
     val M = 1000000L
-    val (cum, Seq(n)) = Relational.cumBeforeByKey(
+    val (cum, parts) = Relational.cumBeforeByRange(
       histIn.groupBy("r").agg(sum("c").as("c")), "r", Seq("c"))
+    val n = parts.iterator.map(_._2.head).sum
     // k = ceil((n+1)(M-alpha)/M), exact in BigInt (long would overflow
     // past n ~ 9.2e12 at M = 1e6 — reachable row counts at 100 TB)
     val kBig = (BigInt(n) + 1) * BigInt(M - alphaMicro) + BigInt(M - 1L)
@@ -213,8 +216,12 @@ object Experiment {
     if (n <= 0L || k > n || k <= 0L) throw new IllegalStateException(
       "conformal calibration is empty or too small for alpha: " +
         s"need n >= ceil(1/alpha) - 1 residuals (alphaMicro=$alphaMicro)")
-    // ONE row: qhat — control-plane by design
-    val q = cum.filter(col("__cumb_c") + col("c") >= k)
+    // the k-th score lives in the one range partition whose cumulative
+    // span reaches k; the __pid filter prunes every other partition
+    // below the window. ONE row: qhat — control-plane by design
+    val ends = parts.scanLeft(0L)(_ + _._2.head).tail
+    val q = cum.filter(col("__pid") === parts(ends.indexWhere(_ >= k))._1 &&
+        col("__cumb_c") + col("c") >= k)
       .agg(min("r")).head()
     if (q.isNullAt(0)) throw new IllegalStateException(
       s"unreachable: k=$k <= n=$n but no cell reaches it")

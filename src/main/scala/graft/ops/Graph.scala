@@ -292,27 +292,6 @@ object Graph {
         col("adamic_adar_nano"))
   }
 
-  /** k-core decomposition at a fixed k: the (unique) maximal subgraph
-    * of the undirected graph in which every node has degree ≥ k — the
-    * standard dense-community / spam-farm / influence-backbone
-    * extractor. Computed by the classic peel: repeatedly delete nodes
-    * of degree < k until none remain; the fixpoint is
-    * order-independent, so the result is a pure function of the edge
-    * set.
-    *
-    * Distributed shape per round: ONE degree aggregation (map-side
-    * combined) + two left-semi joins of the edge list against the
-    * surviving-node set, re-materialized ([[graft.ext.Materialize]])
-    * so lineage stays flat across rounds — the PageRank/BFS loop
-    * discipline. The per-round `.count()` is the control-plane
-    * fixpoint probe (one scalar to the driver, never rows). Rounds are
-    * data-dependent but ≤ the peel depth, which is small for real
-    * graphs (hubs keep cores stable); `maxRounds` bounds the driver
-    * loop and FAILS LOUD on pathological chains rather than spinning.
-    *
-    * Input: canonical undirected edges (u < v, distinct). Output:
-    * (node, core_degree) for every node in the k-core, core_degree the
-    * node's degree WITHIN the core (≥ k by construction). */
   /** Synchronous label-propagation communities (Raghavan, Albert &
     * Kumara 2007), DETERMINISTIC variant: labels start as the node id;
     * each round EVERY node simultaneously adopts the most frequent
@@ -365,6 +344,27 @@ object Graph {
     labels
   }
 
+  /** k-core decomposition at a fixed k: the (unique) maximal subgraph
+    * of the undirected graph in which every node has degree ≥ k — the
+    * standard dense-community / spam-farm / influence-backbone
+    * extractor. Computed by the classic peel: repeatedly delete nodes
+    * of degree < k until none remain; the fixpoint is
+    * order-independent, so the result is a pure function of the edge
+    * set.
+    *
+    * Distributed shape per round: ONE degree aggregation (map-side
+    * combined) + two left-semi joins of the edge list against the
+    * surviving-node set, re-materialized ([[graft.ext.Materialize]])
+    * so lineage stays flat across rounds — the PageRank/BFS loop
+    * discipline. The per-round `.count()` is the control-plane
+    * fixpoint probe (one scalar to the driver, never rows). Rounds are
+    * data-dependent but ≤ the peel depth, which is small for real
+    * graphs (hubs keep cores stable); `maxRounds` bounds the driver
+    * loop and FAILS LOUD on pathological chains rather than spinning.
+    *
+    * Input: canonical undirected edges (u < v, distinct). Output:
+    * (node, core_degree) for every node in the k-core, core_degree the
+    * node's degree WITHIN the core (≥ k by construction). */
   def kCore(edges: DataFrame, k: Int, maxRounds: Int = 100,
       uCol: String = "u", vCol: String = "v"): DataFrame = {
     require(k >= 1, s"k must be >= 1: $k")

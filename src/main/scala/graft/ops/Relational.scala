@@ -673,6 +673,18 @@ object Relational {
     * the row's own key; its callers pre-aggregate to distinct keys. */
   private[graft] def cumBeforeByKey(frame: DataFrame, keyCol: String,
       cntCols: Seq[String]): (DataFrame, IndexedSeq[Long]) = {
+    val (cum, parts) = cumBeforeByRange(frame, keyCol, cntCols)
+    (cum.drop("__pid"), cntCols.indices.map(i => parts.iterator.map(_._2(i)).sum))
+  }
+
+  /** [[cumBeforeByKey]] before it drops `__pid`, the row's range
+    * partition, returned with the subtotals of `cntCols` per non-empty
+    * range partition in key order. A filter on `__pid` is pushed below
+    * the partition-local windows, so a caller that needs the rows of
+    * one range partition (the one whose cumulative span straddles a
+    * rank) reads only that partition. */
+  private[graft] def cumBeforeByRange(frame: DataFrame, keyCol: String,
+      cntCols: Seq[String]): (DataFrame, IndexedSeq[(Int, Vector[Long])]) = {
     require(cntCols.nonEmpty, "cumBeforeByKey needs count columns")
     // fence the histogram BEFORE the range exchange: the range
     // partitioner's bounds-sampling job executes its whole child, so an
@@ -721,7 +733,7 @@ object Relational {
             typedLit(byPid(pids.zip(offs.map(_(i))), 0L)).getItem(col("__pid")))
         .withColumn(s"__tot_$c", lit(totals(i)))
     }
-    (withCums.drop("__pid"), totals)
+    (withCums, ptot.map(p => (p._1, p._2)))
   }
 
   /** Top-k rows per key WITHOUT a window sort: the k-bounded

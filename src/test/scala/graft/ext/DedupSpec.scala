@@ -257,6 +257,25 @@ class DedupSpec extends SparkTestBase {
     assert(jobs.size <= maxRounds + 3, s"${jobs.size} jobs")
   }
 
+  test("minhash fences once; components reads its fenced pairs (job-count guard)") {
+    val ((pairs, got), mhJobs) = jobsOf {
+      val p = Dedup.minhash(docs, threshold = 0.5)
+      (p, p.collect())
+    }
+    assert(got.map(r => (r.getLong(0), r.getLong(1))).toSet ===
+      Set((0L, 1L), (0L, 2L), (1L, 2L)))
+    val (clusters, ccJobs) = jobsOf(Dedup.components(pairs).collect())
+    assert(clusters.length === 3)
+    // minhash: one eager fence of the index state (its barrier stage
+    // included), the verify's stages planned by the lazy pair fence, and
+    // the collect that fills it; a second state fence costs one more
+    assert(mhJobs.size === 6, s"minhash build + collect: ${mhJobs.size} jobs")
+    // components reads the fenced pairs: the edge count, one round and
+    // the collect. Over an unfenced pair plan the edge count re-runs the
+    // candidate join and verify (6 jobs)
+    assert(ccJobs.size === 3, s"components: ${ccJobs.size} jobs")
+  }
+
   test("determinism: same input, same signatures across runs") {
     val r1 = Dedup.minhash(docs, threshold = 0.5).collect().toSet
     val r2 = Dedup.minhash(docs, threshold = 0.5).collect().toSet

@@ -129,6 +129,26 @@ class CumBeforeByKeySpec extends SparkTestBase {
       90L -> (8L, 13L, Some(40L))))
   }
 
+  test("a __pid filter on cumBeforeByRange is pushed below the window") {
+    val rows = (1L to 200L).map(i => (i, 1L))
+    withShufflePartitions(4) {
+      val (cum, parts) = Relational.cumBeforeByRange(rows.toDF("k", "a"), "k", Seq("a"))
+      assert(parts.map(_._2.head).sum === 200L && parts.size > 1)
+      val (pid, Vector(sub)) = parts(1)
+      val one = cum.filter(col("__pid") === pid)
+      // every Window's input is already the one partition
+      val windows = one.queryExecution.optimizedPlan.collect {
+        case w: org.apache.spark.sql.catalyst.plans.logical.Window => w }
+      assert(windows.nonEmpty && windows.forall(_.child.exists {
+        case org.apache.spark.sql.catalyst.plans.logical.Filter(c, _) =>
+          c.references.exists(_.name == "__pid")
+        case _ => false
+      }), one.queryExecution.optimizedPlan.toString)
+      val got = one.collect().map(_.getAs[Long]("__cumb_a")).sorted
+      assert(got.length === sub && got.head === parts(0)._2.head)
+    }
+  }
+
   test("job counts: KS, W1, ROC-AUC and conformal build + collect") {
     // every Spark job of building AND collecting each operator, counted
     // by a listener (the DedupSpec guard); pinned so an extra
