@@ -73,11 +73,8 @@ object SparkEntry {
       // chunk=50; chunk=25 regresses to 5.4s on per-job overhead). The
       // 1000-row battery result is materialized like the memory-sink rows.
       import s.implicits._
-      import scala.concurrent.{Await, ExecutionContext, Future}
-      import scala.concurrent.duration.Duration
-      implicit val ec: ExecutionContext = ExecutionContext.global
-      val chunkFutures = cases.zip(conds).grouped(50).map { chunk =>
-        Future {
+      val out = concurrently(cases.zip(conds).grouped(50).map { chunk =>
+        () => {
           val aggs = chunk.flatMap { case (c, cond) => Seq(
             sum(when(cond, lit(1L)).otherwise(lit(0L))).as(s"nt_${c.id}"),
             sum(when(cond, col("k")).otherwise(lit(0L))).as(s"ks_${c.id}")) }
@@ -90,8 +87,7 @@ object SparkEntry {
               col("r.n_true").as("n_true"), col("r.key_sum").as("key_sum"))
             .collect()
         }
-      }.toSeq
-      val out = Await.result(Future.sequence(chunkFutures), Duration.Inf).flatten
+      }.toSeq: _*).flatten
       out.map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
         .toDF("expr_id", "n_true", "key_sum")
     },

@@ -50,13 +50,17 @@ object Dedup {
 
   /** (id, shs): each document's distinct word-`n`-gram shingle hashes
     * behind a [[barrier]]; documents with no shingle (fewer than `n`
-    * tokens) are dropped, since they cannot reach any threshold. */
+    * tokens, or null text) are dropped, since they cannot reach any
+    * threshold. That test is a regex over the same whitespace tokens,
+    * applied before the barrier: a filter on `size(shs)` would be pushed
+    * below the barrier and hash every document twice, once in the
+    * scan's own tasks. */
   private def shingleSets(docs: DataFrame, n: Int, idCol: String,
       textCol: String): DataFrame =
-    barrier(docs.select(col(idCol), col(textCol)))
+    barrier(docs.select(col(idCol), col(textCol))
+      .filter(col(textCol).rlike(s"^\\s*\\S+(?:\\s+\\S+){${n - 1}}")))
       .select(col(idCol).as("id"),
         graft.functions.texthash.shingle_hashes(col(textCol), n).as("shs"))
-      .filter(size(col("shs")) > 0)
 
   /** Exact-Jaccard verification of candidate (a_id, b_id) pairs against
     * the (id, shs) shingle sets in `sets`: |A∩B| / (|A| + |B| - |A∩B|)
@@ -524,8 +528,9 @@ object Dedup {
     * map-side-combined reduceByKey(min) and nothing else; the jump is
     * one join keyed on the label; the count of changed labels is a
     * narrow join of the new labels against the old, and that count is
-    * the action that materializes the round. A DataFrame formulation
-    * pays a Catalyst re-plan plus one job per AQE stage every round.
+    * the action that materializes the round of [[Materialize.fixpoint]].
+    * A DataFrame formulation pays a Catalyst re-plan plus one job per
+    * AQE stage every round.
     * The reducer count is sized from the materialized input edge count
     * (~1M edges per reducer, at most the session's shuffle partitions)
     * without touching the session conf, which a concurrent query on the
@@ -561,11 +566,9 @@ object Dedup {
       .flatMap { case (a, b) => Iterator((a, b), (b, a)) }
       .groupByKey(part)
       .mapValues(_.toArray.distinct))
-    var labels = adj.mapPartitions(_.map { case (v, nbrs) => (v, math.min(v, nbrs.min)) },
+    val labels0 = adj.mapPartitions(_.map { case (v, nbrs) => (v, math.min(v, nbrs.min)) },
       preservesPartitioning = true)
-    var changed = nEdges // an empty graph has converged before any round
-    var round = 0
-    while (changed > 0 && round < maxRounds) {
+    val (labels, converged) = Materialize.fixpoint(labels0, maxRounds) { labels =>
       val hooked = adj.join(labels, part)
         .flatMap { case (v, (nbrs, l)) => Iterator.single((v, l)) ++ nbrs.iterator.map((_, l)) }
         .reduceByKey(part, math.min(_, _))
@@ -574,17 +577,15 @@ object Dedup {
       val jumped = hooked.map(_.swap).leftOuterJoin(hooked, part)
         .map { case (l, (v, ll)) => (v, ll.getOrElse(l)) }
       val next = Materialize.rdd(jumped.partitionBy(part))
-      changed = next.join(labels, part).filter { case (_, (n, o)) => n != o }.count()
+      val changed = next.join(labels, part).filter { case (_, (n, o)) => n != o }.count()
       labels.unpersist(blocking = false)
-      labels = next
-      round += 1
+      (next, changed)
     }
-    // once a round ran, the labels are materialized and cut from both
-    // fences (an empty graph's output is still computed from them)
-    if (round > 0) { edges.unpersist(blocking = false); adj.unpersist(blocking = false) }
+    // the labels are materialized and cut from both fences
+    edges.unpersist(blocking = false); adj.unpersist(blocking = false)
     // partially-propagated labels are silently WRONG cluster ids — a
     // component with diameter > maxRounds must fail loud, not mislabel
-    if (changed > 0) throw new IllegalStateException(
+    if (!converged) throw new IllegalStateException(
       s"components did not converge in $maxRounds rounds — raise maxRounds " +
         "(component diameter exceeds it) or switch to large-star/small-star")
     labels.toDF("doc_id", "cluster_id")

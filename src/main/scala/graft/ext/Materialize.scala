@@ -32,24 +32,32 @@ object Materialize {
     if (df.sparkSession.sparkContext.getCheckpointDir.isDefined) df.checkpoint()
     else df.localCheckpoint(true)
 
-  /** Materialize AND count in ONE action. Iterative loops that fence a
-    * round frame and then probe it (`count`/`isEmpty` for the early-out)
-    * pay one extra driver round-trip per round on top of the eager
-    * checkpoint job; here the count RIDES the materializing action —
-    * the lazy checkpoint is forced by the count itself, so the fence
-    * and the probe are a single job. Durability contract identical to
-    * [[apply]] (reliable checkpoint under a configured dir, local
-    * otherwise). */
-  def withCount(df: DataFrame): (DataFrame, Long) = {
-    val fenced = lazyFence(df)
-    (fenced, fenced.count())
+  /** The one convergence loop of the engine's iterative operators
+    * (k-core peel, BFS/SSSP frontiers, connected components; Kiveris et
+    * al., SoCC 2014). Runs `round` from `init` until a round reports a
+    * change count of 0 or `maxRounds` rounds have run, and returns the
+    * last state with whether it converged. Contract for `round`: build
+    * the next state behind a lazy fence ([[lazyFence]] or [[rdd]]) and
+    * make its change count the round's only action, so that count also
+    * materializes the fence — one Spark job per round, lineage flat.
+    * Callers decide what non-convergence means: fail loud where partial
+    * results are wrong, or keep the rounds as a semantic bound. */
+  def fixpoint[S](init: S, maxRounds: Int)(round: S => (S, Long)): (S, Boolean) = {
+    require(maxRounds >= 1, s"maxRounds must be >= 1: $maxRounds")
+    @annotation.tailrec def loop(state: S, left: Int): (S, Boolean) = {
+      val (next, changed) = round(state)
+      if (changed == 0L) (next, true)
+      else if (left == 1) (next, false)
+      else loop(next, left - 1)
+    }
+    loop(init, maxRounds)
   }
 
   /** A fence whose materialization RIDES THE CALLER'S NEXT ACTION
     * instead of running an eager job of its own. Contract: the caller
     * must run an action on the returned frame IMMEDIATELY (before
     * building further lineage on it) — the iterative-loop probe shape
-    * (a per-round convergence count), where the probe action
+    * (a per-round convergence count, see [[fixpoint]]), where the probe action
     * itself forces the checkpoint and the following round then consumes
     * materialized blocks exactly as with [[apply]]. Durability matches
     * [[apply]] (reliable under a configured dir, local otherwise). */

@@ -61,10 +61,10 @@ object Graph {
     // materialize the canonical edge list once: it feeds the degree
     // count AND the orientation join, and upstream edge derivations
     // (e.g. a co-occurrence self-join + distinct) must not re-execute
-    // per consumer. The edge count for the auto-broadcast decision
-    // rides the fence's own materializing action (one job, not two).
-    val (e, nEdges) = Materialize.withCount(
-      edges.select(col(uCol).as("u"), col(vCol).as("v")))
+    // per consumer. The edge count for the auto-broadcast decision is
+    // the lazy fence's own materializing action (one job, not two).
+    val e = Materialize.lazyFence(edges.select(col(uCol).as("u"), col(vCol).as("v")))
+    val nEdges = e.count()
     // (degree, id) total order packed into one BIGINT: deg * 2^32 + node.
     // Correct only while node ids are in [0, 2^31) and degrees below
     // 2^31 — outside that the pack silently reorders and the failure
@@ -136,7 +136,6 @@ object Graph {
     */
   def bfsDistances(edges: DataFrame, source: Long, maxHops: Int,
       uCol: String = "u", vCol: String = "v"): DataFrame = {
-    require(maxHops >= 1, s"need maxHops >= 1, got $maxHops")
     val spark = edges.sparkSession
     import spark.implicits._
     // canonical input (u < v, distinct) means the two directed copies
@@ -144,29 +143,23 @@ object Graph {
     val adj = Materialize(
       edges.select(col(uCol).as("s"), col(vCol).as("d"))
         .unionAll(edges.select(col(vCol).as("s"), col(uCol).as("d"))))
-    var settled = Materialize(Seq((source, 0L)).toDF("node", "dist"))
-    var frontier = settled
-    var hop = 0L
-    var drained = false
-    while (!drained && hop < maxHops) {
-      hop += 1
-      val reached = frontier.select(col("node"))
-        .join(adj, col("node") === col("s"))
-        .select(col("d").as("node")).distinct()
-      // the drain probe rides the fence's own materializing action —
-      // one job per round, not checkpoint + isEmpty (guide §5)
-      val (fresh, nFresh) = Materialize.withCount(
-        reached.join(settled, Seq("node"), "left_anti")
-          .select(col("node"), lit(hop).as("dist")))
-      if (nFresh == 0L) drained = true
-      else {
+    // the one-row seed is a local relation, already a leaf: no fence
+    val seed = Seq((source, 0L)).toDF("node", "dist")
+    // state: (settled, frontier, the frontier's hop)
+    val ((settled, _, _), _) = Materialize.fixpoint((seed, seed, 0L), maxHops) {
+      case (settled, frontier, hop) =>
+        val reached = frontier.select(col("node"))
+          .join(adj, col("node") === col("s"))
+          .select(col("d").as("node")).distinct()
+        val fresh = Materialize.lazyFence(
+          reached.join(settled, Seq("node"), "left_anti")
+            .select(col("node"), lit(hop + 1).as("dist")))
+        val nFresh = fresh.count()
         // LAZY fence: the next round's fresh-count job consumes settled
-        // (the anti-join) and is what materializes it — no eager
-        // settled job of its own; the serial probe jobs keep block
-        // computation single-shot
-        settled = Materialize.lazyFence(settled.unionAll(fresh))
-        frontier = fresh
-      }
+        // (the anti-join) and is what materializes it
+        val next = if (nFresh == 0L) settled
+          else Materialize.lazyFence(settled.unionAll(fresh))
+        ((next, fresh, hop + 1), nFresh)
     }
     settled
   }
@@ -189,35 +182,30 @@ object Graph {
     * for any weights). */
   def ssspDistances(edges: DataFrame, source: Long, maxRounds: Int,
       uCol: String = "u", vCol: String = "v", wCol: String = "w"): DataFrame = {
-    require(maxRounds >= 1, s"need maxRounds >= 1, got $maxRounds")
     val spark = edges.sparkSession
     import spark.implicits._
     val adj = Materialize(
       edges.select(col(uCol).as("s"), col(vCol).as("d"), col(wCol).as("w"))
         .unionAll(edges.select(col(vCol).as("s"), col(uCol).as("d"), col(wCol).as("w"))))
-    var best = Materialize(Seq((source, 0L)).toDF("node", "cost"))
-    var frontier = best
-    var round = 0
-    var drained = false
-    while (!drained && round < maxRounds) {
-      round += 1
-      val cand = frontier.join(adj, col("node") === col("s"))
-        .select(col("d").as("node"), (col("cost") + col("w")).as("cand"))
-        .groupBy("node").agg(min(col("cand")).as("cand"))
-      // drain probe rides the fence job (one action per round, guide §5)
-      val (improved, nImproved) = Materialize.withCount(cand
-        .join(best.select(col("node"), col("cost").as("old")), Seq("node"), "left")
-        .filter(col("old").isNull || col("cand") < col("old"))
-        .select(col("node"), col("cand").as("cost")))
-      if (nImproved == 0L) drained = true
-      else {
+    // the one-row seed is a local relation, already a leaf: no fence
+    val seed = Seq((source, 0L)).toDF("node", "cost")
+    val ((best, _), _) = Materialize.fixpoint((seed, seed), maxRounds) {
+      case (best, frontier) =>
+        val cand = frontier.join(adj, col("node") === col("s"))
+          .select(col("d").as("node"), (col("cost") + col("w")).as("cand"))
+          .groupBy("node").agg(min(col("cand")).as("cand"))
+        val improved = Materialize.lazyFence(cand
+          .join(best.select(col("node"), col("cost").as("old")), Seq("node"), "left")
+          .filter(col("old").isNull || col("cand") < col("old"))
+          .select(col("node"), col("cand").as("cost")))
+        val nImproved = improved.count()
         // LAZY fence: round k+1's improved-count job joins best and is
         // what materializes it (see bfsDistances)
-        best = Materialize.lazyFence(
-          best.join(improved.select(col("node")), Seq("node"), "left_anti")
-            .unionAll(improved))
-        frontier = improved
-      }
+        val next = if (nImproved == 0L) best
+          else Materialize.lazyFence(
+            best.join(improved.select(col("node")), Seq("node"), "left_anti")
+              .unionAll(improved))
+        ((next, improved), nImproved)
     }
     best
   }
@@ -368,29 +356,24 @@ object Graph {
   def kCore(edges: DataFrame, k: Int, maxRounds: Int = 100,
       uCol: String = "u", vCol: String = "v"): DataFrame = {
     require(k >= 1, s"k must be >= 1: $k")
-    require(maxRounds >= 1, s"maxRounds must be >= 1: $maxRounds")
     def degrees(e: DataFrame): DataFrame =
       e.select(col("u").as("node")).unionAll(e.select(col("v").as("node")))
         .groupBy("node").agg(count(lit(1)).as("core_degree"))
-    // fixpoint probes ride the fence jobs: one action materializes the
-    // round's edge frame AND yields its count (guide §5 — the loop's
-    // per-round driver round-trips halve)
-    var (e, prev) = graft.ext.Materialize.withCount(
-      edges.select(col(uCol).as("u"), col(vCol).as("v")))
-    var round = 0
-    var done = prev == 0L
-    while (!done && round < maxRounds) {
-      val keep = degrees(e).filter(col("core_degree") >= k).select("node")
-      val (ne, cnt) = graft.ext.Materialize.withCount(
-        e.join(keep.withColumnRenamed("node", "u"), Seq("u"), "left_semi")
-          .join(keep.withColumnRenamed("node", "v"), Seq("v"), "left_semi"))
-      done = cnt == prev // no edge peeled -> every survivor has deg >= k
-      prev = cnt
-      e = ne
-      round += 1
+    // state: (edges, their count); each round's count is the action
+    // that materializes its lazily fenced edge frame
+    val e0 = Materialize.lazyFence(edges.select(col(uCol).as("u"), col(vCol).as("v")))
+    val ((core, _), converged) = Materialize.fixpoint((e0, e0.count()), maxRounds) {
+      case (e, n) =>
+        val keep = degrees(e).filter(col("core_degree") >= k).select("node")
+        val next = Materialize.lazyFence(
+          e.join(keep.withColumnRenamed("node", "u"), Seq("u"), "left_semi")
+            .join(keep.withColumnRenamed("node", "v"), Seq("v"), "left_semi"))
+        val kept = next.count()
+        // no edge peeled -> every survivor has deg >= k
+        ((next, kept), n - kept)
     }
-    require(done, s"k-core peel did not converge in $maxRounds rounds " +
+    require(converged, s"k-core peel did not converge in $maxRounds rounds " +
       "(pathological chain?) — raise maxRounds")
-    degrees(e)
+    degrees(core)
   }
 }

@@ -149,20 +149,17 @@ object Manifest {
     // no local mkdirs: the parquet writer creates group dirs through the
     // Hadoop FS for whatever scheme outDir carries (file:, hdfs:, s3a:)
     // group rewrites are independent (distinct output dirs, disjoint
-    // input file sets) — run them as CONCURRENT jobs (guide §2.6); the
-    // returned audit rows keep the sorted group order regardless of
-    // finish order
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    import scala.concurrent.ExecutionContext.Implicits.global
-    val rewritten = groups.map { case (gid, files) =>
-      Future {
+    // input file sets) — run them as CONCURRENT jobs (guide §2.6) that
+    // fail fast; the returned audit rows keep the sorted group order
+    // regardless of finish order
+    val rewritten = graft.streaming.StreamingOps.concurrently(groups.map { case (gid, files) =>
+      () => {
         val paths = files.map(_._2)
         spark.read.parquet(paths: _*).coalesce(1)
           .write.mode("overwrite").parquet(s"$outDir/group_$gid")
         (gid, paths.length.toLong, files.map(_._3).sum, true)
       }
-    }.map(Await.result(_, Duration.Inf))
+    }: _*)
     val passthrough = rows.collect { case (None, _, bytes) => (-1L, 1L, bytes, false) }
     (rewritten ++ passthrough)
       .toDF("group_id", "n_files", "bytes", "rewritten")

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.ext.Materialize
@@ -32,14 +32,19 @@ import graft.ext.Materialize
   * inbound mass per node is the whole graph's, n_nodes * r0, so keep
   * n_nodes * r0 * 85 < 2^63 (with the default r0 = 10^9 that allows
   * ~10^8 nodes; shrink r0 for bigger graphs).
+  *
+  * One recurrence serves every entry point: uniform PageRank is
+  * personalized PageRank with every node a seed (Haveliwala, WWW 2002),
+  * so the private builders take the seed list as an `Option` and read
+  * `None` as "every node", with the seed flag a literal 1.
   */
 object PageRank {
 
   /** The distinct node frame of an edge list. LAZY fence: its first
-    * consumer is always an eager fence job (staticEdges' `ed`, or
-    * personalizedStatic's `flagged`) whose action materializes it —
-    * later consumers (the rank seed frame) read the cached blocks, so
-    * the fence costs no eager job of its own. */
+    * consumer is always the eager `ed` fence job of [[staticFrames]],
+    * whose action materializes it — later consumers (the rank seed
+    * frame) read the cached blocks, so the fence costs no eager job of
+    * its own. */
   private def nodeFrame(e: DataFrame): DataFrame = Materialize.lazyFence(
     e.select(col("src").as("node")).union(e.select(col("dst").as("node"))).distinct())
 
@@ -51,99 +56,122 @@ object PageRank {
       dstCol: String): DataFrame = Materialize(
     edges.select(col(srcCol).as("src"), col(dstCol).as("dst")).distinct())
 
-  /** The static per-edge frame the rounds iterate on: zero-weight
+  /** `df` with the BIGINT seed flag `as` of its `key` column: 1 when the
+    * key is in the seed list (its first column; absent seeds are
+    * ignored), 0 otherwise, by a left join against the broadcast list
+    * (seed lists are dimension-sized). With no seed list every node is
+    * a seed and the flag is the literal 1. */
+  private def flagSeeds(df: DataFrame, key: String, as: String,
+      seeds: Option[DataFrame]): DataFrame = seeds.fold(df.withColumn(as, lit(1L))) { s =>
+    val set = s.select(col(s.columns.head).as(key)).distinct().withColumn("__s", lit(1L))
+    df.join(broadcast(set), Seq(key), "left")
+      .withColumn(as, coalesce(col("__s"), lit(0L))).drop("__s")
+  }
+
+  /** Columns of the static edge frame: the seeded recurrence also
+    * stores the dst's seed flag `ds`; uniform rounds read the literal
+    * instead, so they shuffle no flag column. */
+  private def edgeCols(seeds: Option[DataFrame]): Seq[Column] =
+    Seq("src", "dst", "w", "d").map(col) ++ seeds.map(_ => col("ds"))
+
+  /** The 15% teleport mass per round, after the argument checks every
+    * entry point shares (run before any Spark job). */
+  private def teleportBase(iterations: Int, r0: Long): Long = {
+    require(iterations >= 1, s"need at least one iteration, got $iterations")
+    require(r0 % 20 == 0, s"r0 must be divisible by 20 so the 15% base term is exact, got $r0")
+    15L * r0 / 100
+  }
+
+  /** The static frames the rounds iterate on: the seed-flagged node
+    * frame (node, is_seed), the edge frame and the node-sized
+    * out-degree frame `deg` (persisted with the edge frame for
+    * [[resumeDelta]]'s degree patching). In the edge frame, zero-weight
     * self-loops keep no-inbound nodes in the frame (so the per-round
     * aggregation alone preserves the full node set), and out-degree is
-    * STATIC so it folds into the edge list once instead of re-joining
+    * STATIC, so it folds into the edge list once instead of re-joining
     * against the rank frame every round — one join per iteration
     * instead of two. `deg` is consumed exactly once (by the fold-in
     * join) off the already-checkpointed edge list, so it carries no
-    * fence of its own. Returns (static, deg) — deg is node-sized and
-    * rides along so [[runWithState]] can persist it for
-    * [[resumeDelta]]'s degree patching. */
-  private def staticEdges(e: DataFrame, nodes: DataFrame): (DataFrame, DataFrame) = {
+    * fence of its own. */
+  private def staticFrames(e: DataFrame, seeds: Option[DataFrame])
+      : (DataFrame, DataFrame, DataFrame) = {
+    val nodes = nodeFrame(e)
     val deg = e.groupBy(col("src").as("node")).agg(count(lit(1)).as("d"))
     val eplus =
       e.select(col("src"), col("dst"), lit(1L).as("w"))
         .union(nodes.select(col("node").as("src"), col("node").as("dst"), lit(0L).as("w")))
-    (Materialize(eplus
+    val folded = eplus
       .join(deg.select(col("node").as("src"), col("d")), Seq("src"), "left")
-      .select(col("src"), col("dst"), col("w"), coalesce(col("d"), lit(1L)).as("d"))),
-      deg)
+      .withColumn("d", coalesce(col("d"), lit(1L)))
+    val (flagged, ed) = seeds match {
+      case None => (nodes.withColumn("is_seed", lit(1L)), folded)
+      case Some(_) =>
+        // LAZY: first consumed by the eager `ed` fence job below (the
+        // rank seed frame reads the cached blocks after)
+        val f = Materialize.lazyFence(flagSeeds(nodes, "node", "is_seed", seeds))
+        (f, folded.join(f.select(col("node").as("dst"), col("is_seed").as("ds")), Seq("dst")))
+    }
+    (flagged, Materialize(ed.select(edgeCols(seeds): _*)), deg)
   }
 
   /** `iterations` rounds of the integer recurrence from an arbitrary
-    * starting rank frame — the shared engine of [[run]] and
-    * [[resume]]. Round fences are LAZY and chain: each round's final
-    * stage (and its persist) rides the NEXT consumer's job instead of
-    * paying an eager materialization job of its own — every round's
-    * frame still persists and truncates lineage when first computed
-    * (the 1000-executor contract), the per-round driver round-trips
-    * shrink (guide §5), and the round count here is single-digit, so
-    * the in-flight DAG stays shallow. */
+    * starting rank frame. Round fences are LAZY and chain: each round's
+    * final stage (and its persist) rides the NEXT consumer's job
+    * instead of paying an eager materialization job of its own — every
+    * round's frame still persists and truncates lineage when first
+    * computed (the 1000-executor contract), the per-round driver
+    * round-trips shrink (guide §5), and the round count here is
+    * single-digit, so the in-flight DAG stays shallow. A fixed round
+    * count, not a convergence loop: no round pays a probe. */
   private def iterate(ed: DataFrame, ranks0: DataFrame, iterations: Int,
-      base: Long): DataFrame = {
-    var ranks = ranks0
-    for (_ <- 1 to iterations) {
-      ranks = Materialize.lazyFence(
+      base: Long, seeds: Option[DataFrame]): DataFrame = {
+    // the teleport lands on seeds only: the dst's flag is constant per
+    // group, so it rides the aggregation as a max
+    val teleport = seeds.fold(lit(base))(_ => max(col("ds")) * lit(base))
+    (1 to iterations).foldLeft(ranks0) { (ranks, _) =>
+      Materialize.lazyFence(
         ranks.join(ed, col("node") === col("src"))
           .groupBy(col("dst").as("node2"))
-          .agg(sum(expr("(rank div d) * w")).as("s"))
-          .select(col("node2").as("node"),
-            (lit(base) + expr("(85 * s) div 100")).as("rank")))
+          .agg(sum(expr("(rank div d) * w")).as("s"), teleport.as("t"))
+          .select(col("node2").as("node"), (col("t") + expr("(85 * s) div 100")).as("rank")))
     }
-    ranks
   }
 
-  def run(edges: DataFrame, iterations: Int = 5, r0: Long = 1000000000L,
-      srcCol: String = "src", dstCol: String = "dst"): DataFrame = {
-    require(iterations >= 1, s"need at least one iteration, got $iterations")
-    require(r0 % 20 == 0, s"r0 must be divisible by 20 so the 15% base term is exact, got $r0")
-    val base = 15L * r0 / 100
-
-    val e = edgeFrame(edges, srcCol, dstCol)
-    val nodes = nodeFrame(e)
-    val (ed, _) = staticEdges(e, nodes)
-    // no fence on ranks0: a trivial projection of the already-
-    // checkpointed node frame with exactly one consumer (round 1's
-    // join) — the fence only added an eager checkpoint job
-    iterate(ed, nodes.select(col("node"), lit(r0).as("rank")),
-      iterations, base)
+  /** The full-rebuild entry points: canonical frames from `edges`,
+    * ranks starting at is_seed·r0, or from stored `state` rows where a
+    * node has one. Returns (ranks, static, deg). */
+  private def rebuild(edges: DataFrame, seeds: Option[DataFrame],
+      state: Option[DataFrame], iterations: Int, r0: Long, srcCol: String,
+      dstCol: String): (DataFrame, DataFrame, DataFrame) = {
+    val base = teleportBase(iterations, r0)
+    val (flagged, ed, deg) = staticFrames(edgeFrame(edges, srcCol, dstCol), seeds)
+    val init = col("is_seed") * lit(r0)
+    // no fence on ranks0: one consumer (round 1's join)
+    val ranks0 = state.fold(flagged.select(col("node"), init.as("rank"))) { st =>
+      flagged.join(st.select(col("node"), col("rank").as("__stored")), Seq("node"), "left")
+        .select(col("node"), coalesce(col("__stored"), init).as("rank"))
+    }
+    (iterate(ed, ranks0, iterations, base, seeds), ed, deg)
   }
 
-  /** [[run]] that ALSO returns the graph state a delta batch needs:
-    * (ranks, static, deg) where `static` is the self-loop-extended
-    * degree-folded edge frame the rounds iterated on and `deg` the
-    * node-sized out-degree frame. Persist all three and hand them to
-    * [[resumeDelta]] — then a later delta batch never re-shuffles the
-    * base graph (the full union rebuild that [[resume]] pays). */
-  def runWithState(edges: DataFrame, iterations: Int = 5,
-      r0: Long = 1000000000L, srcCol: String = "src", dstCol: String = "dst")
-      : (DataFrame, DataFrame, DataFrame) = {
-    require(iterations >= 1, s"need at least one iteration, got $iterations")
-    require(r0 % 20 == 0, s"r0 must be divisible by 20 so the 15% base term is exact, got $r0")
-    val base = 15L * r0 / 100
-    val e = edgeFrame(edges, srcCol, dstCol)
-    val nodes = nodeFrame(e)
-    val (ed, deg) = staticEdges(e, nodes)
-    (iterate(ed, nodes.select(col("node"), lit(r0).as("rank")),
-      iterations, base), ed, deg)
-  }
-
-  /** Everything [[resumeDelta]] patches against the persisted static
-    * frame, shared with [[resumeDeltaPersonalized]]: the genuinely new
-    * (not-in-base) canonical delta edges, the brand-new nodes, the
-    * degree-patched rows for every src a new edge touches, and the
-    * untouched remainder of the static frame. The CONTRACT is that the
-    * delta batch is dimension-sized (broadcastable): every base-side
-    * frame is only SCANNED against a broadcast of a delta-derived
-    * frame — the base graph is never shuffled. Self-loop rows keep
-    * their stored `d` even when a degree changed: with w = 0 the
-    * round contribution (rank div d)·w is zero whatever d is, so only
-    * w = 1 rows need the patched degree. */
-  private def deltaPatch(static0: DataFrame, deg0: DataFrame,
-      deltaEdges: DataFrame, srcCol: String, dstCol: String)
-      : (DataFrame, DataFrame, DataFrame, DataFrame) = {
+  /** The delta-shaped entry points: PATCH the persisted static frame
+    * with the delta batch. The CONTRACT is that the delta batch is
+    * dimension-sized (broadcastable): every base-side frame is only
+    * SCANNED against a broadcast of a delta-derived frame — the base
+    * graph is never shuffled. Genuinely new (not-in-base) canonical
+    * delta edges are found against a base scan, only the rows whose src
+    * gained an edge are rebuilt (re-folded against patched degrees, seed
+    * flags re-derived from the broadcast seed list — flags are
+    * seed-membership facts, independent of the base graph), the
+    * untouched remainder is kept verbatim, and brand-new nodes append
+    * self-loops and enter at is_seed·r0. Self-loop rows keep their
+    * stored `d` even when a degree changed: with w = 0 the round
+    * contribution (rank div d)·w is zero whatever d is, so only w = 1
+    * rows need the patched degree. */
+  private def patch(static0: DataFrame, deg0: DataFrame, state: DataFrame,
+      deltaEdges: DataFrame, seeds: Option[DataFrame], iterations: Int, r0: Long,
+      srcCol: String, dstCol: String): DataFrame = {
+    val base = teleportBase(iterations, r0)
     val dEdges = deltaEdges.select(col(srcCol).as("src"), col(dstCol).as("dst")).distinct()
     val baseReal = static0.filter(col("w") === 1L).select(col("src"), col("dst"))
     // delta-minus-base without shuffling the base: stream the base scan
@@ -159,8 +187,9 @@ object PageRank {
     val newNodeCand = newE.select(col("src").as("node"))
       .union(newE.select(col("dst").as("node"))).distinct()
     val nodePresent = baseNodes.join(broadcast(newNodeCand), Seq("node"), "left_semi")
-    val newNodes = Materialize(
-      newNodeCand.join(broadcast(nodePresent), Seq("node"), "left_anti"))
+    val newNodes = Materialize(flagSeeds(
+      newNodeCand.join(broadcast(nodePresent), Seq("node"), "left_anti"),
+      "node", "is_seed", seeds))
     // out-degrees change exactly on new-edge srcs: patched d = stored + new
     val degDelta = newE.groupBy(col("src").as("node")).agg(count(lit(1)).as("dd"))
     val degChangedVals = deg0.join(broadcast(degDelta.select(col("node"))),
@@ -169,28 +198,49 @@ object PageRank {
       .select(col("node"), (coalesce(col("d"), lit(0L)) + col("dd")).as("d"))
     // rebuilt w=1 rows: the changed srcs' base edges + the new edges,
     // re-folded against the patched degrees
-    val changedB = broadcast(changedSrc.withColumn("__c", lit(1)))
     val baseChangedReal = static0.filter(col("w") === 1L)
       .join(broadcast(changedSrc), Seq("src"), "left_semi")
       .select(col("src"), col("dst"))
-    val rebuiltReal = baseChangedReal.union(newE)
+    val rebuiltReal = flagSeeds(baseChangedReal.union(newE)
       .join(broadcast(degNew.select(col("node").as("src"), col("d"))), Seq("src"))
-      .select(col("src"), col("dst"), lit(1L).as("w"), col("d"))
+      .select(col("src"), col("dst"), lit(1L).as("w"), col("d")), "dst", "ds", seeds)
     // one scan keeps everything except the w=1 rows being rebuilt
-    val untouched = static0.join(changedB, Seq("src"), "left")
+    val untouched = static0.join(broadcast(changedSrc.withColumn("__c", lit(1))), Seq("src"), "left")
       .filter(col("w") === 0L || col("__c").isNull)
-      .select(col("src"), col("dst"), col("w"), col("d"))
-    (newNodes, degNew, rebuiltReal, untouched)
+    val newSelfLoops = newNodes
+      .join(degNew, Seq("node"), "left")
+      .select(col("node").as("src"), col("node").as("dst"), lit(0L).as("w"),
+        coalesce(col("d"), lit(1L)).as("d"), col("is_seed").as("ds"))
+    val cols = edgeCols(seeds)
+    val ed = Materialize(untouched.select(cols: _*).union(rebuiltReal.select(cols: _*))
+      .union(newSelfLoops.select(cols: _*)))
+    // single consumer (round 1) over a parquet state scan + checkpointed
+    // newNodes — no fence needed
+    val ranks0 = state.select(col("node"), col("rank"))
+      .union(newNodes.select(col("node"), (col("is_seed") * lit(r0)).as("rank")))
+    iterate(ed, ranks0, iterations, base, seeds)
   }
+
+  def run(edges: DataFrame, iterations: Int = 5, r0: Long = 1000000000L,
+      srcCol: String = "src", dstCol: String = "dst"): DataFrame =
+    rebuild(edges, None, None, iterations, r0, srcCol, dstCol)._1
+
+  /** [[run]] that ALSO returns the graph state a delta batch needs:
+    * (ranks, static, deg) where `static` is the self-loop-extended
+    * degree-folded edge frame the rounds iterated on and `deg` the
+    * node-sized out-degree frame. Persist all three and hand them to
+    * [[resumeDelta]] — then a later delta batch never re-shuffles the
+    * base graph (the full union rebuild that [[resume]] pays). */
+  def runWithState(edges: DataFrame, iterations: Int = 5,
+      r0: Long = 1000000000L, srcCol: String = "src", dstCol: String = "dst")
+      : (DataFrame, DataFrame, DataFrame) =
+    rebuild(edges, None, None, iterations, r0, srcCol, dstCol)
 
   /** [[resume]] against PERSISTED GRAPH STATE — the delta-shaped fast
     * path: instead of rebuilding the canonical edge/node/degree frames
     * from the full base ∪ delta union (three shuffles of the whole
-    * graph), PATCH the persisted static frame with the delta:
-    * broadcast-dedup the delta against a base scan, rebuild only the
-    * rows whose src gained an edge, keep the untouched remainder
-    * verbatim, append self-loops for brand-new nodes (entering at
-    * `r0`), and run `iterations` more rounds of the identical
+    * graph), PATCH the persisted static frame with the delta (see
+    * [[patch]]) and run `iterations` more rounds of the identical
     * recurrence. Bit-identical to [[resume]] over the same inputs by
     * construction (same canonical frames, same recurrence — the
     * driver's oracle replays the same two-phase recursive CTE).
@@ -198,23 +248,8 @@ object PageRank {
     * for bulk loads comparable to the base graph, use [[resume]]. */
   def resumeDelta(static0: DataFrame, deg0: DataFrame, state: DataFrame,
       deltaEdges: DataFrame, iterations: Int = 2, r0: Long = 1000000000L,
-      srcCol: String = "src", dstCol: String = "dst"): DataFrame = {
-    require(iterations >= 1, s"need at least one iteration, got $iterations")
-    require(r0 % 20 == 0, s"r0 must be divisible by 20 so the 15% base term is exact, got $r0")
-    val base = 15L * r0 / 100
-    val (newNodes, degNew, rebuiltReal, untouched) =
-      deltaPatch(static0, deg0, deltaEdges, srcCol, dstCol)
-    val newSelfLoops = newNodes
-      .join(degNew, Seq("node"), "left")
-      .select(col("node").as("src"), col("node").as("dst"), lit(0L).as("w"),
-        coalesce(col("d"), lit(1L)).as("d"))
-    val ed = Materialize(untouched.union(rebuiltReal).union(newSelfLoops))
-    // single consumer (round 1) over a parquet state scan + checkpointed
-    // newNodes — no fence needed
-    val ranks0 = state.select(col("node"), col("rank"))
-      .union(newNodes.select(col("node"), lit(r0).as("rank")))
-    iterate(ed, ranks0, iterations, base)
-  }
+      srcCol: String = "src", dstCol: String = "dst"): DataFrame =
+    patch(static0, deg0, state, deltaEdges, None, iterations, r0, srcCol, dstCol)
 
   /** Resume PageRank from PERSISTED rank state after a delta edge
     * batch lands — the incremental-maintenance face of [[run]] (the
@@ -237,19 +272,8 @@ object PageRank {
     * the savings is the k base rounds that never re-run. */
   def resume(edges: DataFrame, state: DataFrame, iterations: Int = 2,
       r0: Long = 1000000000L, srcCol: String = "src", dstCol: String = "dst")
-      : DataFrame = {
-    require(iterations >= 1, s"need at least one iteration, got $iterations")
-    require(r0 % 20 == 0, s"r0 must be divisible by 20 so the 15% base term is exact, got $r0")
-    val base = 15L * r0 / 100
-
-    val e = edgeFrame(edges, srcCol, dstCol)
-    val nodes = nodeFrame(e)
-    val (ed, _) = staticEdges(e, nodes)
-    val ranks0 = nodes
-      .join(state.select(col("node"), col("rank").as("__stored")), Seq("node"), "left")
-      .select(col("node"), coalesce(col("__stored"), lit(r0)).as("rank"))
-    iterate(ed, ranks0, iterations, base)
-  }
+      : DataFrame =
+    rebuild(edges, None, Some(state), iterations, r0, srcCol, dstCol)._1
 
   /** Personalized PageRank: identical recurrence and conventions as
     * [[run]], but the initial mass AND the per-round 15% teleport base
@@ -268,16 +292,8 @@ object PageRank {
     * DuckDB recursive-CTE oracle differs only in two seed CASEs. */
   def personalized(edges: DataFrame, seeds: DataFrame, iterations: Int = 5,
       r0: Long = 1000000000L, srcCol: String = "src", dstCol: String = "dst")
-      : DataFrame = {
-    require(iterations >= 1, s"need at least one iteration, got $iterations")
-    require(r0 % 20 == 0, s"r0 must be divisible by 20 so the 15% base term is exact, got $r0")
-    val base = 15L * r0 / 100
-    val e = edgeFrame(edges, srcCol, dstCol)
-    val (flagged, ed, _) = personalizedStatic(e, seeds)
-    iteratePersonalized(ed,
-      flagged.select(col("node"), (col("is_seed") * lit(r0)).as("rank")),
-      iterations, base)
-  }
+      : DataFrame =
+    rebuild(edges, Some(seeds), None, iterations, r0, srcCol, dstCol)._1
 
   /** [[personalized]] that ALSO returns (ranks, static, deg) so a
     * delta batch can go through [[resumeDeltaPersonalized]] without
@@ -285,59 +301,19 @@ object PageRank {
     * the seed flag riding the static frame. */
   def personalizedWithState(edges: DataFrame, seeds: DataFrame,
       iterations: Int = 5, r0: Long = 1000000000L, srcCol: String = "src",
-      dstCol: String = "dst"): (DataFrame, DataFrame, DataFrame) = {
-    require(iterations >= 1, s"need at least one iteration, got $iterations")
-    require(r0 % 20 == 0, s"r0 must be divisible by 20 so the 15% base term is exact, got $r0")
-    val base = 15L * r0 / 100
-    val e = edgeFrame(edges, srcCol, dstCol)
-    val (flagged, ed, deg) = personalizedStatic(e, seeds)
-    (iteratePersonalized(ed,
-      flagged.select(col("node"), (col("is_seed") * lit(r0)).as("rank")),
-      iterations, base), ed, deg)
-  }
+      dstCol: String = "dst"): (DataFrame, DataFrame, DataFrame) =
+    rebuild(edges, Some(seeds), None, iterations, r0, srcCol, dstCol)
 
-  /** The static frames [[personalized]] iterates on: the seed-flagged
-    * node frame and the self-loop-extended edge frame with out-degree
-    * AND the dst's seed flag folded in once (seed lists are
-    * dimension-sized — broadcast) — each round stays one join + one
-    * aggregation; the flag rides the aggregation as a
-    * constant-per-group max. */
-  private def personalizedStatic(e: DataFrame, seeds: DataFrame)
-      : (DataFrame, DataFrame, DataFrame) = {
-    val nodes = nodeFrame(e)
-    val deg = e.groupBy(col("src").as("node")).agg(count(lit(1)).as("d"))
-    val seedSet = broadcast(
-      seeds.select(col(seeds.columns.head).as("node")).distinct()
-        .withColumn("__s", lit(1L)))
-    // LAZY: first consumed by the eager `ed` fence job below (ranks0
-    // reads the cached blocks after)
-    val flagged = Materialize.lazyFence(nodes.join(seedSet, Seq("node"), "left")
-      .select(col("node"), coalesce(col("__s"), lit(0L)).as("is_seed")))
-    val eplus =
-      e.select(col("src"), col("dst"), lit(1L).as("w"))
-        .union(nodes.select(col("node").as("src"), col("node").as("dst"), lit(0L).as("w")))
-    val ed = Materialize(eplus
-      .join(deg.select(col("node").as("src"), col("d")), Seq("src"), "left")
-      .join(flagged.select(col("node").as("dst"), col("is_seed").as("ds")), Seq("dst"))
-      .select(col("src"), col("dst"), col("w"),
-        coalesce(col("d"), lit(1L)).as("d"), col("ds")))
-    (flagged, ed, deg)
-  }
-
-  /** [[iterate]] with the seed-flag column — same LAZY chained fences. */
-  private def iteratePersonalized(ed: DataFrame, ranks0: DataFrame,
-      iterations: Int, base: Long): DataFrame = {
-    var ranks = ranks0
-    for (_ <- 1 to iterations) {
-      ranks = Materialize.lazyFence(
-        ranks.join(ed, col("node") === col("src"))
-          .groupBy(col("dst").as("node2"))
-          .agg(sum(expr("(rank div d) * w")).as("s"), max(col("ds")).as("isd"))
-          .select(col("node2").as("node"),
-            (col("isd") * lit(base) + expr("(85 * s) div 100")).as("rank")))
-    }
-    ranks
-  }
+  /** [[resumeDelta]]'s delta-shaped fast path for the personalized
+    * recurrence: the same [[patch]] of the persisted seed-flagged static
+    * frame, with brand-new nodes entering at is_seed·r0 — exactly the
+    * personalized init. Bit-identical to [[resumePersonalized]] over
+    * the same inputs; same dimension-sized-delta contract. */
+  def resumeDeltaPersonalized(static0: DataFrame, deg0: DataFrame,
+      state: DataFrame, deltaEdges: DataFrame, seeds: DataFrame,
+      iterations: Int = 2, r0: Long = 1000000000L, srcCol: String = "src",
+      dstCol: String = "dst"): DataFrame =
+    patch(static0, deg0, state, deltaEdges, Some(seeds), iterations, r0, srcCol, dstCol)
 
   /** Personalized-PageRank warm-start resumption — [[resume]]'s
     * discipline applied to [[personalized]]: stored (node, rank) state
@@ -349,64 +325,8 @@ object PageRank {
     * seed-based recurrence run. Equals the one-session two-phase
     * schedule by construction; the oracle replays it as chained
     * recursive CTEs with the seed CASEs. */
-  /** [[resumeDelta]]'s delta-shaped fast path for the personalized
-    * recurrence: patch the persisted seed-flagged static frame with
-    * the delta batch (the [[deltaPatch]] machinery — base graph
-    * scanned, never shuffled), re-deriving the `ds` flag of rebuilt
-    * rows and the seed state of brand-new nodes from the broadcast
-    * seed set (flags are seed-membership facts, independent of the
-    * base graph). Brand-new nodes enter at is_seed·r0 — exactly the
-    * personalized init. Bit-identical to [[resumePersonalized]] over
-    * the same inputs; same dimension-sized-delta contract. */
-  def resumeDeltaPersonalized(static0: DataFrame, deg0: DataFrame,
-      state: DataFrame, deltaEdges: DataFrame, seeds: DataFrame,
-      iterations: Int = 2, r0: Long = 1000000000L, srcCol: String = "src",
-      dstCol: String = "dst"): DataFrame = {
-    require(iterations >= 1, s"need at least one iteration, got $iterations")
-    require(r0 % 20 == 0, s"r0 must be divisible by 20 so the 15% base term is exact, got $r0")
-    val base = 15L * r0 / 100
-    val seedSet = broadcast(
-      seeds.select(col(seeds.columns.head).as("node")).distinct()
-        .withColumn("__s", lit(1L)))
-    val (newNodes, degNew, rebuiltRealBare, untouched) =
-      deltaPatch(static0.select(col("src"), col("dst"), col("w"), col("d")),
-        deg0, deltaEdges, srcCol, dstCol)
-    // the plain-variant patch drops `ds`; re-derive it for rebuilt and
-    // new rows from seed membership, and re-attach the stored flag to
-    // the untouched remainder via the one scan's own columns
-    val untouchedP = static0.join(
-      broadcast(rebuiltRealBare.select(col("src")).distinct().withColumn("__c", lit(1))),
-      Seq("src"), "left")
-      .filter(col("w") === 0L || col("__c").isNull)
-      .select(col("src"), col("dst"), col("w"), col("d"), col("ds"))
-    val rebuiltP = rebuiltRealBare
-      .join(seedSet.select(col("node").as("dst"), col("__s")), Seq("dst"), "left")
-      .select(col("src"), col("dst"), col("w"), col("d"),
-        coalesce(col("__s"), lit(0L)).as("ds"))
-    val newFlagged = Materialize(newNodes.join(seedSet, Seq("node"), "left")
-      .select(col("node"), coalesce(col("__s"), lit(0L)).as("is_seed")))
-    val newSelfLoops = newFlagged
-      .join(degNew, Seq("node"), "left")
-      .select(col("node").as("src"), col("node").as("dst"), lit(0L).as("w"),
-        coalesce(col("d"), lit(1L)).as("d"), col("is_seed").as("ds"))
-    val ed = Materialize(untouchedP.union(rebuiltP).union(newSelfLoops))
-    val ranks0 = state.select(col("node"), col("rank"))
-      .union(newFlagged.select(col("node"), (col("is_seed") * lit(r0)).as("rank")))
-    iteratePersonalized(ed, ranks0, iterations, base)
-  }
-
   def resumePersonalized(edges: DataFrame, seeds: DataFrame,
       state: DataFrame, iterations: Int = 2, r0: Long = 1000000000L,
-      srcCol: String = "src", dstCol: String = "dst"): DataFrame = {
-    require(iterations >= 1, s"need at least one iteration, got $iterations")
-    require(r0 % 20 == 0, s"r0 must be divisible by 20 so the 15% base term is exact, got $r0")
-    val base = 15L * r0 / 100
-    val e = edgeFrame(edges, srcCol, dstCol)
-    val (flagged, ed, _) = personalizedStatic(e, seeds)
-    val ranks0 = flagged
-      .join(state.select(col("node"), col("rank").as("__stored")), Seq("node"), "left")
-      .select(col("node"),
-        coalesce(col("__stored"), col("is_seed") * lit(r0)).as("rank"))
-    iteratePersonalized(ed, ranks0, iterations, base)
-  }
+      srcCol: String = "src", dstCol: String = "dst"): DataFrame =
+    rebuild(edges, Some(seeds), Some(state), iterations, r0, srcCol, dstCol)._1
 }

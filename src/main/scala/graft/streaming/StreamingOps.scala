@@ -14,23 +14,49 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   */
 object StreamingOps {
 
-  /** Run independent per-batch sink writes as CONCURRENT Spark jobs
-    * (guide §2.6 — actions are only sequential because driver code
-    * calls them sequentially): the gates whose microbatch commits more
-    * than one parquet sink (score output + the versioned state parts)
-    * were paying one serial driver round-trip per sink. The writes
-    * must be mutually independent (distinct directories, no
+  /** Runs independent tasks as CONCURRENT Spark jobs and returns
+    * their results in order (guide §2.6 — actions are only sequential
+    * because driver code calls them sequentially): the gates whose
+    * microbatch commits more than one parquet sink (score output + the
+    * versioned state parts), the SparkEntry queries' concurrent writes,
+    * `Manifest.compact`'s group rewrites and the `fuzz_condexpr` chunks.
+    * Tasks must be mutually independent (distinct directories, no
     * read-after-write between them); the versioned-state marker flip
     * still happens strictly AFTER every write lands, so the
     * exactly-once contract (commit = marker, replay overwrites with
-    * identical bytes) is unchanged. Also the one concurrent-write
-    * helper of the SparkEntry queries; failures propagate like the
-    * serial form. */
-  private[graft] def concurrently(writes: (() => Unit)*): Unit = {
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    import scala.concurrent.ExecutionContext.Implicits.global
-    writes.map(w => Future(w())).foreach(Await.result(_, Duration.Inf))
+    * identical bytes) is unchanged.
+    *
+    * Fails fast: each task runs under its own Spark job group with
+    * interruptOnCancel. The first failure cancels every group, running
+    * and future jobs alike, waits until the sibling tasks have stopped
+    * and is rethrown, so no sibling job outlives the call and no caller
+    * waits on work whose result is moot. The pool threads are started
+    * by the calling thread and inherit its Spark local properties. */
+  private[graft] def concurrently[T](tasks: (() => T)*): Seq[T] = {
+    import java.util.concurrent.{Callable, ExecutionException, Executors,
+      ExecutorCompletionService, TimeUnit}
+    val sc = org.apache.spark.sql.SparkSession.active.sparkContext
+    val desc = sc.getLocalProperty("spark.job.description")
+    val id = java.util.UUID.randomUUID()
+    val groups = tasks.indices.map(i => s"graft-concurrently-$id-$i")
+    val pool = Executors.newFixedThreadPool(
+      math.max(1, math.min(tasks.size, Runtime.getRuntime.availableProcessors)))
+    val done = new ExecutorCompletionService[T](pool)
+    val futures = tasks.zip(groups).map { case (task, group) =>
+      done.submit(new Callable[T] {
+        def call(): T = { sc.setJobGroup(group, desc, interruptOnCancel = true); task() }
+      })
+    }
+    try {
+      // completion order: the first failure surfaces as soon as it happens
+      futures.foreach(_ => done.take().get())
+      futures.map(_.get())
+    } catch { case e: Throwable =>
+      groups.foreach(sc.cancelJobGroupAndFutureJobs)
+      pool.shutdownNow()
+      pool.awaitTermination(Long.MaxValue, TimeUnit.NANOSECONDS)
+      throw (e match { case x: ExecutionException => x.getCause; case x => x })
+    } finally pool.shutdown()
   }
 
   final case class Event(event_id: Long, ts: java.sql.Timestamp, user_id: Long,

@@ -257,6 +257,24 @@ class DedupSpec extends SparkTestBase {
     assert(jobs.size <= maxRounds + 3, s"${jobs.size} jobs")
   }
 
+  test("components past maxRounds throws IllegalStateException with its message") {
+    import spark.implicits._
+    val chain = (0L until 10L).map(i => (i, i + 1)).toDF("a_id", "b_id")
+    val ex = intercept[IllegalStateException](Dedup.components(chain, maxRounds = 1).collect())
+    assert(ex.getMessage === "components did not converge in 1 rounds — raise maxRounds " +
+      "(component diameter exceeds it) or switch to large-star/small-star")
+  }
+
+  test("shingle sets hash each document once, above the barrier (plan-shape guard)") {
+    import org.apache.spark.sql.catalyst.plans.logical.Repartition
+    val dir = java.nio.file.Files.createTempDirectory("shingle_plan_").toString
+    docs.write.mode("overwrite").parquet(dir)
+    val plan = Dedup.lshIndexState(spark.read.parquet(dir)).queryExecution.optimizedPlan
+    assert("shingle_hashes\\(".r.findAllIn(plan.toString).size === 1, plan.toString)
+    val below = plan.collectFirst { case r: Repartition => r.child }
+    assert(below.exists(!_.toString.contains("shingle_hashes")), plan.toString)
+  }
+
   test("minhash fences once; components reads its fenced pairs (job-count guard)") {
     val ((pairs, got), mhJobs) = jobsOf {
       val p = Dedup.minhash(docs, threshold = 0.5)

@@ -171,4 +171,37 @@ class GraphSpec extends SparkTestBase {
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(out(5L) === 4L && out(6L) === 5L)
   }
+
+  test("iterative operators: Spark jobs for build + collect (job-count guard)") {
+    // small fixed graphs; each count is build + collect in the test
+    // session (local[4], 4 shuffle partitions, AQE on)
+    val kc = Seq((1L, 2L), (1L, 3L), (1L, 4L), (2L, 3L), (2L, 4L), (3L, 4L),
+      (4L, 5L), (5L, 6L)).toDF("u", "v")
+    val (core, kJobs) = jobsOf(Graph.kCore(kc, 2).collect())
+    assert(core.map(_.getLong(0)).toSet === Set(1L, 2L, 3L, 4L))
+    // the edge count, three peel rounds (edge 5-6, edge 4-5, then none)
+    // and the collect
+    assert(kJobs.size === 16, s"kCore: ${kJobs.size} jobs")
+    val bfs = Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L), (1L, 4L)).toDF("u", "v")
+    val (_, bJobs) = jobsOf(Graph.bfsDistances(bfs, source = 1L, maxHops = 10).collect())
+    // the one-row seed is used unfenced: 15 jobs with its eager fence
+    assert(bJobs.size === 14, s"bfsDistances: ${bJobs.size} jobs")
+    val sssp = Seq((1L, 4L, 10L), (1L, 2L, 1L), (2L, 3L, 1L), (3L, 4L, 1L)).toDF("u", "v", "w")
+    val (_, sJobs) = jobsOf(Graph.ssspDistances(sssp, source = 1L, maxRounds = 5).collect())
+    // 27 with the eager seed fence: the fence's job, and one more the
+    // first round's joins pay over a checkpointed seed
+    assert(sJobs.size === 25, s"ssspDistances: ${sJobs.size} jobs")
+    val lpa = Seq((1L, 2L), (2L, 3L), (1L, 3L), (2L, 3L), (5L, 5L),
+      (4L, 5L), (5L, 6L), (4L, 6L), (3L, 4L)).toDF("u", "v")
+    val (_, lJobs) = jobsOf(Graph.labelPropagation(lpa, rounds = 3).collect())
+    assert(lJobs.size === 13, s"labelPropagation: ${lJobs.size} jobs")
+  }
+
+  test("kCore past maxRounds throws IllegalArgumentException with its message") {
+    // a 10-node path loses its two end edges per round: 2 rounds are too few
+    val path = (0L until 9L).map(i => (i, i + 1)).toDF("u", "v")
+    val ex = intercept[IllegalArgumentException](Graph.kCore(path, 2, maxRounds = 2).collect())
+    assert(ex.getMessage === "requirement failed: k-core peel did not converge in 2 " +
+      "rounds (pathological chain?) — raise maxRounds")
+  }
 }

@@ -202,4 +202,24 @@ class PageRankSpec extends SparkTestBase {
     assert(viaPatch.contains(8L) && viaPatch.contains(9L))
     assert(viaPatch(9L) > 0L, "delta-born seed must carry teleport mass")
   }
+
+  test("run, personalized and resumeDelta: Spark jobs for build + collect (job-count guard)") {
+    val hub = ((2L to 10L).map(_ -> 1L) :+ (1L -> 2L)).toDF("src", "dst")
+    val (_, runJobs) = jobsOf(PageRank.run(hub, iterations = 3).collect())
+    assert(runJobs.size === 13, s"run: ${runJobs.size} jobs")
+    val (_, pprJobs) = jobsOf(
+      PageRank.personalized(hub, Seq(1L).toDF("node"), iterations = 3).collect())
+    assert(pprJobs.size === 15, s"personalized: ${pprJobs.size} jobs")
+    val base = Seq(1L -> 2L, 2L -> 3L, 3L -> 1L, 4L -> 1L, 5L -> 2L)
+    val delta = Seq(1L -> 2L, 4L -> 3L, 9L -> 1L, 1L -> 9L, 8L -> 9L)
+    val dir = java.nio.file.Files.createTempDirectory("pr_jobs_state_").toString
+    val (ranks, static0, deg) = PageRank.runWithState(base.toDF("src", "dst"), iterations = 3)
+    graft.etl.Sinks.parquetDir(ranks, dir + "/ranks")
+    graft.etl.Sinks.parquetDir(static0, dir + "/static")
+    graft.etl.Sinks.parquetDir(deg, dir + "/deg")
+    val (_, deltaJobs) = jobsOf(PageRank.resumeDelta(
+      spark.read.parquet(dir + "/static"), spark.read.parquet(dir + "/deg"),
+      spark.read.parquet(dir + "/ranks"), delta.toDF("src", "dst"), iterations = 2).collect())
+    assert(deltaJobs.size === 27, s"resumeDelta: ${deltaJobs.size} jobs")
+  }
 }

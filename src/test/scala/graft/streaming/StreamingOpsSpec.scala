@@ -966,4 +966,28 @@ class StreamingOpsSpec extends SparkTestBase {
     assert(gate.toSeq === direct.toSeq)
     assert(gate(0) === Seq("A", 3L, 40000000L, 17500000L))
   }
+
+  test("concurrently returns results in order and fails fast, cancelling a running sibling") {
+    assert(concurrently(() => 1, () => 2, () => 3) === Seq(1, 2, 3))
+    val sc = spark.sparkContext
+    def waitFor(cond: => Boolean): Boolean = {
+      val end = System.nanoTime() + 20000000000L
+      while (!cond && System.nanoTime() < end) Thread.sleep(20)
+      cond
+    }
+    val t0 = System.nanoTime()
+    val ex = intercept[IllegalStateException](concurrently(
+      () => sc.parallelize(Seq(1), 1).map { x => Thread.sleep(60000); x }.count(),
+      () => {
+        // fail only once the sibling's sleeping job is running
+        assert(waitFor(sc.statusTracker.getActiveJobIds.nonEmpty))
+        throw new IllegalStateException("boom")
+      }))
+    val secs = (System.nanoTime() - t0) / 1e9
+    assert(ex.getMessage === "boom")
+    assert(secs < 20, s"rethrown after $secs s")
+    // the status store hears of the job's end through the async listener bus
+    assert(waitFor(sc.statusTracker.getActiveJobIds.isEmpty),
+      s"jobs still active: ${sc.statusTracker.getActiveJobIds.mkString(",")}")
+  }
 }
