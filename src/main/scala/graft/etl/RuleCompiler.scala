@@ -36,7 +36,6 @@ object RuleCompiler {
   private final val LookupColPrefix = "__graft_lk_"
   private final val OrdCol = "__graft_ord"
   private final val KeyCol = "__graft_key"
-  private final val JobDescription = "spark.job.description"
 
   /** Compile and apply `rules` to `main`, resolving Lookup rules against
     * `mappings`. Failed rules are reported and skipped; the rest run.
@@ -183,16 +182,16 @@ object RuleCompiler {
     val keyed = mapping.select(key, col(quote(valCol)))
     val valType = keyed.schema(1).dataType
     val sc = mapping.sparkSession.sparkContext
-    val previous = sc.getLocalProperty(JobDescription)
-    sc.setLocalProperty(JobDescription, s"etl.RuleCompiler.lookup:$mapName")
-    val parts = try sc.runJob(keyed.queryExecution.toRdd, { rows: Iterator[InternalRow] =>
-      val last = new java.util.HashMap[UTF8String, Any]()
-      rows.foreach { r =>
-        if (!r.isNullAt(0)) last.put(r.getUTF8String(0).clone(),
-          if (r.isNullAt(1)) null else InternalRow.copyValue(r.get(1, valType)))
-      }
-      last
-    }) finally sc.setLocalProperty(JobDescription, previous)
+    val parts = graft.Obs.phase(sc, s"etl.RuleCompiler.lookup:$mapName") {
+      sc.runJob(keyed.queryExecution.toRdd, { rows: Iterator[InternalRow] =>
+        val last = new java.util.HashMap[UTF8String, Any]()
+        rows.foreach { r =>
+          if (!r.isNullAt(0)) last.put(r.getUTF8String(0).clone(),
+            if (r.isNullAt(1)) null else InternalRow.copyValue(r.get(1, valType)))
+        }
+        last
+      })
+    }
     val dict = new java.util.HashMap[UTF8String, Any]()
     parts.foreach(dict.putAll)
     val shipped = sc.broadcast[java.util.Map[UTF8String, Any]](dict)

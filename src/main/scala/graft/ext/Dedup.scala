@@ -568,19 +568,22 @@ object Dedup {
       .mapValues(_.toArray.distinct))
     val labels0 = adj.mapPartitions(_.map { case (v, nbrs) => (v, math.min(v, nbrs.min)) },
       preservesPartitioning = true)
-    val (labels, converged) = Materialize.fixpoint(labels0, maxRounds) { labels =>
-      val hooked = adj.join(labels, part)
-        .flatMap { case (v, (nbrs, l)) => Iterator.single((v, l)) ++ nbrs.iterator.map((_, l)) }
-        .reduceByKey(part, math.min(_, _))
-      // pointer jumping: label := label's label. Every label is a vertex
-      // id, so the left join only misses if that invariant breaks.
-      val jumped = hooked.map(_.swap).leftOuterJoin(hooked, part)
-        .map { case (l, (v, ll)) => (v, ll.getOrElse(l)) }
-      val next = Materialize.rdd(jumped.partitionBy(part))
-      val changed = next.join(labels, part).filter { case (_, (n, o)) => n != o }.count()
-      labels.unpersist(blocking = false)
-      (next, changed)
-    }
+    // no edge, no vertex: skip the round job
+    val (labels, converged) =
+      if (nEdges == 0L) (sess.sparkContext.emptyRDD[(Long, Long)], true)
+      else Materialize.fixpoint(labels0, maxRounds) { labels =>
+        val hooked = adj.join(labels, part)
+          .flatMap { case (v, (nbrs, l)) => Iterator.single((v, l)) ++ nbrs.iterator.map((_, l)) }
+          .reduceByKey(part, math.min(_, _))
+        // pointer jumping: label := label's label. Every label is a vertex
+        // id, so the left join only misses if that invariant breaks.
+        val jumped = hooked.map(_.swap).leftOuterJoin(hooked, part)
+          .map { case (l, (v, ll)) => (v, ll.getOrElse(l)) }
+        val next = Materialize.rdd(jumped.partitionBy(part))
+        val changed = next.join(labels, part).filter { case (_, (n, o)) => n != o }.count()
+        labels.unpersist(blocking = false)
+        (next, changed)
+      }
     // the labels are materialized and cut from both fences
     edges.unpersist(blocking = false); adj.unpersist(blocking = false)
     // partially-propagated labels are silently WRONG cluster ids — a

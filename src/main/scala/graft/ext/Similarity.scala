@@ -1,6 +1,8 @@
 package graft.ext
 
+import org.apache.spark.TaskContext
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -105,58 +107,186 @@ object Similarity {
   def srpSignature(vec: Column, planes: Int): Column =
     graft.functions.sketches.srp_signature(vec, planes)
 
-  /** Shared coarse quantizer: fit K-Means on a bounded sample, assign
-    * every vector to its nearest centroid via the codegen'd argmin over
-    * a broadcast flat centroid matrix. Returns the assigned (id, v,
-    * cell) frame plus the (cell, centroid) list (cells-sized — control
-    * plane). Powers both [[ivfTopK]] and [[graft.ext.Dedup.semdedup]].
+  /** Training points per centroid at most (FAISS's
+    * `max_points_per_centroid`): a fit reads no more than
+    * `min(maxFitVectors, k × PointsPerCentroid)` sampled vectors. */
+  private final val PointsPerCentroid = 256
+  /** Lloyd's rounds of every fit, partition-local and driver merge. */
+  private final val Iterations = 10
+
+  /** One quantizer of a fit: the vector splits into `m` equal subspaces
+    * (1 = the whole vector, the IVF coarse quantizer; m = the PQ
+    * subspaces) and each subspace gets `k` centroids, seeded `seed + j`. */
+  private[ext] final case class Quantizer(k: Int, m: Int, seed: Long)
+
+  /** A [[kmeansFit]] result: the vector width, per quantizer and
+    * subspace the row-major centroid matrix, and the number of sampled
+    * vectors the fit read. */
+  private[ext] final case class Fit(dim: Int, centroids: Seq[IndexedSeq[Array[Double]]],
+      points: Long)
+
+  /** The engine's one k-means: fits every quantizer of `qs` over a
+    * bounded sample of `prepared` (`id`, `v` array<double>, `total`
+    * rows) in ONE Spark job, named `ext.Similarity.kmeans`.
+    * Divide-and-conquer clustering (Guha et al., TKDE 2003): each sample
+    * partition runs a seeded weighted Lloyd's ([[lloyd]]) on every
+    * subspace of every quantizer and returns weighted centroids; the
+    * driver reclusters their union per subspace with the same Lloyd's
+    * (the weighted recluster of k-means||, Bahmani et al., VLDB 2012).
     *
-    * 100 TB shape: the quantizer trains on at most `maxFitVectors`
-    * rows — only the sample is ever cached, and it is unpersisted after
-    * fit; the full corpus is touched by exactly one assignment pass.
-    * `nCells <= 0` auto-sizes by the √N rule (clamped to [16, 4096]) so
-    * cell population stays ~√N as the corpus grows. */
-  private[ext] def kmeansCells(prepared: DataFrame, nCells: Int, seed: Long,
-      maxFitVectors: Long): (DataFrame, Seq[(Int, Array[Double])]) = {
-    import org.apache.spark.ml.clustering.KMeans
-    import org.apache.spark.ml.functions.array_to_vector
-    // parquet-backed count is a metadata-cheap pass; it sizes both the
-    // fit sample fraction and the auto cell count
-    val total = math.max(prepared.count(), 1L)
-    val cells = math.max(2, math.min(
+    * The sample holds at most `min(maxFitVectors, kMax × 256)` vectors
+    * and is coalesced to ⌊√(sample / kMax)⌋ partitions, so the driver's
+    * merge input (≤ partitions × k points) is no larger than one
+    * partition's share. Each centroid matrix has k rows, or fewer when
+    * the sample holds fewer than k points. Fails loud on a vector of another
+    * width (the `centroid_argmin` message) and on a width that does not
+    * divide into a quantizer's m subspaces. */
+  private[ext] def kmeansFit(prepared: DataFrame, total: Long, qs: Seq[Quantizer],
+      seed: Long, maxFitVectors: Long): Fit = {
+    val kMax = qs.map(_.k).max
+    val cap = math.max(1L, math.min(maxFitVectors, kMax.toLong * PointsPerCentroid))
+    val frac = cap.toDouble / math.max(total, 1L)
+    val nParts = math.max(1, math.sqrt(math.min(cap, total).toDouble / kMax).toInt)
+    val quota = (cap / nParts).toInt
+    val sample = (if (frac < 1.0) prepared.sample(withReplacement = false, frac, seed)
+      else prepared).select(col("v")).coalesce(nParts)
+    val sc = prepared.sparkSession.sparkContext
+    val parts = graft.Obs.phase(sc, "ext.Similarity.kmeans") {
+      sc.runJob(sample.queryExecution.toRdd, { (task: TaskContext, rows: Iterator[InternalRow]) =>
+        var dim = -1
+        val vecs = rows.filter(!_.isNullAt(0)).take(quota).map { r =>
+          val v = r.getArray(0)
+          if (dim < 0) dim = v.numElements()
+          graft.functions.Centroids.vector(v, dim)
+        }.toArray
+        val n = vecs.length
+        val fits =
+          if (n == 0 || dim == 0 || qs.exists(dim % _.m != 0)) Seq.empty
+          else {
+            val flat = vecs.flatten
+            val ones = Array.fill(n)(1.0)
+            qs.map { q =>
+              val width = dim / q.m
+              (0 until q.m).map(j => lloyd(flat, dim, j * width, width, ones, n, q.k,
+                q.seed + j + task.partitionId()))
+            }
+          }
+        (dim, fits, n.toLong)
+      })
+    }
+    val fitted = parts.filter(_._2.nonEmpty)
+    val dims = parts.map(_._1).filter(_ >= 0).distinct
+    if (dims.length > 1) throw graft.functions.Centroids.dimMismatch(dims(1), dims(0))
+    require(dims.nonEmpty, s"k-means fit: no vectors in the sample of $total rows")
+    val dim = dims.head
+    qs.foreach(q => require(dim > 0 && dim % q.m == 0,
+      s"vector dim $dim must divide into m=${q.m} subspaces"))
+    val centroids = qs.indices.map { qi =>
+      val q = qs(qi)
+      val width = dim / q.m
+      (0 until q.m).map { j =>
+        // the union of every partition's non-empty weighted centroids
+        val local = fitted.flatMap { case (_, fits, _) =>
+          val (ctrs, ws) = fits(qi)(j)
+          ws.indices.filter(ws(_) > 0.0).map(c => (ctrs.slice(c * width, (c + 1) * width), ws(c)))
+        }
+        lloyd(local.flatMap(_._1).toArray, width, 0, width, local.map(_._2).toArray,
+          local.length, q.k, q.seed + j)._1
+      }
+    }
+    Fit(dim, centroids, fitted.map(_._3).sum)
+  }
+
+  /** Weighted Lloyd's over `n` points of `width` components, point i at
+    * `pts(i * stride + off)` with weight `w(i)`: k-means++ seeding
+    * (Arthur & Vassilvitskii, SODA 2007: each next centre drawn with
+    * probability ∝ weight × squared distance to the nearest chosen one,
+    * from `seed`), then [[Iterations]] rounds of assign-and-average. No
+    * more than `k` points come back unchanged; an empty cell keeps its
+    * centroid. Returns the row-major centroid matrix and each cell's
+    * weight in the last assignment. Deterministic for a given input. */
+  private def lloyd(pts: Array[Double], stride: Int, off: Int, width: Int,
+      w: Array[Double], n: Int, k: Int, seed: Long): (Array[Double], Array[Double]) = {
+    if (n <= k) {
+      val flat = new Array[Double](n * width)
+      (0 until n).foreach(i => System.arraycopy(pts, i * stride + off, flat, i * width, width))
+      return (flat, w.take(n))
+    }
+    val rng = new java.util.Random(seed)
+    val cent = new Array[Double](k * width)
+    // mass(i) = w(i) × squared distance to the nearest chosen centre
+    val mass = w.take(n)
+    (0 until k).foreach { c =>
+      val r = rng.nextDouble() * mass.sum
+      var acc = 0.0
+      val pick = mass.indexWhere { m => acc += m; acc > r } match { case -1 => c; case i => i }
+      System.arraycopy(pts, pick * stride + off, cent, c * width, width)
+      (0 until n).foreach { i =>
+        val m = w(i) * graft.functions.Centroids.sqDist(pts, i * stride + off, cent, c * width, width)
+        if (c == 0 || m < mass(i)) mass(i) = m
+      }
+    }
+    val sums = new Array[Double](k * width)
+    val cnt = new Array[Double](k)
+    (0 until Iterations).foreach { _ =>
+      java.util.Arrays.fill(sums, 0.0)
+      java.util.Arrays.fill(cnt, 0.0)
+      var i = 0
+      while (i < n) {
+        val p = i * stride + off
+        val c = graft.functions.Centroids.nearest(pts, p, cent, 0, k, width)
+        cnt(c) += w(i)
+        var t = 0
+        while (t < width) { sums(c * width + t) += w(i) * pts(p + t); t += 1 }
+        i += 1
+      }
+      (0 until k).filter(cnt(_) > 0.0).foreach { c =>
+        (0 until width).foreach(t => cent(c * width + t) = sums(c * width + t) / cnt(c))
+      }
+    }
+    (cent, cnt)
+  }
+
+  /** The √N cell-count rule of the coarse quantizer: `nCells`, or when
+    * `nCells <= 0` √N clamped to [16, 4096]; always in [2, total]. */
+  private def cellCount(nCells: Int, total: Long): Int =
+    math.max(2, math.min(
       if (nCells > 0) nCells.toLong
       else math.max(16L, math.min(4096L, math.sqrt(total.toDouble).toLong)),
       total).toInt)
-    val frac = math.min(1.0, maxFitVectors.toDouble / total.toDouble)
-    // cache ONLY the bounded sample: KMeans re-reads its input once per
-    // iteration — without the cache the scan + array casts re-execute ~10x.
-    // ML vectors exist only here: spark.ml is used for FIT ONLY.
-    val fitInput =
-      (if (frac < 1.0) prepared.sample(withReplacement = false, frac, seed) else prepared)
-        .withColumn("features", array_to_vector(col("v")))
-        .cache()
-    // random init, not k-means||: the parallel init runs ~5 extra
-    // distributed passes to seed centroids, which dominates fit time for
-    // a coarse quantizer whose cells get exact re-ranking anyway
-    val model =
-      try new KMeans().setK(cells).setSeed(seed).setMaxIter(10)
-        .setInitMode("random").fit(fitInput)
-      finally fitInput.unpersist()
-    // full-corpus cell assignment is a map-side codegen'd argmin over a
-    // BROADCAST flat centroid matrix — no ML-vector conversion, no per-row
-    // model UDF, no shuffle (same first-min-wins squared-Euclidean rule
-    // as KMeansModel.transform)
-    val ctrs = model.clusterCenters
-    val dim = ctrs.head.size
-    val flat = new Array[Double](ctrs.length * dim)
-    ctrs.zipWithIndex.foreach { case (ctr, i) =>
-      System.arraycopy(ctr.toArray, 0, flat, i * dim, dim)
-    }
+
+  /** Assigns every vector of `prepared` (`id`, `v`) to its nearest row of
+    * the flat centroid matrix in one map-side pass: the codegen'd
+    * `centroid_argmin` over a BROADCAST matrix, no shuffle. Returns the
+    * (id, v, cell) frame and the (cell, centroid) list (cells-sized —
+    * control plane). */
+  private def assignCells(prepared: DataFrame, flat: Array[Double], dim: Int)
+      : (DataFrame, Seq[(Int, Array[Double])]) = {
     val bcCentroids = prepared.sparkSession.sparkContext.broadcast(flat)
     val assigned = prepared
       .withColumn("cell", graft.functions.sketches.centroid_argmin(col("v"), bcCentroids, dim))
       .select("id", "v", "cell")
-    (assigned, ctrs.zipWithIndex.map { case (ctr, i) => (i, ctr.toArray) }.toSeq)
+    (assigned, (0 until flat.length / dim).map(c => (c, flat.slice(c * dim, (c + 1) * dim))))
+  }
+
+  /** Shared coarse quantizer: fit K-Means on a bounded sample
+    * ([[kmeansFit]]: one count, one fit job), assign every vector to its
+    * nearest centroid ([[assignCells]]). Powers [[ivfTopK]],
+    * [[ivfCentroidState]] and [[graft.ext.Dedup.semdedup]].
+    *
+    * 100 TB shape: the quantizer trains on at most `maxFitVectors`
+    * sampled rows (and 256 per cell), nothing is cached, and the full
+    * corpus is touched by one count and one assignment pass. `nCells <=
+    * 0` auto-sizes by the √N rule (clamped to [16, 4096]) so cell
+    * population stays ~√N as the corpus grows. */
+  private[ext] def kmeansCells(prepared: DataFrame, nCells: Int, seed: Long,
+      maxFitVectors: Long): (DataFrame, Seq[(Int, Array[Double])]) = {
+    // parquet-backed count is a metadata-cheap pass; it sizes both the
+    // fit sample fraction and the auto cell count
+    val total = prepared.count()
+    val fit = kmeansFit(prepared, total,
+      Seq(Quantizer(cellCount(nCells, total), 1, seed)), seed, maxFitVectors)
+    assignCells(prepared, fit.centroids.head.head, fit.dim)
   }
 
   /** IVF (inverted-file) approximate top-k: K-Means centroids partition
@@ -164,14 +294,15 @@ object Similarity {
     * cells, re-ranked by exact cosine. The classic ANN scale path when a
     * trained coarse quantizer is acceptable: candidate count is
     * corpus/k × nProbe regardless of corpus size. Deterministic via fixed
-    * seed. Uses spark.ml KMeans (bundled with Spark).
+    * seed. The quantizer is the engine's own k-means ([[kmeansFit]]),
+    * fitted in one Spark job.
     *
     * 100 TB shape: the quantizer trains on a bounded sample (at most
-    * `maxFitVectors` rows — only the sample is ever cached, and it is
-    * unpersisted after fit); the full corpus is touched by exactly one
-    * assignment pass feeding the candidate join. `nCells <= 0` auto-sizes
-    * cells by the √N rule (clamped to [16, 4096]) so cell population
-    * stays ~√N as the corpus grows. */
+    * `maxFitVectors` rows and 256 per cell, never cached); the full
+    * corpus is touched by one count and one assignment pass feeding the
+    * candidate join. `nCells <= 0` auto-sizes cells by the √N rule
+    * (clamped to [16, 4096]) so cell population stays ~√N as the corpus
+    * grows. */
   def ivfTopK(corpus: DataFrame, queries: DataFrame, k: Int, nCells: Int = 0,
       nProbe: Int = 4, seed: Long = 42L,
       idCol: String = "vec_id", vecCol: String = "embedding",
@@ -232,11 +363,7 @@ object Similarity {
     require(rows.forall(_._2.length == dim), "ragged centroid widths in state")
     val flat = new Array[Double](cells * dim)
     rows.foreach { case (c, ctr) => System.arraycopy(ctr, 0, flat, c * dim, dim) }
-    val bcCentroids = corpus.sparkSession.sparkContext.broadcast(flat)
-    prepared
-      .withColumn("cell",
-        graft.functions.sketches.centroid_argmin(col("v"), bcCentroids, dim))
-      .select("id", "v", "cell")
+    assignCells(prepared, flat, dim)._1
   }
 
   /** IVF search over an already-assigned (id, v, cell) postings frame —
@@ -258,21 +385,26 @@ object Similarity {
   private def ivfSearch(assigned: DataFrame, centDf: DataFrame, q: DataFrame,
       k: Int, nProbe: Int, excludeSelf: Boolean,
       broadcastQueries: Boolean): DataFrame = {
-    val wCell = Window.partitionBy("query_id").orderBy(col("cell_sim").desc, col("cell").asc)
-    val probeCells = q.crossJoin(broadcast(centDf))
-      .withColumn("cell_sim", cosine(col("qv"), col("centroid")))
-      .withColumn("cell_rank", row_number().over(wCell))
-      .filter(col("cell_rank") <= nProbe)
-      .select("query_id", "qv", "cell")
     // corpus-sized query sets shuffle-join on cell id instead of
     // broadcasting the probe set (cell is the natural co-location key)
-    val cand = assigned.join(hinted(probeCells, broadcastQueries), "cell")
+    val cand = assigned.join(hinted(probeCells(centDf, q, nProbe), broadcastQueries), "cell")
     val scored = (if (excludeSelf) cand.filter(col("id") =!= col("query_id")) else cand)
       .select(col("query_id"), col("id"), cosine(col("qv"), col("v")).as("sim"))
     val w = Window.partitionBy("query_id").orderBy(col("sim").desc, col("id").asc)
     scored.withColumn("rank", row_number().over(w))
       .filter(col("rank") <= k)
       .select(col("query_id"), col("id").as("neighbor_id"), col("rank"))
+  }
+
+  /** Each query's `nProbe` nearest cells by centroid cosine, ties by
+    * cell id: (query_id, qv, cell). */
+  private def probeCells(centDf: DataFrame, q: DataFrame, nProbe: Int): DataFrame = {
+    val wCell = Window.partitionBy("query_id").orderBy(col("cell_sim").desc, col("cell").asc)
+    q.crossJoin(broadcast(centDf))
+      .withColumn("cell_sim", cosine(col("qv"), col("centroid")))
+      .withColumn("cell_rank", row_number().over(wCell))
+      .filter(col("cell_rank") <= nProbe)
+      .select("query_id", "qv", "cell")
   }
 
   /** Approximate top-k via SRP-LSH bucketing: candidates are corpus
@@ -327,68 +459,40 @@ object Similarity {
     * 2011): the vector splits into `m` contiguous subvectors and each
     * subspace gets its own `codebookSize`-centroid K-Means — the
     * compression that turns a 256-byte float vector into `m` small
-    * codes while ADC search stays accurate. Returns the flat broadcast
-    * codebook (layout `[((j·k + c)·dsub) + t]`) and the subvector
-    * width. Fit runs on a bounded cached sample like [[kmeansCells]];
-    * the corpus is never cached. */
+    * codes while ADC search stays accurate. All m subspaces fit in the
+    * same pass of [[kmeansFit]] (one count, one fit job); the corpus is
+    * never cached. */
   private[ext] def pqCodebooks(prepared: DataFrame, m: Int,
       codebookSize: Int, seed: Long, maxFitVectors: Long)
       : (org.apache.spark.broadcast.Broadcast[Array[Double]], Int) = {
-    import org.apache.spark.ml.clustering.KMeans
-    import org.apache.spark.ml.functions.array_to_vector
-    val dim = prepared.select(size(col("v"))).head().getInt(0)
-    require(dim % m == 0, s"vector dim $dim must divide into m=$m subspaces")
-    val dsub = dim / m
-    val total = math.max(prepared.count(), 1L)
-    val frac = math.min(1.0, maxFitVectors.toDouble / total.toDouble)
-    val sample =
-      (if (frac < 1.0) prepared.sample(withReplacement = false, frac, seed)
-      else prepared).cache()
-    val flat = new Array[Double](m * codebookSize * dsub)
-    try {
-      // materialize the shared sample ONCE before fanning out, so the
-      // concurrent fits hit the cache instead of racing to build it
-      sample.count()
-      // the m sub-quantizer fits are independent jobs over the same
-      // cached sample — embarrassingly parallel, so submit them from a
-      // bounded thread pool (Spark schedules concurrent jobs fine) and
-      // let local[32] overlap their passes instead of serializing
-      // m × (iters + 1) scans; per-subspace seeds keep the codebooks
-      // bit-identical to the sequential fit regardless of finish order
-      val pool = java.util.concurrent.Executors
-        .newFixedThreadPool(math.min(m, 8))
-      implicit val ec: scala.concurrent.ExecutionContext =
-        scala.concurrent.ExecutionContext.fromExecutorService(pool)
-      try {
-        val fits = (0 until m).map { j =>
-          scala.concurrent.Future {
-            val sub = sample.select(array_to_vector(
-              slice(col("v"), j * dsub + 1, dsub)).as("features"))
-            val model = new KMeans().setK(codebookSize).setSeed(seed + j)
-              .setMaxIter(10).setInitMode("random").fit(sub)
-            (j, model.clusterCenters)
-          }
-        }
-        scala.concurrent.Await.result(
-          scala.concurrent.Future.sequence(fits),
-          scala.concurrent.duration.Duration.Inf)
-          .foreach { case (j, ctrs) =>
-            ctrs.zipWithIndex.foreach { case (ctr, c) =>
-              System.arraycopy(ctr.toArray, 0, flat,
-                (j * codebookSize + c) * dsub, dsub)
-            }
-          }
-      } finally pool.shutdown()
-    } finally sample.unpersist()
+    val fit = kmeansFit(prepared, prepared.count(),
+      Seq(Quantizer(codebookSize, m, seed)), seed, maxFitVectors)
+    pqBroadcast(prepared, fit.dim / m, codebookSize, fit.centroids.head)
+  }
+
+  /** The broadcast flat codebook (layout `[((j·k + c)·dsub) + t]`) of
+    * fitted `subspaces`, and the subvector width. A subspace fitted on
+    * fewer than `codebookSize` points repeats its centroids, which
+    * first-min-wins encoding never picks. */
+  private def pqBroadcast(prepared: DataFrame, dsub: Int, codebookSize: Int,
+      subspaces: IndexedSeq[Array[Double]])
+      : (org.apache.spark.broadcast.Broadcast[Array[Double]], Int) = {
+    val flat = new Array[Double](subspaces.length * codebookSize * dsub)
+    subspaces.zipWithIndex.foreach { case (ctrs, j) =>
+      (0 until codebookSize).foreach { c =>
+        System.arraycopy(ctrs, c % (ctrs.length / dsub) * dsub, flat,
+          (j * codebookSize + c) * dsub, dsub)
+      }
+    }
     (prepared.sparkSession.sparkContext.broadcast(flat), dsub)
   }
 
   /** Persisted PQ codebook state: one (subspace, code, centroid) row
     * per cell of the product codebook — the train-once discipline the
     * other incremental-state operators follow. Fit on ingest (bounded
-    * sample, concurrent sub-fits), write this frame next to the data,
-    * and every later search/encode pass loads it via
-    * [[pqTopKFromState]] instead of re-running m K-Means fits. The
+    * sample, one fit job for all m subspaces), write this frame next to
+    * the data, and every later search/encode pass loads it via
+    * [[pqTopKFromState]] instead of re-running the fit. The
     * frame is control-plane sized (m·codebookSize rows). */
   def pqCodebookState(corpus: DataFrame, m: Int = 8, codebookSize: Int = 16,
       seed: Long = 42L, maxFitVectors: Long = 100000L,
@@ -451,6 +555,7 @@ object Similarity {
       vecCol: String = "embedding", excludeSelf: Boolean = true,
       broadcastQueries: Boolean = true, seed: Long = 42L,
       maxFitVectors: Long = 100000L): DataFrame = {
+    requireRefine(k, refine)
     val c = corpus.select(col(idCol).as("id"), asDouble(col(vecCol)).as("v"))
     val (bc, dsub) = pqCodebooks(c, m, codebookSize, seed, maxFitVectors)
     val q = queries.select(col(idCol).as("query_id"), asDouble(col(vecCol)).as("qv"))
@@ -468,6 +573,7 @@ object Similarity {
       idCol: String = "vec_id", vecCol: String = "embedding",
       excludeSelf: Boolean = true,
       broadcastQueries: Boolean = true): DataFrame = {
+    requireRefine(k, refine)
     val c = corpus.select(col(idCol).as("id"), asDouble(col(vecCol)).as("v"))
     val (bc, m, codebookSize, dsub) = flatFromState(codebooks)
     val q = queries.select(col(idCol).as("query_id"), asDouble(col(vecCol)).as("qv"))
@@ -475,20 +581,33 @@ object Similarity {
       broadcastQueries)
   }
 
-  /** Shared PQ search tail: encode the corpus once, score candidates by
-    * ADC over the broadcast codebook, optionally exact-refine. `c` is
-    * (id, v) with v array<double>; `q` is (query_id, qv). */
+  private def requireRefine(k: Int, refine: Int): Unit = {
+    require(k >= 1, s"k must be >= 1: $k")
+    require(refine == 0 || refine >= k,
+      s"refine must be 0 (off) or >= k: refine=$refine k=$k")
+  }
+
+  /** Shared PQ search tail: encode the corpus once and rank every
+    * (query, corpus vector) pair by ADC ([[adcRank]]). `c` is (id, v)
+    * with v array<double>; `q` is (query_id, qv). */
   private def pqSearch(c: DataFrame, q: DataFrame,
       bc: org.apache.spark.broadcast.Broadcast[Array[Double]], m: Int,
       dsub: Int, codebookSize: Int, k: Int, refine: Int,
       excludeSelf: Boolean, broadcastQueries: Boolean): DataFrame = {
-    require(k >= 1, s"k must be >= 1: $k")
-    require(refine == 0 || refine >= k,
-      s"refine must be 0 (off) or >= k: refine=$refine k=$k")
     val codes = c.select(col("id"),
       graft.functions.sketches.subvector_argmins(col("v"), bc, m, dsub,
         codebookSize).as("codes"))
-    val cand = codes.crossJoin(hinted(q, broadcastQueries))
+    adcRank(codes.crossJoin(hinted(q, broadcastQueries)), c, q, bc, m, dsub,
+      codebookSize, k, refine, excludeSelf)
+  }
+
+  /** Per-query top-k of the candidates `cand` (id, codes, query_id, qv)
+    * by ADC over the broadcast codebook, optionally exact-refined over
+    * `c` (id, v) and `q` (query_id, qv). */
+  private def adcRank(cand: DataFrame, c: DataFrame, q: DataFrame,
+      bc: org.apache.spark.broadcast.Broadcast[Array[Double]], m: Int,
+      dsub: Int, codebookSize: Int, k: Int, refine: Int,
+      excludeSelf: Boolean): DataFrame = {
     val scored = (if (excludeSelf) cand.filter(col("id") =!= col("query_id")) else cand)
       .select(col("query_id"), col("id"),
         graft.functions.sketches.pq_adc_dist(col("qv"), col("codes"), bc, m,
@@ -528,8 +647,8 @@ object Similarity {
     * battle-tested single faces; the exact-refine window recovers what
     * residual coding would (recall pinned ≥ 0.9 by the seeded battery).
     *
-    * 100 TB shape: two bounded-sample fits, ONE assignment pass + ONE
-    * encode pass over the corpus, search touches nProbe cells of codes
+    * 100 TB shape: one bounded-sample fit job for both quantizers, ONE
+    * assignment pass + ONE encode pass over the corpus, search touches nProbe cells of codes
     * per query. This is the default shape when both the corpus size
     * AND the scan width hurt. */
   def ivfPqTopK(corpus: DataFrame, queries: DataFrame, k: Int,
@@ -538,16 +657,15 @@ object Similarity {
       vecCol: String = "embedding", excludeSelf: Boolean = true,
       maxFitVectors: Long = 100000L,
       broadcastQueries: Boolean = true): DataFrame = {
-    require(k >= 1, s"k must be >= 1: $k")
-    require(refine == 0 || refine >= k,
-      s"refine must be 0 (off) or >= k: refine=$refine k=$k")
+    requireRefine(k, refine)
     val c = corpus.select(col(idCol).as("id"), asDouble(col(vecCol)).as("v"))
-    // the two fits stay SEQUENTIAL on purpose: overlapping them was
-    // measured 20-40% slower at local[32] (the coarse fit and the PQ
-    // fit's 8-way concurrent sub-fits oversubscribe the same cores);
-    // train-once cost either way
-    val (assigned, centroids) = kmeansCells(c, nCells, seed, maxFitVectors)
-    val (bc, dsub) = pqCodebooks(c, m, codebookSize, seed, maxFitVectors)
+    // the coarse quantizer and the PQ subspaces fit in ONE job
+    val total = c.count()
+    val fit = kmeansFit(c, total,
+      Seq(Quantizer(cellCount(nCells, total), 1, seed), Quantizer(codebookSize, m, seed)),
+      seed, maxFitVectors)
+    val (assigned, centroids) = assignCells(c, fit.centroids(0).head, fit.dim)
+    val (bc, dsub) = pqBroadcast(c, fit.dim / m, codebookSize, fit.centroids(1))
     // one encode pass, keyed by cell for the probe equi-join
     val codes = assigned.select(col("id"), col("cell"),
       graft.functions.sketches.subvector_argmins(col("v"), bc, m, dsub,
@@ -555,35 +673,8 @@ object Similarity {
     val centDf = corpus.sparkSession.createDataFrame(centroids)
       .toDF("cell", "centroid")
     val q = queries.select(col(idCol).as("query_id"), asDouble(col(vecCol)).as("qv"))
-    val wCell = Window.partitionBy("query_id")
-      .orderBy(col("cell_sim").desc, col("cell").asc)
-    val probeCells = q.crossJoin(broadcast(centDf))
-      .withColumn("cell_sim", cosine(col("qv"), col("centroid")))
-      .withColumn("cell_rank", row_number().over(wCell))
-      .filter(col("cell_rank") <= nProbe)
-      .select("query_id", "qv", "cell")
-    val cand = codes.join(hinted(probeCells, broadcastQueries), "cell")
-    val scored = (if (excludeSelf) cand.filter(col("id") =!= col("query_id")) else cand)
-      .select(col("query_id"), col("id"),
-        graft.functions.sketches.pq_adc_dist(col("qv"), col("codes"), bc, m,
-          dsub, codebookSize).as("adc_dist"))
-    val w = Window.partitionBy("query_id").orderBy(col("adc_dist").asc, col("id").asc)
-    val adcTop = scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= math.max(k, refine))
-    if (refine == 0)
-      adcTop.select(col("query_id"), col("id").as("neighbor_id"), col("rank"))
-    else {
-      val exact = adcTop.select(col("query_id"), col("id"))
-        .join(c, Seq("id"))
-        .join(hinted(q, broadcastQueries = true), Seq("query_id"))
-        .select(col("query_id"), col("id"),
-          cosine(col("qv"), col("v")).as("sim"))
-      val wr = Window.partitionBy("query_id")
-        .orderBy(col("sim").desc, col("id").asc)
-      exact.withColumn("rank", row_number().over(wr))
-        .filter(col("rank") <= k)
-        .select(col("query_id"), col("id").as("neighbor_id"), col("rank"))
-    }
+    adcRank(codes.join(hinted(probeCells(centDf, q, nProbe), broadcastQueries), "cell"),
+      c, q, bc, m, dsub, codebookSize, k, refine, excludeSelf)
   }
 
   /** Maximal Marginal Relevance (Carbonell & Goldstein 1998) diversified

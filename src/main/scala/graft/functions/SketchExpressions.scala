@@ -173,14 +173,59 @@ case class CosineSimilarity(left: Expression, right: Expression)
       newRight: Expression): Expression = copy(left = newLeft, right = newRight)
 }
 
-/** Index of the nearest centroid (squared-Euclidean, first-min wins — the
-  * K-Means assignment rule) for an array<double> vector. The centroid
-  * matrix travels as a BROADCAST VARIABLE (flat row-major Array[Double],
-  * nCells × dim), not a plan literal: at the 4096-cell / high-dim end the
-  * matrix is tens of MB, which as a literal would ride every serialized
-  * task. Map-side and shuffle-free — this replaces spark.ml
-  * `model.transform`, whose per-row ML-vector UDF + array conversion cost
-  * ~2× on the IVF assignment pass. */
+/** The engine's one nearest-centroid rule (squared Euclidean, first
+  * minimum wins — the K-Means assignment rule), shared by
+  * [[CentroidArgmin]], [[SubvectorArgmins]] and the k-means fit in
+  * `graft.ext.Similarity`. */
+private[graft] object Centroids {
+
+  /** Index in [0, k) of the centroid nearest to `x(xOff until xOff +
+    * width)`, the centroids being the `k` rows of `width` components
+    * stored row-major in `flat` from `base`; -1 when every distance is
+    * NaN or overflows. */
+  def nearest(x: Array[Double], xOff: Int, flat: Array[Double], base: Int,
+      k: Int, width: Int): Int = {
+    var best = -1
+    var bestD = Double.MaxValue
+    var c = 0
+    while (c < k) {
+      val d = sqDist(x, xOff, flat, base + c * width, width)
+      if (d < bestD) { bestD = d; best = c }
+      c += 1
+    }
+    best
+  }
+
+  /** Squared Euclidean distance of `x(xOff until xOff + width)` and
+    * `y(yOff until yOff + width)`. */
+  def sqDist(x: Array[Double], xOff: Int, y: Array[Double], yOff: Int, width: Int): Double = {
+    var d = 0.0
+    var t = 0
+    while (t < width) {
+      val e = x(xOff + t) - y(yOff + t)
+      d += e * e
+      t += 1
+    }
+    d
+  }
+
+  /** `v` as doubles, failing loud unless it has `dim` components. */
+  def vector(v: ArrayData, dim: Int): Array[Double] = {
+    if (v.numElements() != dim) throw dimMismatch(v.numElements(), dim)
+    v.toDoubleArray()
+  }
+
+  def dimMismatch(got: Int, dim: Int): IllegalArgumentException =
+    new IllegalArgumentException(s"centroid_argmin: vector dim $got != centroid dim $dim")
+}
+
+/** Index of the nearest centroid ([[Centroids.nearest]]) for an
+  * array<double> vector. The centroid matrix travels as a BROADCAST
+  * VARIABLE (flat row-major Array[Double], nCells × dim), not a plan
+  * literal: at the 4096-cell / high-dim end the matrix is tens of MB,
+  * which as a literal would ride every serialized task. Map-side and
+  * shuffle-free: the IVF assignment pass needs no per-row model UDF and
+  * no ML-vector conversion. */
 case class CentroidArgmin(child: Expression, centroids: Broadcast[Array[Double]], dim: Int)
     extends UnaryExpression with CodegenFallback {
   require(dim > 0, s"dim must be positive, got $dim")
@@ -190,29 +235,9 @@ case class CentroidArgmin(child: Expression, centroids: Broadcast[Array[Double]]
   override def prettyName: String = "centroid_argmin"
 
   override def nullSafeEval(input: Any): Any = {
-    val v = input.asInstanceOf[ArrayData]
-    if (v.numElements() != dim) {
-      throw new IllegalArgumentException(
-        s"centroid_argmin: vector dim ${v.numElements()} != centroid dim $dim")
-    }
     val flat = centroids.value
-    val nCells = flat.length / dim
-    var best = -1
-    var bestD = Double.MaxValue
-    var c = 0
-    while (c < nCells) {
-      val off = c * dim
-      var d = 0.0
-      var j = 0
-      while (j < dim) {
-        val t = v.getDouble(j) - flat(off + j)
-        d += t * t
-        j += 1
-      }
-      if (d < bestD) { bestD = d; best = c }
-      c += 1
-    }
-    java.lang.Integer.valueOf(best)
+    java.lang.Integer.valueOf(Centroids.nearest(
+      Centroids.vector(input.asInstanceOf[ArrayData], dim), 0, flat, 0, flat.length / dim, dim))
   }
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
@@ -241,26 +266,12 @@ case class SubvectorArgmins(child: Expression,
       throw new IllegalArgumentException(
         s"subvector_argmins: vector dim ${v.numElements()} != m*dsub ${m * dsub}")
     }
+    val x = v.toDoubleArray()
     val flat = codebooks.value
     val out = new Array[Int](m)
     var j = 0
     while (j < m) {
-      var best = -1
-      var bestD = Double.MaxValue
-      var c = 0
-      while (c < k) {
-        val off = (j * k + c) * dsub
-        var d = 0.0
-        var t = 0
-        while (t < dsub) {
-          val x = v.getDouble(j * dsub + t) - flat(off + t)
-          d += x * x
-          t += 1
-        }
-        if (d < bestD) { bestD = d; best = c }
-        c += 1
-      }
-      out(j) = best
+      out(j) = Centroids.nearest(x, j * dsub, flat, j * k * dsub, k, dsub)
       j += 1
     }
     ArrayData.toArrayData(out)

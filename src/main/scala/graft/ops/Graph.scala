@@ -362,8 +362,11 @@ object Graph {
     // state: (edges, their count); each round's count is the action
     // that materializes its lazily fenced edge frame
     val e0 = Materialize.lazyFence(edges.select(col(uCol).as("u"), col(vCol).as("v")))
-    val ((core, _), converged) = Materialize.fixpoint((e0, e0.count()), maxRounds) {
-      case (e, n) =>
+    val n0 = e0.count()
+    // no edge, nothing to peel: skip the round job
+    val ((core, _), converged) =
+      if (n0 == 0L) ((e0, n0), true)
+      else Materialize.fixpoint((e0, n0), maxRounds) { case (e, n) =>
         val keep = degrees(e).filter(col("core_degree") >= k).select("node")
         val next = Materialize.lazyFence(
           e.join(keep.withColumnRenamed("node", "u"), Seq("u"), "left_semi")
@@ -371,7 +374,7 @@ object Graph {
         val kept = next.count()
         // no edge peeled -> every survivor has deg >= k
         ((next, kept), n - kept)
-    }
+      }
     require(converged, s"k-core peel did not converge in $maxRounds rounds " +
       "(pathological chain?) — raise maxRounds")
     degrees(core)

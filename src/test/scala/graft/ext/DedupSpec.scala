@@ -167,6 +167,14 @@ class DedupSpec extends SparkTestBase {
     }
   }
 
+  test("components over no pairs runs no round (job-count guard)") {
+    import spark.implicits._
+    val (out, jobs) = jobsOf(Dedup.components(Seq.empty[(Long, Long)].toDF("a_id", "b_id")).collect())
+    assert(out.isEmpty)
+    // the edge count and the collect: a round over zero edges cost one more job
+    assert(jobs.size === 2, s"components: ${jobs.size} jobs")
+  }
+
   test("components: adversarial 1000-edge chain converges in O(log diameter) rounds") {
     import spark.implicits._
     // a single path 0-1-2-...-1000: diameter 1000. Plain min-label

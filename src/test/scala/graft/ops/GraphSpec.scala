@@ -197,6 +197,13 @@ class GraphSpec extends SparkTestBase {
     assert(lJobs.size === 13, s"labelPropagation: ${lJobs.size} jobs")
   }
 
+  test("kCore over no edges runs no peel round (job-count guard)") {
+    val (core, jobs) = jobsOf(Graph.kCore(Seq.empty[(Long, Long)].toDF("u", "v"), 2).collect())
+    assert(core.isEmpty)
+    // the edge count only: a round over zero edges cost one more job
+    assert(jobs.size === 1, s"kCore: ${jobs.size} jobs")
+  }
+
   test("kCore past maxRounds throws IllegalArgumentException with its message") {
     // a 10-node path loses its two end edges per round: 2 rounds are too few
     val path = (0L until 9L).map(i => (i, i + 1)).toDF("u", "v")
