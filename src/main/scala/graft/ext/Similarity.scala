@@ -1,10 +1,12 @@
 package graft.ext
 
-import org.apache.spark.TaskContext
+import org.apache.spark.{HashPartitioner, TaskContext}
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+
+import graft.functions.Centroids
 
 /** Similarity search over an embedding column (`array<float>`).
   *
@@ -111,90 +113,123 @@ object Similarity {
     * `max_points_per_centroid`): a fit reads no more than
     * `min(maxFitVectors, k × PointsPerCentroid)` sampled vectors. */
   private final val PointsPerCentroid = 256
+  /** Point-centroid pairs of one Lloyd's round per fit partition (about
+    * 0.07 s of one core at d = 64). A sample with fewer pairs is fitted
+    * by ONE Lloyd's over all of it: splitting it saves little time, and
+    * a merged fit is no longer fitted to the points it was trained on,
+    * which splits more near-duplicate pairs across cells. */
+  private final val PairsPerPartition = 1L << 20
   /** Lloyd's rounds of every fit, partition-local and driver merge. */
   private final val Iterations = 10
 
   /** One quantizer of a fit: the vector splits into `m` equal subspaces
     * (1 = the whole vector, the IVF coarse quantizer; m = the PQ
-    * subspaces) and each subspace gets `k` centroids, seeded `seed + j`. */
-  private[ext] final case class Quantizer(k: Int, m: Int, seed: Long)
+    * subspaces) and each subspace gets `k` centroids. */
+  private[ext] final case class Quantizer(k: Int, m: Int)
 
-  /** A [[kmeansFit]] result: the vector width, per quantizer and
-    * subspace the row-major centroid matrix, and the number of sampled
-    * vectors the fit read. */
-  private[ext] final case class Fit(dim: Int, centroids: Seq[IndexedSeq[Array[Double]]],
-      points: Long)
+  /** A [[kmeansFit]] result: the vector width and, per quantizer and
+    * subspace, the row-major centroid matrix. */
+  private[ext] final case class Fit(dim: Int, centroids: Seq[IndexedSeq[Array[Double]]])
 
-  /** The engine's one k-means: fits every quantizer of `qs` over a
-    * bounded sample of `prepared` (`id`, `v` array<double>, `total`
-    * rows) in ONE Spark job, named `ext.Similarity.kmeans`.
-    * Divide-and-conquer clustering (Guha et al., TKDE 2003): each sample
-    * partition runs a seeded weighted Lloyd's ([[lloyd]]) on every
-    * subspace of every quantizer and returns weighted centroids; the
-    * driver reclusters their union per subspace with the same Lloyd's
-    * (the weighted recluster of k-means||, Bahmani et al., VLDB 2012).
-    *
-    * The sample holds at most `min(maxFitVectors, kMax × 256)` vectors
-    * and is coalesced to ⌊√(sample / kMax)⌋ partitions, so the driver's
-    * merge input (≤ partitions × k points) is no larger than one
-    * partition's share. Each centroid matrix has k rows, or fewer when
-    * the sample holds fewer than k points. Fails loud on a vector of another
-    * width (the `centroid_argmin` message) and on a width that does not
-    * divide into a quantizer's m subspaces. */
-  private[ext] def kmeansFit(prepared: DataFrame, total: Long, qs: Seq[Quantizer],
-      seed: Long, maxFitVectors: Long): Fit = {
-    val kMax = qs.map(_.k).max
+  /** The bounded training sample of a fit over `prepared` (`id`, `v`
+    * array<double>, `total` rows) for quantizers of at most `kMax`
+    * centroids: a Bernoulli sample of about S = `min(maxFitVectors, kMax
+    * × 256)` non-null vectors. The scan and the sample run with the
+    * corpus's own parallelism; only the sampled vectors shuffle, keyed by
+    * a hash of the row id, onto ⌈S × kMax / 2^20⌉ partitions, at most
+    * ⌊√(S / kMax)⌋ (so the driver's merge input, ≤ partitions × k
+    * points, is no larger than one partition's share). Each partition
+    * keeps its lowest-hash vectors up to its share of the cap, so which
+    * rows train depends neither on scan or fetch order nor on file
+    * order. Lazy: the shuffle runs inside the job that reads it. */
+  private[ext] def fitSample(prepared: DataFrame, total: Long, kMax: Int, seed: Long,
+      maxFitVectors: Long): RDD[Array[Double]] = {
     val cap = math.max(1L, math.min(maxFitVectors, kMax.toLong * PointsPerCentroid))
     val frac = cap.toDouble / math.max(total, 1L)
-    val nParts = math.max(1, math.sqrt(math.min(cap, total).toDouble / kMax).toInt)
+    val size = math.min(cap, total)
+    val nParts = math.max(1L, math.min((size * kMax + PairsPerPartition - 1) / PairsPerPartition,
+      math.sqrt(size.toDouble / kMax).toLong)).toInt
     val quota = (cap / nParts).toInt
-    val sample = (if (frac < 1.0) prepared.sample(withReplacement = false, frac, seed)
-      else prepared).select(col("v")).coalesce(nParts)
-    val sc = prepared.sparkSession.sparkContext
-    val parts = graft.Obs.phase(sc, "ext.Similarity.kmeans") {
-      sc.runJob(sample.queryExecution.toRdd, { (task: TaskContext, rows: Iterator[InternalRow]) =>
-        var dim = -1
-        val vecs = rows.filter(!_.isNullAt(0)).take(quota).map { r =>
-          val v = r.getArray(0)
-          if (dim < 0) dim = v.numElements()
-          graft.functions.Centroids.vector(v, dim)
-        }.toArray
-        val n = vecs.length
-        val fits =
-          if (n == 0 || dim == 0 || qs.exists(dim % _.m != 0)) Seq.empty
-          else {
-            val flat = vecs.flatten
-            val ones = Array.fill(n)(1.0)
-            qs.map { q =>
-              val width = dim / q.m
-              (0 until q.m).map(j => lloyd(flat, dim, j * width, width, ones, n, q.k,
-                q.seed + j + task.partitionId()))
-            }
-          }
-        (dim, fits, n.toLong)
-      })
+    (if (frac < 1.0) prepared.sample(withReplacement = false, frac, seed) else prepared)
+      .filter(col("v").isNotNull)
+      .select(xxhash64(col("id")).as("h"), col("v"))
+      .queryExecution.toRdd
+      .map(r => (r.getLong(0), r.getArray(1).toDoubleArray()))
+      .repartitionAndSortWithinPartitions(new HashPartitioner(nParts))
+      .mapPartitions(_.take(quota).map(_._2))
+  }
+
+  /** The engine's one k-means: fits every quantizer of `qs` over the
+    * [[fitSample]] of `prepared` (`id`, `v` array<double>, `total` rows)
+    * with [[fitPartitions]], in ONE Spark job named
+    * `ext.Similarity.kmeans`: the job's map stage scans and samples the
+    * corpus, its result stage fits. */
+  private[ext] def kmeansFit(prepared: DataFrame, total: Long, qs: Seq[Quantizer],
+      seed: Long, maxFitVectors: Long): Fit =
+    graft.Obs.phase(prepared.sparkSession.sparkContext, "ext.Similarity.kmeans") {
+      fitPartitions(fitSample(prepared, total, qs.map(_.k).max, seed, maxFitVectors), qs, seed)
     }
+
+  /** Divide-and-conquer clustering (Guha et al., TKDE 2003) of the
+    * vectors of `sample`, in one `runJob`: each partition runs a seeded
+    * weighted Lloyd's ([[lloyd]]) on every subspace of every quantizer
+    * of `qs` and returns weighted centroids; the driver reclusters their
+    * union per subspace with the same Lloyd's (the weighted recluster of
+    * k-means||, Bahmani et al., VLDB 2012). Subspace j seeds from `seed
+    * + j` (plus the partition index in the tasks). One partition is one
+    * plain Lloyd's: its ≤ k centroids come back from the merge
+    * unchanged.
+    *
+    * Cost: a task's Lloyd's is O(share × k × d × 11) and the driver's
+    * merge O(partitions × k² × d × 11); at the √ partition bound the two
+    * are equal. There the fit's critical path (one task, then the
+    * merge) is about 2 × √(S × k) × k × d × 11 point-component steps for
+    * a sample of S points, however many cores there are, where a
+    * distributed Lloyd's (spark.ml) divides its S × k × d × 10 among all
+    * cores. Each centroid matrix has k rows, or fewer when the sample
+    * holds fewer than k points. Fails loud on a vector of another
+    * width (the `centroid_argmin` message, against the most common width
+    * of its partition) and on a width that does not divide into a
+    * quantizer's m subspaces. */
+  private[ext] def fitPartitions(sample: RDD[Array[Double]], qs: Seq[Quantizer],
+      seed: Long): Fit = {
+    val parts = sample.sparkContext.runJob(sample, {
+        (task: TaskContext, rows: Iterator[Array[Double]]) =>
+      val vecs = rows.toArray
+      val dim = if (vecs.isEmpty) -1 else vecs.groupBy(_.length).maxBy(_._2.length)._1
+      vecs.find(_.length != dim).foreach(v => throw Centroids.dimMismatch(v.length, dim))
+      val n = vecs.length
+      if (n == 0 || dim == 0 || qs.exists(dim % _.m != 0)) (dim, Seq.empty)
+      else {
+        val flat = vecs.flatten
+        val ones = Array.fill(n)(1.0)
+        (dim, qs.map { q =>
+          val width = dim / q.m
+          (0 until q.m).map(j => lloyd(flat, dim, j * width, width, ones, n, q.k,
+            seed + j + task.partitionId()))
+        })
+      }
+    })
     val fitted = parts.filter(_._2.nonEmpty)
     val dims = parts.map(_._1).filter(_ >= 0).distinct
-    if (dims.length > 1) throw graft.functions.Centroids.dimMismatch(dims(1), dims(0))
-    require(dims.nonEmpty, s"k-means fit: no vectors in the sample of $total rows")
+    if (dims.length > 1) throw Centroids.dimMismatch(dims(1), dims(0))
+    require(dims.nonEmpty, "k-means fit: the sample holds no vectors")
     val dim = dims.head
     qs.foreach(q => require(dim > 0 && dim % q.m == 0,
       s"vector dim $dim must divide into m=${q.m} subspaces"))
-    val centroids = qs.indices.map { qi =>
+    Fit(dim, qs.indices.map { qi =>
       val q = qs(qi)
       val width = dim / q.m
       (0 until q.m).map { j =>
         // the union of every partition's non-empty weighted centroids
-        val local = fitted.flatMap { case (_, fits, _) =>
+        val local = fitted.flatMap { case (_, fits) =>
           val (ctrs, ws) = fits(qi)(j)
           ws.indices.filter(ws(_) > 0.0).map(c => (ctrs.slice(c * width, (c + 1) * width), ws(c)))
         }
         lloyd(local.flatMap(_._1).toArray, width, 0, width, local.map(_._2).toArray,
-          local.length, q.k, q.seed + j)._1
+          local.length, q.k, seed + j)._1
       }
-    }
-    Fit(dim, centroids, fitted.map(_._3).sum)
+    })
   }
 
   /** Weighted Lloyd's over `n` points of `width` components, point i at
@@ -216,14 +251,21 @@ object Similarity {
     val cent = new Array[Double](k * width)
     // mass(i) = w(i) × squared distance to the nearest chosen centre
     val mass = w.take(n)
+    var total = mass.foldLeft(0.0)(_ + _)
     (0 until k).foreach { c =>
-      val r = rng.nextDouble() * mass.sum
-      var acc = 0.0
-      val pick = mass.indexWhere { m => acc += m; acc > r } match { case -1 => c; case i => i }
+      val r = rng.nextDouble() * total
+      var pick = 0
+      var acc = mass(0)
+      while (acc <= r && pick < n - 1) { pick += 1; acc += mass(pick) }
+      if (acc <= r) pick = c
       System.arraycopy(pts, pick * stride + off, cent, c * width, width)
-      (0 until n).foreach { i =>
-        val m = w(i) * graft.functions.Centroids.sqDist(pts, i * stride + off, cent, c * width, width)
+      total = 0.0
+      var i = 0
+      while (i < n) {
+        val m = w(i) * Centroids.sqDist(pts, i * stride + off, cent, c * width, width)
         if (c == 0 || m < mass(i)) mass(i) = m
+        total += mass(i)
+        i += 1
       }
     }
     val sums = new Array[Double](k * width)
@@ -234,7 +276,7 @@ object Similarity {
       var i = 0
       while (i < n) {
         val p = i * stride + off
-        val c = graft.functions.Centroids.nearest(pts, p, cent, 0, k, width)
+        val c = Centroids.nearest(pts, p, cent, 0, k, width)
         cnt(c) += w(i)
         var t = 0
         while (t < width) { sums(c * width + t) += w(i) * pts(p + t); t += 1 }
@@ -276,7 +318,8 @@ object Similarity {
     *
     * 100 TB shape: the quantizer trains on at most `maxFitVectors`
     * sampled rows (and 256 per cell), nothing is cached, and the full
-    * corpus is touched by one count and one assignment pass. `nCells <=
+    * corpus is touched by one count, the fit job's sampling scan (at
+    * the corpus's parallelism) and one assignment pass. `nCells <=
     * 0` auto-sizes by the √N rule (clamped to [16, 4096]) so cell
     * population stays ~√N as the corpus grows. */
   private[ext] def kmeansCells(prepared: DataFrame, nCells: Int, seed: Long,
@@ -285,7 +328,7 @@ object Similarity {
     // fit sample fraction and the auto cell count
     val total = prepared.count()
     val fit = kmeansFit(prepared, total,
-      Seq(Quantizer(cellCount(nCells, total), 1, seed)), seed, maxFitVectors)
+      Seq(Quantizer(cellCount(nCells, total), 1)), seed, maxFitVectors)
     assignCells(prepared, fit.centroids.head.head, fit.dim)
   }
 
@@ -299,10 +342,10 @@ object Similarity {
     *
     * 100 TB shape: the quantizer trains on a bounded sample (at most
     * `maxFitVectors` rows and 256 per cell, never cached); the full
-    * corpus is touched by one count and one assignment pass feeding the
-    * candidate join. `nCells <= 0` auto-sizes cells by the √N rule
-    * (clamped to [16, 4096]) so cell population stays ~√N as the corpus
-    * grows. */
+    * corpus is touched by one count, the fit job's sampling scan and one
+    * assignment pass feeding the candidate join. `nCells <= 0`
+    * auto-sizes cells by the √N rule (clamped to [16, 4096]) so cell
+    * population stays ~√N as the corpus grows. */
   def ivfTopK(corpus: DataFrame, queries: DataFrame, k: Int, nCells: Int = 0,
       nProbe: Int = 4, seed: Long = 42L,
       idCol: String = "vec_id", vecCol: String = "embedding",
@@ -466,7 +509,7 @@ object Similarity {
       codebookSize: Int, seed: Long, maxFitVectors: Long)
       : (org.apache.spark.broadcast.Broadcast[Array[Double]], Int) = {
     val fit = kmeansFit(prepared, prepared.count(),
-      Seq(Quantizer(codebookSize, m, seed)), seed, maxFitVectors)
+      Seq(Quantizer(codebookSize, m)), seed, maxFitVectors)
     pqBroadcast(prepared, fit.dim / m, codebookSize, fit.centroids.head)
   }
 
@@ -544,7 +587,8 @@ object Similarity {
     * recall battery (no SQL oracle exists for a trained quantizer —
     * rows-only driver row, like IVF/LSH).
     *
-    * 100 TB shape: m fits on a bounded sample; ONE corpus pass encodes;
+    * 100 TB shape: m fits on a bounded sample (one count and one fit
+    * job, whose sampling scan reads the corpus); ONE corpus pass encodes;
     * search touches only (id, codes) rows — at dim=64/m=8 that is 8
     * ints instead of 64 floats per row, which is the whole point:
     * the scan that dominates ANN at scale shrinks ~8×, and the exact
@@ -647,9 +691,10 @@ object Similarity {
     * battle-tested single faces; the exact-refine window recovers what
     * residual coding would (recall pinned ≥ 0.9 by the seeded battery).
     *
-    * 100 TB shape: one bounded-sample fit job for both quantizers, ONE
-    * assignment pass + ONE encode pass over the corpus, search touches nProbe cells of codes
-    * per query. This is the default shape when both the corpus size
+    * 100 TB shape: one count and one bounded-sample fit job for both
+    * quantizers (its sampling scan reads the corpus once), ONE
+    * assignment pass + ONE encode pass over the corpus, search touches
+    * nProbe cells of codes per query. This is the default shape when both the corpus size
     * AND the scan width hurt. */
   def ivfPqTopK(corpus: DataFrame, queries: DataFrame, k: Int,
       nCells: Int = 0, nProbe: Int = 4, m: Int = 8, codebookSize: Int = 16,
@@ -662,7 +707,7 @@ object Similarity {
     // the coarse quantizer and the PQ subspaces fit in ONE job
     val total = c.count()
     val fit = kmeansFit(c, total,
-      Seq(Quantizer(cellCount(nCells, total), 1, seed), Quantizer(codebookSize, m, seed)),
+      Seq(Quantizer(cellCount(nCells, total), 1), Quantizer(codebookSize, m)),
       seed, maxFitVectors)
     val (assigned, centroids) = assignCells(c, fit.centroids(0).head, fit.dim)
     val (bc, dsub) = pqBroadcast(c, fit.dim / m, codebookSize, fit.centroids(1))

@@ -27,28 +27,31 @@ class KMeansFitSpec extends SparkTestBase {
 
   private def fit(df: DataFrame, k: Int = Centres, m: Int = 1,
       maxFitVectors: Long = 1000000L): Similarity.Fit =
-    Similarity.kmeansFit(df, df.count(), Seq(Similarity.Quantizer(k, m, 42L)), 42L,
+    Similarity.kmeansFit(df, df.count(), Seq(Similarity.Quantizer(k, m)), 42L,
       maxFitVectors)
 
-  /** Tasks of the fit jobs `body` starts. */
-  private def fitTasks(body: => Any): Int = {
+  /** Task counts of the stages of the last fit job `body` starts, in
+    * stage-id order: the sampling scan, then the fit. */
+  private def fitStages(body: => Any): Seq[Int] = {
     import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    val tasks = new java.util.concurrent.atomic.AtomicInteger()
+    @volatile var stages = Seq.empty[Int]
     val listener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit =
         if (Option(e.properties).exists(_.getProperty("spark.job.description") ==
-            "ext.Similarity.kmeans")) tasks.addAndGet(e.stageInfos.map(_.numTasks).sum)
+            "ext.Similarity.kmeans")) stages = e.stageInfos.sortBy(_.stageId).map(_.numTasks)
     }
     spark.sparkContext.addSparkListener(listener)
     try jobsOf(body) finally spark.sparkContext.removeSparkListener(listener)
-    tasks.get()
+    stages
   }
 
   test("fit recovers 16 planted centres from several sample partitions, deterministically") {
     val (df, centres) = planted(11L)
-    var got: Similarity.Fit = null
-    assert(fitTasks { got = fit(df) } >= 2, "the sample must span at least 2 partitions")
-    assert(got.dim === Dim && got.points === Centres * PerCentre)
+    // a sample this small is fitted whole, so split it by hand
+    val sample = spark.sparkContext.parallelize(df.select("v").as[Array[Double]].collect().toSeq, 4)
+    def fitSplit() = Similarity.fitPartitions(sample, Seq(Similarity.Quantizer(Centres, 1)), 42L)
+    val got = fitSplit()
+    assert(got.dim === Dim)
     val ctrs = got.centroids.head.head.grouped(Dim).toSeq
     assert(ctrs.length === Centres)
     // each centre's mean of 64 points lies within ~0.05·√(16/64) of it
@@ -56,17 +59,37 @@ class KMeansFitSpec extends SparkTestBase {
       val d = ctrs.map(x => math.sqrt(x.zip(c).map { case (a, b) => (a - b) * (a - b) }.sum)).min
       assert(d < 0.1, s"planted centre ${c.indexOf(10.0)} recovered only within $d")
     }
-    assert(fit(df).centroids.head.head.toSeq === got.centroids.head.head.toSeq,
+    assert(fitSplit().centroids.head.head.toSeq === got.centroids.head.head.toSeq,
       "same seed and layout, same centroids")
   }
 
   test("the sample holds at most min(maxFitVectors, k × 256) vectors") {
     val (df, _) = planted(12L)
-    val byMax = fit(df, maxFitVectors = 200L)
-    assert(byMax.points > 0 && byMax.points <= 200, s"${byMax.points} points read")
-    val byK = fit(df, k = 2)
-    assert(byK.points > 0 && byK.points <= 2 * 256, s"${byK.points} points read")
-    assert(fit(df).points === Centres * PerCentre)
+    val n = df.count()
+    def points(k: Int, maxFitVectors: Long): Long =
+      Similarity.fitSample(df, n, k, 42L, maxFitVectors).count()
+    val byMax = points(Centres, 200L)
+    assert(byMax > 0 && byMax <= 200, s"$byMax points read")
+    val byK = points(2, 1000000L)
+    assert(byK > 0 && byK <= 2 * 256, s"$byK points read")
+    assert(points(Centres, 1000000L) === n)
+  }
+
+  test("the fit scans with the corpus's parallelism; only the sample shuffles") {
+    val (df, _) = planted(14L)
+    val dir = java.nio.file.Files.createTempDirectory("kmeans_scan").toString + "/t"
+    df.repartition(16).write.parquet(dir)
+    // one file per scan partition: a partition holds at most one small
+    // file plus its open cost
+    val prev = spark.conf.get("spark.sql.files.maxPartitionBytes")
+    spark.conf.set("spark.sql.files.maxPartitionBytes", spark.conf.get("spark.sql.files.openCostInBytes"))
+    try {
+      val corpus = spark.read.parquet(dir)
+      assert(corpus.rdd.getNumPartitions === 16)
+      val stages = fitStages(fit(corpus))
+      // 1024 points × 16 cells is one partition's worth of fit
+      assert(stages === Seq(16, 1), "scan tasks, then fit tasks")
+    } finally spark.conf.set("spark.sql.files.maxPartitionBytes", prev)
   }
 
   test("a vector of another width fails the fit loud") {
